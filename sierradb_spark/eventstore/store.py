@@ -9,7 +9,10 @@ append commit → watermark advance.
 
 Read path: EGET / ESCAN / EPSCAN / ESVER / EPSEQ as DataFrame queries
 with partition pruning and watermark gating (``sierradb-cluster/src/
-read.rs:460-496,663-697``).
+read.rs:460-496,663-697``). A point read (EGET / ESCAN / EPSCAN) hands
+the parquet reader only the target partition's manifest files, so
+building it lists O(partition files), never the whole table
+(test_store_pruning pins this through ``inputFiles()``).
 
 Commit protocol (plain-Parquet stand-in for Delta/Iceberg):
 every append publishes ONE manifest file in ``_commits/`` via atomic
@@ -37,9 +40,10 @@ durability test onto the Delta protocol mechanism that carries it).
 
 Scale notes (100 TB):
 - Events are hive-partitioned by ``partition_id`` and sorted within
-  files by (stream_id, stream_version): stream scans prune to one
-  partition directory and skip row groups via min/max stats, replacing
-  the reference's per-segment stream/partition indexes (SURVEY §2.4).
+  files by (stream_id, stream_version): a stream scan reads only its
+  partition's manifest files and skips row groups via min/max stats,
+  replacing the reference's per-segment stream/partition indexes
+  (SURVEY §2.4).
 - The write path NEVER scans the events table. Current stream versions
   come from the heads log (O(streams touched since last compaction)),
   partition sequences from the manifest's watermark map (O(partitions),
@@ -62,7 +66,7 @@ import shutil
 import time
 import uuid as _uuid
 from dataclasses import dataclass
-from typing import Callable, Iterator, Literal, Optional, Sequence
+from typing import Callable, Iterable, Iterator, Literal, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -143,6 +147,13 @@ class _State:
     # Ingest batch tokens already committed (streaming idempotence):
     # a replayed foreachBatch whose token is here is skipped whole.
     batch_tokens: frozenset[str] = frozenset()
+
+
+def _partition_of(rel: str) -> int:
+    """Partition id of a manifest-relative events file path
+    (``partition_id=N/<file>``): every selection of manifest files by
+    partition goes through here."""
+    return int(rel.split(os.sep, 1)[0].partition("=")[2])
 
 
 def _cap_batch_tokens(tokens, cap: int = 1024) -> list[str]:
@@ -532,9 +543,9 @@ class EventStore:
         """
         state = self._read_state()
         ev_bytes = 0
-        parts: set[str] = set()
+        parts: set[int] = set()
         for rel in state.events_files:
-            parts.add(rel.split(os.sep)[0])
+            parts.add(_partition_of(rel))
             try:
                 ev_bytes += os.path.getsize(os.path.join(self.events_path, rel))
             except OSError:
@@ -563,13 +574,27 @@ class EventStore:
         """
         return self._events_for_state(self._read_state(as_of))
 
-    def _events_for_state(self, state: _State) -> DataFrame:
+    def _events_for_state(
+        self, state: _State, partitions: Optional[Iterable[int]] = None
+    ) -> DataFrame:
         """Events DataFrame for an already-resolved state (single
         manifest-chain resolution per read API call — scan/get/pscan
-        reuse the state they checked watermarks against)."""
-        if not state.events_files:
+        reuse the state they checked watermarks against).
+
+        ``partitions``: hand the reader only the manifest files of these
+        partition ids. Spark's file index lists every path it is given —
+        as a Spark job with one task per file past
+        ``parallelPartitionDiscovery.threshold`` (32) — so a point read
+        given the whole table's file list costs O(table files) before
+        partition pruning ever runs.
+        """
+        files = state.events_files
+        if partitions is not None:
+            keep = {int(p) for p in partitions}
+            files = tuple(f for f in files if _partition_of(f) in keep)
+        if not files:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
-        paths = [os.path.join(self.events_path, p) for p in state.events_files]
+        paths = [os.path.join(self.events_path, p) for p in files]
         return (
             self.spark.read.schema(EVENT_SCHEMA)
             .option("basePath", self.events_path)
@@ -855,8 +880,13 @@ class EventStore:
             rows.extend(tuple(tr) for tr in txn_rows)
         if not rows:
             return []
+        # _apply_batch's precondition probe (a Spark job), answered from
+        # the requests already on the driver.
+        fast = not self.config.strict_versioning and all(
+            r.expected_version in (None, "any") for txn in transactions for r in txn
+        )
         batch = self.spark.createDataFrame(rows, APPEND_REQUEST_SCHEMA)
-        result_df = self._apply_batch(batch, fast=False)
+        result_df = self._apply_batch(batch, fast=fast)
         results = result_df.orderBy("arrival").collect()
         return [
             AppendResult(
@@ -1375,10 +1405,12 @@ class EventStore:
         """EGET: committed events of the transaction containing event_id.
 
         Partition pruned from the hash embedded in the UUID
-        (id.rs:50-53; read path database.rs:127-207): only one
-        partition directory is scanned, and parquet column stats skip
-        row groups within it. Events are manifest-committed, hence
-        already watermark-visible (§commit protocol above).
+        (id.rs:50-53; read path database.rs:127-207): the reader is
+        handed only that partition's manifest files (pinned through
+        ``inputFiles()`` by test_store_pruning), and parquet column
+        stats skip row groups within them. Events are
+        manifest-committed, hence already watermark-visible (§commit
+        protocol above).
 
         ``as_of``: resolve against the snapshot at that commit — same
         time-travel contract as :meth:`events` (valid back to the last
@@ -1407,7 +1439,9 @@ class EventStore:
         state = self._read_state(as_of)
         if state.watermarks.get(int(pid)) is None:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
-        part = self._events_for_state(state).where(F.col("partition_id") == pid)
+        part = self._events_for_state(state, [pid]).where(
+            F.col("partition_id") == pid
+        )
         target = part.where(F.col("event_id") == event_id).select("transaction_id")
         # EGET returns the whole transaction's events (database.rs:127-207).
         out = (
@@ -1453,7 +1487,7 @@ class EventStore:
         if state.watermarks.get(int(pid)) is None:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
         df = (
-            self._events_for_state(state)
+            self._events_for_state(state, [pid])
             .where(F.col("partition_id") == pid)
             .where(F.col("stream_id") == stream_id)
             .where(self._range_filter("stream_version", start, end))
@@ -1484,7 +1518,7 @@ class EventStore:
         if state.watermarks.get(int(partition_id)) is None:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
         df = (
-            self._events_for_state(state)
+            self._events_for_state(state, [partition_id])
             .where(F.col("partition_id") == partition_id)
             .where(self._range_filter("partition_sequence", start, end))
         )
@@ -1847,11 +1881,10 @@ class EventStore:
                 "commit": state.commit,
             }
         affected = sorted(int(p) for p in probe["pids"])
-        aff_set = {f"partition_id={p}" for p in affected}
 
         token = secrets.token_hex(8)
         staging = os.path.join(self.staging_path, token)
-        part_scope = ev.where(F.col("partition_id").isin(affected))
+        part_scope = self._events_for_state(state, affected)
         if mode == "hard":
             new_df = part_scope.where(~hit)
         else:
@@ -1883,9 +1916,7 @@ class EventStore:
                 added.append(rel)
                 i += 1
         shutil.rmtree(staging, ignore_errors=True)
-        carried = [
-            f for f in state.events_files if f.split(os.sep, 1)[0] not in aff_set
-        ]
+        carried = [f for f in state.events_files if _partition_of(f) not in affected]
         events_add = carried + added
 
         heads = self._heads_for_state(state)
