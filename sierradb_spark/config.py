@@ -40,18 +40,6 @@ class EngineConfig:
     # append reads the whole heads log, so without folding per-batch cost
     # grows O(commits since compaction) and sustained ingest degrades.
     heads_fold_threshold: int = 64
-    # r12: when the heads log is at most this many bytes, the append
-    # path folds it DRIVER-side (pyarrow read + exact integer max per
-    # stream) into an inline LocalRelation instead of scanning it with
-    # a Spark job — AQE materializes the heads broadcast stage as its
-    # own job per append, a fixed ~0.2-0.3 s tax on every micro-batch.
-    # Deliberately TINY: the inline relation goes through the SQL
-    # parser, whose cost grows ~linearly with stream count and
-    # overtakes the job it replaces past ~1-2k streams (store.py's
-    # row cap is the second gate). Bigger logs — any store with real
-    # stream cardinality — take the unchanged scan +
-    # broadcast/sort-merge path. 0 disables the driver-side fold.
-    heads_local_fold_bytes: int = 1 << 20
     # Shuffle partitions for local testing; at 100 TB cluster scale this
     # should be ~2-3x total executor cores (AQE coalesces the tail).
     shuffle_partitions: int = 32

@@ -46,9 +46,13 @@ Scale notes (100 TB):
   (SURVEY §2.4).
 - The write path NEVER scans the events table. Current stream versions
   come from the heads log (O(streams touched since last compaction)),
-  partition sequences from the manifest's watermark map (O(partitions),
-  driver-side). Append cost is O(batch) regardless of table size —
-  the reference's headline design goal (README.md:96-99).
+  folded latest-wins on the driver by ONE pyarrow group_by
+  (``_fold_heads``) that the append join (as an Arrow LocalRelation —
+  no Spark job), the heads-log rollover, compact and delete_streams
+  share; partition sequences come from the manifest's watermark map
+  (O(partitions), driver-side). Append cost is O(batch) in the events
+  table regardless of its size — the reference's headline design goal
+  (README.md:96-99).
 - The hot bulk-ingest path (no expected-version preconditions) is pure
   JVM: sequence/version assignment via two window functions over one
   hash(partition_id) exchange. The Arrow/pandas path is used only when
@@ -69,6 +73,9 @@ from dataclasses import dataclass
 from typing import Callable, Iterable, Iterator, Literal, Optional, Sequence
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -87,6 +94,15 @@ RangeValue = int | Literal["-", "+"]
 
 _EVENT_COLS = [f.name for f in EVENT_SCHEMA.fields]
 _RESULT_COLS = [f.name for f in APPEND_RESULT_SCHEMA.fields]
+# HEADS_SCHEMA as the heads files store it.
+_HEADS_ARROW = pa.schema(
+    [
+        ("partition_id", pa.int32()),
+        ("stream_id", pa.string()),
+        ("stream_version", pa.int64()),
+        ("partition_sequence", pa.int64()),
+    ]
+)
 
 
 @dataclass
@@ -701,6 +717,34 @@ class EventStore:
         paths = [os.path.join(self.heads_path, p) for p in state.heads_files]
         return self.spark.read.schema(HEADS_SCHEMA).parquet(*paths)
 
+    def _fold_heads(self, state: _State, extra: pa.Table | None = None) -> pa.Table:
+        """The heads log of ``state`` folded latest-wins on the driver:
+        max (stream_version, partition_sequence) per (partition_id,
+        stream_id), plus the rows of ``extra`` (a batch's heads at
+        rollover). The one fold of the write path: the append join,
+        the heads-log rollover, compact and delete_streams all read
+        current stream heads through here (the reference's live index,
+        writer_thread_pool.rs:43-54)."""
+        parts = [
+            pq.read_table(os.path.join(self.heads_path, rel)).cast(_HEADS_ARROW)
+            for rel in state.heads_files
+        ]
+        if extra is not None:
+            parts.append(extra.cast(_HEADS_ARROW))
+        folded = (
+            pa.concat_tables(parts or [_HEADS_ARROW.empty_table()])
+            .group_by(["partition_id", "stream_id"])
+            .aggregate([("stream_version", "max"), ("partition_sequence", "max")])
+        )
+        return folded.select(
+            [
+                "partition_id",
+                "stream_id",
+                "stream_version_max",
+                "partition_sequence_max",
+            ]
+        ).rename_columns(_HEADS_ARROW.names)
+
     def watermarks(self, as_of: Optional[int] = None) -> DataFrame:
         """Per-partition confirmed watermark table (SURVEY §4.3) as a
         DataFrame (from the driver-side dict — no file scan).
@@ -936,8 +980,10 @@ class EventStore:
         One localCheckpoint pins the batch (so the non-deterministic
         generated ids are evaluated exactly once); everything downstream
         — assignment, the events write, the heads aggregation — reuses
-        those cached blocks. Heads recovery reads the heads log, never
-        the events table: O(streams since compaction), not O(table).
+        those cached blocks. Current stream versions come from the heads
+        log, never the events table: :meth:`_fold_heads` folds it on the
+        driver and the batch joins it as an Arrow LocalRelation — no
+        Spark job, O(streams since compaction), not O(table).
 
         ``batch_token``: idempotence key for streaming replays. If the
         token is already in the manifest chain, the batch committed in a
@@ -1013,43 +1059,17 @@ class EventStore:
                     # Committed by the racing writer we just lost to,
                     # replaying the same source.
                     return self.spark.createDataFrame([], APPEND_RESULT_SCHEMA)
-            # Driver-side join-strategy pick: heads-log file sizes are
-            # known, so broadcast outright when small (saves the
-            # batch-side shuffle by (pid, stream) — the batch then
-            # shuffles exactly once, for the window/groupBy). Big heads
-            # logs (huge stream cardinality) fall back to a sort-merge
-            # join, which is the right plan there.
-            heads_bytes = 0
-            for rel in state.heads_files:
-                try:
-                    heads_bytes += os.path.getsize(
-                        os.path.join(self.heads_path, rel)
-                    )
-                except OSError:
-                    heads_bytes = 1 << 40
-                    break
-            heads = None
-            if (
-                state.heads_files
-                and 0 < heads_bytes <= self.config.heads_local_fold_bytes
-            ):
-                # r12: a small heads log folds DRIVER-side into an
-                # inline LocalRelation — the broadcast build then
-                # collects locally instead of running a scan+aggregate
-                # job per append (a fixed ~0.2-0.3 s tax on every
-                # micro-batch under AQE's eager stage materialization).
-                heads = self._heads_local_fold(state)
-            if heads is None:
-                heads = (
-                    # Same resolved state as the watermarks below: heads
-                    # and watermark base always reflect ONE commit (and
-                    # one chain resolution per attempt, not three).
-                    self._heads_for_state(state)
-                    .groupBy("partition_id", "stream_id")
-                    .agg(F.max("stream_version").alias("cur_stream_version"))
-                )
-                if heads_bytes < 64 * 1024 * 1024:
-                    heads = F.broadcast(heads)
+            # Same resolved state as the watermarks below: heads and
+            # watermark base always reflect ONE commit. An Arrow
+            # createDataFrame is a true LocalRelation with an exact size
+            # (empty for an empty heads log, which folds the join away),
+            # so autoBroadcastJoinThreshold picks broadcast or sort-merge
+            # and a broadcast build collects locally — no Spark job.
+            heads = self.spark.createDataFrame(
+                self._fold_heads(state)
+                .select(["partition_id", "stream_id", "stream_version"])
+                .rename_columns(["partition_id", "stream_id", "cur_stream_version"])
+            )
             enr = batch.join(heads, ["partition_id", "stream_id"], "left")
             base_seq = (
                 self._wm_col(state.watermarks)
@@ -1100,70 +1120,6 @@ class EventStore:
                 last_err = e
                 continue
         raise last_err  # retries exhausted
-
-    # Driver-side heads folds above this many streams take the Spark
-    # scan path anyway: the inline-VALUES relation is built through the
-    # SQL parser, whose cost grows ~linearly with row count (measured:
-    # ~0.08-0.1 s per 1k rows warm), so past ~1-2k streams the parse
-    # exceeds the ~0.2-0.3 s broadcast-stage job it replaces — the
-    # sustained-ingest tail regressed visibly at 10k streams before
-    # this cap was lowered from 20k.
-    _HEADS_LOCAL_FOLD_MAX_ROWS = 1024
-
-    def _heads_local_fold(self, state: _State) -> "DataFrame | None":
-        """Fold the heads log driver-side into a true LocalRelation of
-        (partition_id, stream_id, cur_stream_version), or None to take
-        the Spark scan path (oversized, unreadable, or exotic ids).
-
-        Exactness: latest-wins per stream is an integer max — identical
-        to the scan path's groupBy/max. stream ids travel as base64
-        inside the VALUES text, so arbitrary id bytes cannot escape the
-        SQL literal; every expression in the VALUES list is foldable,
-        which is what makes ResolveInlineTables emit a LocalRelation
-        (broadcast builds over it collect locally — no job)."""
-        import base64
-
-        try:
-            import pyarrow.parquet as pq
-
-            rows: dict[tuple[int, str], int] = {}
-            for rel in state.heads_files:
-                t = pq.read_table(
-                    os.path.join(self.heads_path, rel),
-                    columns=["partition_id", "stream_id", "stream_version"],
-                )
-                for pid, sid, ver in zip(
-                    t.column(0).to_pylist(),
-                    t.column(1).to_pylist(),
-                    t.column(2).to_pylist(),
-                ):
-                    k = (pid, sid)
-                    if rows.get(k, -1) < ver:
-                        rows[k] = ver
-            if len(rows) > self._HEADS_LOCAL_FOLD_MAX_ROWS:
-                return None
-            if not rows:
-                return self.spark.createDataFrame(
-                    [],
-                    "partition_id int, stream_id string, "
-                    "cur_stream_version long",
-                ).where(F.lit(False))
-            vals = ",".join(
-                "({},CAST(unbase64('{}') AS STRING),{}L)".format(
-                    int(pid),
-                    base64.b64encode(sid.encode("utf-8")).decode("ascii"),
-                    int(ver),
-                )
-                for (pid, sid), ver in rows.items()
-            )
-            return F.broadcast(
-                self.spark.sql(
-                    f"SELECT * FROM (VALUES {vals}) AS "
-                    "heads(partition_id, stream_id, cur_stream_version)"
-                )
-            )
-        except Exception:
-            return None  # any surprise -> the scan path is always sound
 
     @staticmethod
     def _assign_fast(enr: DataFrame, base_seq) -> DataFrame:
@@ -1319,13 +1275,13 @@ class EventStore:
             return
         # One driver-bound aggregation: per-stream heads (for the heads
         # log) — per-partition watermarks are its per-pid maxima.
-        heads_pdf = (
+        heads = (
             accepted.groupBy("partition_id", "stream_id")
             .agg(
                 F.max("stream_version").alias("stream_version"),
                 F.max("partition_sequence").alias("partition_sequence"),
             )
-            .toPandas()
+            .toArrow()
         )
         # Heads-log rollover (W8 for the heads log): every append reads
         # the whole heads log, so fold it into ONE file once enough
@@ -1334,30 +1290,17 @@ class EventStore:
         # what keeps sustained ingest flat between compactions.
         fold = len(state.heads_files) + 1 > self.config.heads_fold_threshold
         if fold:
-            prior = (
-                self.spark.read.schema(HEADS_SCHEMA)
-                .parquet(
-                    *[os.path.join(self.heads_path, p) for p in state.heads_files]
-                )
-                .groupBy("partition_id", "stream_id")
-                .agg(
-                    F.max("stream_version").alias("stream_version"),
-                    F.max("partition_sequence").alias("partition_sequence"),
-                )
-                .toPandas()
-            )
-            heads_pdf = (
-                pd.concat([prior, heads_pdf], ignore_index=True)
-                .groupby(["partition_id", "stream_id"], as_index=False)
-                .max()
-            )
+            heads = self._fold_heads(state, extra=heads)
         heads_rel = f"heads-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads_pdf, os.path.join(self.heads_path, heads_rel))
+        self._write_heads_file(heads, os.path.join(self.heads_path, heads_rel))
         wm = dict(state.watermarks)
-        for pid, seq in (
-            heads_pdf.groupby("partition_id")["partition_sequence"].max().items()
-        ):
-            wm[int(pid)] = max(int(wm.get(int(pid), -1)), int(seq))
+        per_pid = (
+            heads.group_by("partition_id")
+            .aggregate([("partition_sequence", "max")])
+            .to_pydict()
+        )
+        for pid, seq in zip(per_pid["partition_id"], per_pid["partition_sequence_max"]):
+            wm[pid] = max(wm.get(pid, -1), seq)
         manifest = {
             "commit": state.commit + 1,
             "base": False,
@@ -1371,26 +1314,9 @@ class EventStore:
         self._write_manifest(manifest)
 
     @staticmethod
-    def _write_heads_file(pdf: pd.DataFrame, path: str) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        table = pa.table(
-            {
-                "partition_id": pa.array(
-                    pdf["partition_id"].astype("int32"), type=pa.int32()
-                ),
-                "stream_id": pa.array(pdf["stream_id"].astype(str), type=pa.string()),
-                "stream_version": pa.array(
-                    pdf["stream_version"].astype("int64"), type=pa.int64()
-                ),
-                "partition_sequence": pa.array(
-                    pdf["partition_sequence"].astype("int64"), type=pa.int64()
-                ),
-            }
-        )
+    def _write_heads_file(heads: pa.Table, path: str) -> None:
         tmp = path + f".tmp-{secrets.token_hex(4)}"
-        pq.write_table(table, tmp)
+        pq.write_table(heads.cast(_HEADS_ARROW), tmp)
         fd = os.open(tmp, os.O_RDONLY)
         try:
             os.fsync(fd)
@@ -1715,17 +1641,10 @@ class EventStore:
                 added.append(rel)
                 i += 1
         shutil.rmtree(staging, ignore_errors=True)
-        heads_pdf = (
-            self.heads()
-            .groupBy("partition_id", "stream_id")
-            .agg(
-                F.max("stream_version").alias("stream_version"),
-                F.max("partition_sequence").alias("partition_sequence"),
-            )
-            .toPandas()
-        )
         heads_rel = f"heads-base-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads_pdf, os.path.join(self.heads_path, heads_rel))
+        self._write_heads_file(
+            self._fold_heads(state), os.path.join(self.heads_path, heads_rel)
+        )
         self._write_manifest(
             {
                 "commit": state.commit + 1,
@@ -1919,19 +1838,12 @@ class EventStore:
         carried = [f for f in state.events_files if _partition_of(f) not in affected]
         events_add = carried + added
 
-        heads = self._heads_for_state(state)
+        heads = self._fold_heads(state)
         if mode == "hard":
-            heads = heads.where(~F.col("stream_id").isin(*targets))
-        heads_pdf = (
-            heads.groupBy("partition_id", "stream_id")
-            .agg(
-                F.max("stream_version").alias("stream_version"),
-                F.max("partition_sequence").alias("partition_sequence"),
-            )
-            .toPandas()
-        )
+            gone = pc.is_in(heads["stream_id"], pa.array(targets, pa.string()))
+            heads = heads.filter(pc.invert(gone))
         heads_rel = f"heads-base-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads_pdf, os.path.join(self.heads_path, heads_rel))
+        self._write_heads_file(heads, os.path.join(self.heads_path, heads_rel))
         self._write_manifest(
             {
                 "commit": state.commit + 1,

@@ -217,7 +217,7 @@ def quality_lr_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @pending_guard(_LR_TRAIN_MEMO)
 def _train(spark: SparkSession, sf_dir: str):
-    """Run the GD loop; returns (moments row, weights list, the
+    """Run the GD loop; returns (moments row, weights tuple, the
     standardized feature DataFrame for downstream scoring). Memoized
     per (applicationId, sf_dir): the second consumer in a session
     (classifier then calibration, or either twice) reuses the trained
@@ -294,7 +294,9 @@ def _train(spark: SparkSession, sf_dir: str):
     # blocks are dead — release them now instead of GC-paced (r12).
     release_checkpoint(raw)
 
-    w = [0.0] * (_NF + 1)  # intercept + features, O(1) driver state
+    # intercept + features, O(1) driver state; a tuple, so a caller
+    # holding a memo hit cannot mutate the cached model
+    w = (0.0,) * (_NF + 1)
     for _ in range(_LR_ROUNDS):
         logit = F.lit(w[0])
         for j in range(1, _NF + 1):
@@ -318,7 +320,7 @@ def _train(spark: SparkSession, sf_dir: str):
                 ).alias(f"w{j}")
             )
         row = ft.agg(*aggs).head()  # four rounded weights per round
-        w = [row[f"w{j}"] for j in range(0, _NF + 1)]
+        w = tuple(row[f"w{j}"] for j in range(0, _NF + 1))
 
     _LR_TRAIN_MEMO[key] = _LRTrain(mo, w, ft)
     return mo, w, ft

@@ -20,3 +20,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Name the slow tier when the default ``-m "not slow"`` (pytest.ini)
+    deselected tests, so a green default run is not read as the full
+    suite."""
+    deselected = len(terminalreporter.stats.get("deselected", ()))
+    if deselected and config.option.markexpr == "not slow":
+        terminalreporter.write_line(
+            f"{deselected} slow-tier tests deselected; full suite: "
+            'python -m pytest tests/ -q -m "slow or not slow"'
+        )

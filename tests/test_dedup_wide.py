@@ -3,6 +3,7 @@ every true near-dup the exact baselines find (VERDICT r2 done-criterion)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sierradb_spark.operators import REGISTRY
@@ -164,6 +165,19 @@ def test_lr_train_memo(spark):
     mo3, w3, ft3 = classifier._train(spark, small)
     assert ft3 is not ft1  # stale checkpoint NOT served
     assert w3 == w1 and mo3 == mo1  # deterministic retrain
+
+
+def test_lr_train_memo_hit_is_immutable(spark, sf_dir):
+    """A memo hit hands every caller the cached weights: they must be an
+    immutable sequence, or one caller's mutation would corrupt the model
+    the next consumer scores with."""
+    from sierradb_spark.functions import classifier
+
+    _, w1, _ = classifier._train(spark, sf_dir)
+    _, w2, _ = classifier._train(spark, sf_dir)  # memo hit
+    assert isinstance(w2, tuple) and w2 == w1
+    with pytest.raises(TypeError):
+        w2[0] = 0.0
 
 
 def test_executor_loss_listener_clears_memos(spark):
