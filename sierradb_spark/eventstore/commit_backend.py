@@ -62,6 +62,17 @@ def fsync_dir(path: str) -> None:
         os.close(fd)
 
 
+def fsync_file(path: str) -> None:
+    """fsync a written file's data before it is renamed into place or
+    named by a manifest (Spark's executor writes and pyarrow's writer
+    don't fsync)."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def _stage_and_link(path: str, payload: bytes, suffix: str) -> bool:
     """The one crash-critical publish sequence both backends share:
     write+fsync the full payload to a hidden temp name, then claim the

@@ -53,12 +53,22 @@ Scale notes (100 TB):
   (O(partitions), driver-side). Append cost is O(batch) in the events
   table regardless of its size — the reference's headline design goal
   (README.md:96-99).
-- The hot bulk-ingest path (no expected-version preconditions) is pure
+- Requests that arrive as Python objects (EAPPEND / EMAPPEND,
+  :meth:`append_transactions`) commit on the driver with zero Spark
+  jobs: validation and assignment run ``_validate_and_assign`` per
+  partition group in pandas, and pyarrow writes the events. A
+  DataFrame batch (:meth:`append_df`, streaming ingest) stays on
+  Spark. Its hot bulk path (no expected-version preconditions) is pure
   JVM: sequence/version assignment via two window functions over one
-  hash(partition_id) exchange. The Arrow/pandas path is used only when
-  optimistic-concurrency checks require per-partition serial replay.
-- Fixed overhead per commit is ~4 Spark jobs; tiny state (watermarks,
-  manifests) lives driver-side with zero Spark jobs to read it.
+  hash(partition_id) exchange. ``applyInPandas`` runs the same
+  ``_validate_and_assign`` only when optimistic-concurrency checks
+  require per-partition serial replay.
+- Both paths end in one publish step (``_publish``): staged files are
+  fsynced and renamed into place, then the heads file and the manifest
+  are written driver-side. A DataFrame batch costs ~4–5 Spark jobs per
+  commit (perfbench traced ``append_df``), a driver batch none; tiny
+  state (watermarks, manifests) lives driver-side with zero Spark jobs
+  to read it.
 """
 
 from __future__ import annotations
@@ -82,7 +92,7 @@ from pyspark.sql import functions as F
 from sierradb_spark import ids
 from sierradb_spark import versions as V
 from sierradb_spark.config import DEFAULT_CONFIG, EngineConfig
-from sierradb_spark.eventstore.commit_backend import fsync_dir
+from sierradb_spark.eventstore.commit_backend import fsync_dir, fsync_file
 from sierradb_spark.eventstore.schema import (
     APPEND_REQUEST_SCHEMA,
     APPEND_RESULT_SCHEMA,
@@ -94,6 +104,7 @@ RangeValue = int | Literal["-", "+"]
 
 _EVENT_COLS = [f.name for f in EVENT_SCHEMA.fields]
 _RESULT_COLS = [f.name for f in APPEND_RESULT_SCHEMA.fields]
+_REQUEST_COLS = [f.name for f in APPEND_REQUEST_SCHEMA.fields]
 # HEADS_SCHEMA as the heads files store it.
 _HEADS_ARROW = pa.schema(
     [
@@ -103,6 +114,36 @@ _HEADS_ARROW = pa.schema(
         ("partition_sequence", pa.int64()),
     ]
 )
+# EVENT_SCHEMA as the driver append path builds it. ``timestamp`` is µs
+# (the session reads ns parquet timestamps back as longs, nanosAsLong);
+# ``partition_id`` is dropped at write: the hive directory carries it.
+_EVENT_ARROW = pa.schema(
+    [
+        ("event_id", pa.string()),
+        ("partition_key", pa.string()),
+        ("partition_id", pa.int32()),
+        ("partition_sequence", pa.int64()),
+        ("stream_id", pa.string()),
+        ("stream_version", pa.int64()),
+        ("event_name", pa.string()),
+        ("timestamp", pa.timestamp("us", tz="UTC")),
+        ("timestamp_ns", pa.int64()),
+        ("payload", pa.binary()),
+        ("metadata", pa.binary()),
+        ("transaction_id", pa.string()),
+        ("confirmation_count", pa.int32()),
+    ]
+)
+# _validate_and_assign's output columns that must not be left to pandas
+# inference (None-only columns would concat as object).
+_RESULT_DTYPES = {
+    "arrival": "int64",
+    "accepted": "bool",
+    "partition_id": "Int32",
+    "partition_sequence": "Int64",
+    "stream_version": "Int64",
+    "timestamp_ns": "int64",
+}
 
 
 @dataclass
@@ -165,6 +206,10 @@ class _State:
     batch_tokens: frozenset[str] = frozenset()
 
 
+def _int_or_none(v) -> Optional[int]:
+    return None if pd.isna(v) else int(v)
+
+
 def _partition_of(rel: str) -> int:
     """Partition id of a manifest-relative events file path
     (``partition_id=N/<file>``): every selection of manifest files by
@@ -217,10 +262,30 @@ def _cap_batch_tokens(tokens, cap: int = 1024) -> list[str]:
     return sorted(kept)
 
 
-def _validate_and_assign(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Serialized per-partition validation + assignment (slow path).
+def _latest_heads(rows: pa.Table) -> pa.Table:
+    """Max (stream_version, partition_sequence) per (partition_id,
+    stream_id) of ``rows`` (heads or events), as a heads table."""
+    return (
+        rows.group_by(["partition_id", "stream_id"])
+        .aggregate([("stream_version", "max"), ("partition_sequence", "max")])
+        .select(
+            [
+                "partition_id",
+                "stream_id",
+                "stream_version_max",
+                "partition_sequence_max",
+            ]
+        )
+        .rename_columns(_HEADS_ARROW.names)
+    )
 
-    Runs once per ``partition_id`` group (applyInPandas). Input carries
+
+def _validate_and_assign(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Serialized per-partition validation + assignment.
+
+    Runs once per ``partition_id`` group: on the driver for
+    :meth:`EventStore.append_transactions`, under applyInPandas for a
+    DataFrame batch with preconditions. Input carries
     ``cur_stream_version`` / ``cur_partition_sequence`` columns (heads
     as of the previous commit; NaN = empty) and ``reject_reason`` from
     request validation. Transactions are processed in arrival order; a
@@ -721,29 +786,17 @@ class EventStore:
         """The heads log of ``state`` folded latest-wins on the driver:
         max (stream_version, partition_sequence) per (partition_id,
         stream_id), plus the rows of ``extra`` (a batch's heads at
-        rollover). The one fold of the write path: the append join,
-        the heads-log rollover, compact and delete_streams all read
-        current stream heads through here (the reference's live index,
-        writer_thread_pool.rs:43-54)."""
+        rollover). The one fold of the write path: the driver append,
+        the Spark append join, the heads-log rollover, compact and
+        delete_streams all read current stream heads through here (the
+        reference's live index, writer_thread_pool.rs:43-54)."""
         parts = [
             pq.read_table(os.path.join(self.heads_path, rel)).cast(_HEADS_ARROW)
             for rel in state.heads_files
         ]
         if extra is not None:
             parts.append(extra.cast(_HEADS_ARROW))
-        folded = (
-            pa.concat_tables(parts or [_HEADS_ARROW.empty_table()])
-            .group_by(["partition_id", "stream_id"])
-            .aggregate([("stream_version", "max"), ("partition_sequence", "max")])
-        )
-        return folded.select(
-            [
-                "partition_id",
-                "stream_id",
-                "stream_version_max",
-                "partition_sequence_max",
-            ]
-        ).rename_columns(_HEADS_ARROW.names)
+        return _latest_heads(pa.concat_tables(parts or [_HEADS_ARROW.empty_table()]))
 
     def watermarks(self, as_of: Optional[int] = None) -> DataFrame:
         """Per-partition confirmed watermark table (SURVEY §4.3) as a
@@ -834,14 +887,24 @@ class EventStore:
     def append_transactions(
         self, transactions: Sequence[Sequence[AppendRequest]]
     ) -> list[AppendResult]:
-        """Apply a batch of transactions in arrival order.
+        """Apply a batch of transactions in arrival order, on the driver.
 
-        This is the same code path the streaming ingest uses per
-        micro-batch (streaming/ingest.py); batch semantics == one
-        group-commit of the reference (writer_thread_pool.rs:687-699).
+        Batch semantics == one group-commit of the reference
+        (writer_thread_pool.rs:687-699), and like the reference's
+        writer thread it is one local handoff: the requests are already
+        Python objects, so no Spark job runs. Each partition group is
+        validated and assigned by ``_validate_and_assign`` (the function
+        :meth:`append_df` runs under applyInPandas) against the heads
+        fold and the manifest watermarks; pyarrow writes the accepted
+        events, and :meth:`_publish` commits them as it does a Spark
+        batch. tests/test_append_driver.py pins the results and the
+        stored rows equal to :meth:`append_df`'s.
+
         A transaction that resolves to more than one partition_id is
         rejected whole (single-partition invariant, database.rs:867-897)
-        rather than split across partition groups.
+        rather than split across partition groups. A lost manifest CAS
+        re-reads the state and re-drives the same requests, up to
+        ``config.commit_retries`` times (see :meth:`_apply_batch`).
         """
         rows = []
         arrival = 0
@@ -924,26 +987,49 @@ class EventStore:
             rows.extend(tuple(tr) for tr in txn_rows)
         if not rows:
             return []
-        # _apply_batch's precondition probe (a Spark job), answered from
-        # the requests already on the driver.
-        fast = not self.config.strict_versioning and all(
-            r.expected_version in (None, "any") for txn in transactions for r in txn
-        )
-        batch = self.spark.createDataFrame(rows, APPEND_REQUEST_SCHEMA)
-        result_df = self._apply_batch(batch, fast=fast)
-        results = result_df.orderBy("arrival").collect()
-        return [
-            AppendResult(
-                accepted=x["accepted"],
-                error=x["error"],
-                event_id=x["event_id"],
-                partition_id=x["partition_id"],
-                partition_sequence=x["partition_sequence"],
-                stream_id=x["stream_id"],
-                stream_version=x["stream_version"],
+        batch = pd.DataFrame(rows, columns=_REQUEST_COLS)
+        last_err: ConcurrentWriteError | None = None
+        for _attempt in range(max(1, self.config.commit_retries + 1)):
+            state = self._read_state()
+            heads = self._fold_heads(state)
+            heads = heads.filter(
+                pc.is_in(heads["stream_id"], pa.array(batch["stream_id"].unique()))
             )
-            for x in results
-        ]
+            enr = batch.merge(
+                heads.select(["partition_id", "stream_id", "stream_version"])
+                .rename_columns(["partition_id", "stream_id", "cur_stream_version"])
+                .to_pandas(),
+                on=["partition_id", "stream_id"],
+                how="left",
+            )
+            enr["cur_partition_sequence"] = (
+                enr["partition_id"].map(state.watermarks).astype("Int64")
+            )
+            result = pd.concat(
+                [
+                    _validate_and_assign(group).astype(_RESULT_DTYPES)
+                    for _, group in enr.groupby("partition_id", sort=False)
+                ],
+                ignore_index=True,
+            ).sort_values("arrival", ignore_index=True)
+            try:
+                self._commit_rows(result[result["accepted"]], state)
+            except ConcurrentWriteError as e:
+                last_err = e  # lost the CAS: re-assign from the new head
+                continue
+            return [
+                AppendResult(
+                    accepted=bool(x.accepted),
+                    error=x.error,
+                    event_id=x.event_id,
+                    partition_id=int(x.partition_id),
+                    partition_sequence=_int_or_none(x.partition_sequence),
+                    stream_id=x.stream_id,
+                    stream_version=_int_or_none(x.stream_version),
+                )
+                for x in result.itertuples(index=False)
+            ]
+        raise last_err  # retries exhausted
 
     def append_df(self, requests: DataFrame) -> DataFrame:
         """Batch append from a DataFrame of request rows (the connector
@@ -965,8 +1051,7 @@ class EventStore:
             and not self.config.strict_versioning
         )
         enriched = enrich_requests(requests, self.config)
-        cols = [f.name for f in APPEND_REQUEST_SCHEMA.fields]
-        return self._apply_batch(enriched.select(*cols), fast=fast)
+        return self._apply_batch(enriched.select(*_REQUEST_COLS), fast=fast)
 
     def _apply_batch(
         self,
@@ -1172,18 +1257,10 @@ class EventStore:
     def _commit(
         self, accepted: DataFrame, state: _State, batch_token: str | None = None
     ) -> None:
-        """Write events + heads + watermark advance as one atomic commit.
-
-        1. Events land in a staging dir (one Spark job), then move into
-           ``events/partition_id=N/`` via same-filesystem renames.
-        2. Per-stream heads + per-partition maxima come back to the
-           driver in ONE small aggregation (O(streams in batch) rows);
-           the heads file and the manifest are written driver-side.
-        3. The manifest rename is the commit point. A crash anywhere
-           before it leaves only unreferenced files — invisible to every
-           reader, subscription, and the next append (which reads state
-           from manifests only). Orphans are swept by :meth:`compact`.
-        """
+        """Stage a Spark batch's accepted events (one Spark job), then
+        publish them (:meth:`_publish`); the batch heads are ONE small
+        driver-bound aggregation (O(streams in batch) rows), run only
+        when some event was accepted."""
         token = secrets.token_hex(8)
         staging = os.path.join(self.staging_path, token)
         events = accepted.select(
@@ -1194,9 +1271,9 @@ class EventStore:
             "stream_id",
             "stream_version",
             "event_name",
-            F.timestamp_micros((F.col("timestamp_ns") / 1000).cast("long")).alias(
-                "timestamp"
-            ),
+            # Integer division: a double ns/1000 rounds up to the next µs
+            # for about one ns value in eight near today's clock.
+            F.timestamp_micros(F.expr("timestamp_ns div 1000")).alias("timestamp"),
             "timestamp_ns",
             "payload",
             "metadata",
@@ -1214,40 +1291,70 @@ class EventStore:
             .partitionBy("partition_id")
             .parquet(staging)
         )
-        # Move staged files into the live layout. Readers don't follow
-        # directory listings (manifest-driven), so placement order is
-        # irrelevant for correctness; renames are same-fs and O(#files).
-        # Each file is fsynced before the manifest publishes (Spark's
-        # executor writes don't fsync), and each touched directory after
-        # its renames: a manifest that survives power loss must never
-        # reference data blocks that didn't.
-        added: list[str] = []
-        touched_dirs: set[str] = set()
-        i = 0
-        for root, _dirs, files in os.walk(staging):
-            part = os.path.basename(root)
-            if not part.startswith("partition_id="):
-                continue
-            dst_dir = os.path.join(self.events_path, part)
-            os.makedirs(dst_dir, exist_ok=True)
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel = os.path.join(part, f"{token}-{i:04d}.parquet")
-                dst = os.path.join(self.events_path, rel)
-                src_f = os.path.join(root, fn)
-                fd = os.open(src_f, os.O_RDONLY)
-                try:
-                    os.fsync(fd)
-                finally:
-                    os.close(fd)
-                os.rename(src_f, dst)
-                touched_dirs.add(dst_dir)
-                added.append(rel)
-                i += 1
-        for d in touched_dirs:
-            fsync_dir(d)
-        shutil.rmtree(staging, ignore_errors=True)
+        self._publish(
+            state,
+            token,
+            lambda: accepted.groupBy("partition_id", "stream_id")
+            .agg(
+                F.max("stream_version").alias("stream_version"),
+                F.max("partition_sequence").alias("partition_sequence"),
+            )
+            .toArrow(),
+            batch_token,
+        )
+
+    def _commit_rows(self, accepted: pd.DataFrame, state: _State) -> None:
+        """Stage a driver batch's accepted events with pyarrow, one
+        file per partition sorted like the Spark writer's, then publish
+        them (:meth:`_publish`)."""
+        if accepted.empty:
+            return  # nothing accepted; no commit needed
+        token = secrets.token_hex(8)
+        events = pa.Table.from_pandas(
+            accepted.assign(
+                timestamp=accepted["timestamp_ns"] // 1000,
+                transaction_id=accepted["txn_id"],
+                confirmation_count=self.config.write_quorum,
+            ),
+            schema=_EVENT_ARROW,
+            preserve_index=False,
+        )
+        for pid in pc.unique(events["partition_id"]).to_pylist():
+            part_dir = os.path.join(self.staging_path, token, f"partition_id={pid}")
+            os.makedirs(part_dir)
+            pq.write_table(
+                events.filter(pc.equal(events["partition_id"], pid))
+                .sort_by([("stream_id", "ascending"), ("stream_version", "ascending")])
+                .drop_columns(["partition_id"]),
+                os.path.join(part_dir, "part-0.parquet"),
+                # Without the Arrow schema blob and dictionary pages a
+                # one-event file is no larger than the Spark writer's.
+                store_schema=False,
+                use_dictionary=False,
+            )
+        self._publish(state, token, lambda: _latest_heads(events))
+
+    def _publish(
+        self,
+        state: _State,
+        token: str,
+        batch_heads: Callable[[], pa.Table],
+        batch_token: str | None = None,
+    ) -> None:
+        """Commit the events staged under ``_staging/<token>/`` on top
+        of ``state``: events + heads + watermark advance, atomically.
+
+        1. Staged files move into ``events/partition_id=N/``
+           (:meth:`_place_staged`, fsynced).
+        2. ``batch_heads()`` gives the batch's per-stream heads; the
+           heads file and the manifest are written driver-side, and the
+           per-partition watermarks advance to the heads' maxima.
+        3. The manifest publish is the commit point. A crash anywhere
+           before it leaves only unreferenced files — invisible to every
+           reader, subscription, and the next append (which reads state
+           from manifests only). Orphans are swept by :meth:`compact`.
+        """
+        added = self._place_staged(os.path.join(self.staging_path, token), token)
         if not added:
             if batch_token is None:
                 return  # nothing accepted; no commit needed
@@ -1273,16 +1380,7 @@ class EventStore:
                 }
             )
             return
-        # One driver-bound aggregation: per-stream heads (for the heads
-        # log) — per-partition watermarks are its per-pid maxima.
-        heads = (
-            accepted.groupBy("partition_id", "stream_id")
-            .agg(
-                F.max("stream_version").alias("stream_version"),
-                F.max("partition_sequence").alias("partition_sequence"),
-            )
-            .toArrow()
-        )
+        heads = batch_heads()
         # Heads-log rollover (W8 for the heads log): every append reads
         # the whole heads log, so fold it into ONE file once enough
         # commits accumulate — per-batch cost stays O(batch + streams/
@@ -1313,15 +1411,45 @@ class EventStore:
             manifest["batch_token"] = batch_token
         self._write_manifest(manifest)
 
+    def _place_staged(self, staging: str, prefix: str) -> list[str]:
+        """Move the parquet files of a staged ``partition_id=N/`` tree
+        into the live layout as ``partition_id=N/<prefix>-NNNN.parquet``
+        and return those manifest-relative paths; the one placement
+        step of every writer (append, compact, delete_streams).
+
+        Readers don't follow directory listings (manifest-driven), so
+        placement order is irrelevant for correctness; renames are
+        same-fs and O(#files). Each file is fsynced before its rename
+        and each touched directory after: a manifest that survives
+        power loss must never reference data blocks that didn't.
+        """
+        added: list[str] = []
+        touched_dirs: set[str] = set()
+        for root, _dirs, files in os.walk(staging):
+            part = os.path.basename(root)
+            if not part.startswith("partition_id="):
+                continue
+            dst_dir = os.path.join(self.events_path, part)
+            os.makedirs(dst_dir, exist_ok=True)
+            for fn in sorted(files):
+                if not fn.endswith(".parquet"):
+                    continue
+                rel = os.path.join(part, f"{prefix}-{len(added):04d}.parquet")
+                src = os.path.join(root, fn)
+                fsync_file(src)
+                os.rename(src, os.path.join(self.events_path, rel))
+                touched_dirs.add(dst_dir)
+                added.append(rel)
+        for d in touched_dirs:
+            fsync_dir(d)
+        shutil.rmtree(staging, ignore_errors=True)
+        return added
+
     @staticmethod
     def _write_heads_file(heads: pa.Table, path: str) -> None:
         tmp = path + f".tmp-{secrets.token_hex(4)}"
         pq.write_table(heads.cast(_HEADS_ARROW), tmp)
-        fd = os.open(tmp, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
+        fsync_file(tmp)
         os.rename(tmp, path)
         fsync_dir(os.path.dirname(path))
 
@@ -1626,30 +1754,28 @@ class EventStore:
             .partitionBy("partition_id")
             .parquet(staging)
         )
-        added: list[str] = []
-        i = 0
-        for root, _dirs, files in os.walk(staging):
-            part = os.path.basename(root)
-            if not part.startswith("partition_id="):
-                continue
-            os.makedirs(os.path.join(self.events_path, part), exist_ok=True)
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel = os.path.join(part, f"compact-{token}-{i:04d}.parquet")
-                os.rename(os.path.join(root, fn), os.path.join(self.events_path, rel))
-                added.append(rel)
-                i += 1
-        shutil.rmtree(staging, ignore_errors=True)
+        added = self._place_staged(staging, f"compact-{token}")
+        self._publish_base(state, token, added, self._fold_heads(state), retain_seconds)
+
+    def _publish_base(
+        self,
+        state: _State,
+        token: str,
+        events_add: list[str],
+        heads: pa.Table,
+        retain_seconds: float,
+    ) -> None:
+        """Publish a ``base`` manifest naming exactly ``events_add`` and
+        ``heads`` (written as one heads file), then sweep what it
+        supersedes — the commit of :meth:`compact` and
+        :meth:`delete_streams`."""
         heads_rel = f"heads-base-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(
-            self._fold_heads(state), os.path.join(self.heads_path, heads_rel)
-        )
+        self._write_heads_file(heads, os.path.join(self.heads_path, heads_rel))
         self._write_manifest(
             {
                 "commit": state.commit + 1,
                 "base": True,
-                "events_add": added,
+                "events_add": events_add,
                 "heads_add": [heads_rel],
                 "watermarks": {str(p): int(s) for p, s in state.watermarks.items()},
                 # Carry the chain's ingest-idempotence tokens forward
@@ -1660,7 +1786,7 @@ class EventStore:
             }
         )
         self._sweep_superseded(
-            state.commit + 1, retain_seconds, set(added), {heads_rel}
+            state.commit + 1, retain_seconds, set(events_add), {heads_rel}
         )
 
     def _sweep_superseded(
@@ -1820,43 +1946,14 @@ class EventStore:
             .partitionBy("partition_id")
             .parquet(staging)
         )
-        added: list[str] = []
-        i = 0
-        for root, _dirs, files in os.walk(staging):
-            part = os.path.basename(root)
-            if not part.startswith("partition_id="):
-                continue
-            os.makedirs(os.path.join(self.events_path, part), exist_ok=True)
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel = os.path.join(part, f"delete-{token}-{i:04d}.parquet")
-                os.rename(os.path.join(root, fn), os.path.join(self.events_path, rel))
-                added.append(rel)
-                i += 1
-        shutil.rmtree(staging, ignore_errors=True)
+        added = self._place_staged(staging, f"delete-{token}")
         carried = [f for f in state.events_files if _partition_of(f) not in affected]
-        events_add = carried + added
 
         heads = self._fold_heads(state)
         if mode == "hard":
             gone = pc.is_in(heads["stream_id"], pa.array(targets, pa.string()))
             heads = heads.filter(pc.invert(gone))
-        heads_rel = f"heads-base-{state.commit + 1:012d}-{token}.parquet"
-        self._write_heads_file(heads, os.path.join(self.heads_path, heads_rel))
-        self._write_manifest(
-            {
-                "commit": state.commit + 1,
-                "base": True,
-                "events_add": events_add,
-                "heads_add": [heads_rel],
-                "watermarks": {str(p): int(s) for p, s in state.watermarks.items()},
-                "batch_tokens_seen": _cap_batch_tokens(state.batch_tokens),
-            }
-        )
-        self._sweep_superseded(
-            state.commit + 1, retain_seconds, set(events_add), {heads_rel}
-        )
+        self._publish_base(state, token, carried + added, heads, retain_seconds)
         return {
             "streams": len(targets),
             "events_affected": n_affected,

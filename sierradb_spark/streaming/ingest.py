@@ -81,9 +81,7 @@ def _enrichment_columns(cols_key: tuple, config: EngineConfig) -> dict:
     phash = ids.uuid_hash_col("partition_key")
     c["partition_id"] = F.pmod(phash, F.lit(config.num_partitions)).cast("int")
     user_event_id = "event_id" in cols
-    gen_eid = ids.event_id_col(
-        phash, (F.col("timestamp_ns") / 1_000_000).cast("long")
-    )
+    gen_eid = ids.event_id_col(phash, F.expr("timestamp_ns div 1000000"))
     if user_event_id:
         # Canonicalize caller ids to the lowercase-hyphenated form the
         # store's lookups compare against (uuid_hash_col parses
@@ -217,6 +215,12 @@ def enrich_requests(
     if not user_txn_id:
         df = df.withColumn("txn_id", c["txn_id"])
     df = df.withColumn("reject_reason", c["reject_reason"])
+    # Batch-local arrival order: monotonic id is unique and ordered per
+    # partition of the source; good enough as the serialization tiebreak
+    # (the reference serializes by channel arrival, an equally arbitrary
+    # but consistent order). Taken before the txn window below, whose
+    # exchange would otherwise reorder it.
+    df = df.withColumn("arrival", F.monotonically_increasing_id())
     if user_txn_id:
         # Caller-grouped transactions: a txn must resolve to ONE
         # partition (database.rs:867-897) and is rejected whole if any
@@ -233,11 +237,7 @@ def enrich_requests(
                 ),
             ),
         )
-    # Batch-local arrival order: monotonic id is unique and ordered per
-    # partition of the source; good enough as the serialization tiebreak
-    # (the reference serializes by channel arrival, an equally arbitrary
-    # but consistent order).
-    return df.withColumn("arrival", F.monotonically_increasing_id())
+    return df
 
 
 def _committed_token_bounds(store: EventStore) -> tuple[frozenset, dict]:

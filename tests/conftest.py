@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -20,6 +21,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_started(spark):
+    """``jobs_started(fn)`` calls ``fn`` under a fresh job group and
+    returns its result and the number of Spark jobs it started."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        keys = ("spark.jobGroup.id", "spark.job.description")
+        old = [sc.getLocalProperty(k) for k in keys]
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            for k, v in zip(keys, old):
+                sc.setLocalProperty(k, v)
+        # The status store is fed by the asynchronous listener bus: drain it.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def pytest_terminal_summary(terminalreporter, exitstatus, config):

@@ -78,6 +78,32 @@ def test_emappend_atomic_and_reverse_scan(store):
     assert [r["event_name"] for r in rev] == ["OrderPaid", "OrderCreated"]
 
 
+def test_eappend_emappend_start_no_spark_job(store, jobs_started):
+    """EAPPEND (plain, fresh and stale EXPECTED_VERSION) and EMAPPEND
+    commit on the driver: validation, assignment, the events write and
+    the manifest publish start no Spark job."""
+    pk = ex(store, "EAPPEND", "j-1", "Seed")["partition_key"]
+
+    def stale():
+        with pytest.raises(CommandError, match="version conflict"):
+            ex(store, "EAPPEND", "j-1", "Stale", "EXPECTED_VERSION", 0)
+
+    calls = {
+        "plain": lambda: ex(store, "EAPPEND", "j-1", "Plain"),
+        "fresh": lambda: ex(store, "EAPPEND", "j-1", "Fresh", "EXPECTED_VERSION", 1),
+        "stale": stale,
+        "emappend": lambda: ex(
+            store, "EMAPPEND", pk, "j-1", "M1", "EXPECTED_VERSION", 2, "j-2", "M2"
+        ),
+    }
+    for name, call in calls.items():
+        _out, jobs = jobs_started(call)
+        assert jobs == 0, f"{name} started {jobs} Spark job(s)"
+    rows = ex(store, "ESCAN", "j-1", "-", "+")
+    assert [r["event_name"] for r in rows] == ["Seed", "Plain", "Fresh", "M1"]
+    assert ex(store, "ESVER", "j-2", "PARTITION_KEY", pk) == 0
+
+
 def test_esub_epsub_build_matchers(store):
     ex(store, "EAPPEND", "s-a", "E1")
     ex(store, "EAPPEND", "s-a", "E2")

@@ -9,6 +9,7 @@ transactional atomicity, watermark-gated reads.
 
 from __future__ import annotations
 
+import time
 import uuid
 
 import pytest
@@ -347,3 +348,28 @@ def test_append_stores_canonical_event_id_both_paths(store, spark):
     # D1's mutated id embeds the wrong hash -> rejected, not stored
     assert not ok["D1"]["accepted"]
     assert [r["event_id"] for r in store.get(eid2).collect()] == [eid2]
+
+
+def test_timestamp_is_exact_micros_of_timestamp_ns_both_paths(
+    store, spark, monkeypatch
+):
+    """``timestamp`` is ``timestamp_ns div 1000`` and the v7 event id's
+    millisecond is ``timestamp_ns div 1e6``, exactly, on both append
+    paths: a double division rounds this clock value up a microsecond."""
+    ns = 1_792_389_802_932_255_919
+    monkeypatch.setattr(time, "time_ns", lambda: ns)
+    store.append([AppendRequest("ts-row", "E")])
+    store.append_df(
+        spark.createDataFrame([("ts-df", "E")], "stream_id string, event_name string")
+    ).collect()
+    monkeypatch.undo()
+    rows = store.events().selectExpr(
+        "stream_id",
+        "timestamp_ns",
+        "event_id",
+        "timestamp = timestamp_micros(timestamp_ns div 1000) AS exact",
+    ).collect()
+    assert sorted(r["stream_id"] for r in rows) == ["ts-df", "ts-row"]
+    for r in rows:
+        assert r["timestamp_ns"] == ns and r["exact"], r
+        assert int(r["event_id"].replace("-", "")[:12], 16) == ns // 1_000_000, r

@@ -1,11 +1,12 @@
 """The write path's one heads fold (``EventStore._fold_heads``).
 
-Every reader of current stream heads on the write path — the append
-join, the heads-log rollover, compact and delete_streams — goes through
-one latest-wins fold of the heads log. These tests pin it against the
-events table it summarizes (the two must agree after every kind of
-commit), and pin the append's heads relation to a driver-local plan
-with no Spark job, at a stream count past any inline-literal cap.
+Every reader of current stream heads on the write path — the driver
+append, the ``append_df`` join, the heads-log rollover, compact and
+delete_streams — goes through one latest-wins fold of the heads log.
+These tests pin it against the events table it summarizes (the two must
+agree after every kind of commit), and pin ``append_df``'s heads
+relation to a driver-local plan with no Spark job, at a stream count
+past any inline-literal cap.
 """
 
 from __future__ import annotations
@@ -94,9 +95,9 @@ def test_heads_fold_matches_events_oracle(spark, tmp_path):
 
 
 def test_append_heads_relation_is_local_with_no_job(spark, tmp_path, monkeypatch):
-    """Past 1024 streams, the relation a plain append joins its batch
-    against is a LocalRelation (no parquet scan of heads/), and nothing
-    up to that join starts a Spark job."""
+    """Past 1024 streams, the relation a one-row ``append_df`` joins its
+    batch against is a LocalRelation (no parquet scan of heads/), and
+    nothing up to that join starts a Spark job."""
     store = EventStore(spark, str(tmp_path / "big"), EngineConfig(shuffle_partitions=8))
     ids = F.concat(F.lit("b-"), F.col("id").cast("string"))
     store.append_df(
@@ -104,6 +105,7 @@ def test_append_heads_relation_is_local_with_no_job(spark, tmp_path, monkeypatch
     )
     assert store.heads().count() == 1100  # past the old 1024-stream cap
 
+    one = spark.createDataFrame([("b-7", "E")], "stream_id string, event_name string")
     sc = spark.sparkContext
     group = f"heads-{uuid.uuid4().hex}"
     seen = []
@@ -120,11 +122,12 @@ def test_append_heads_relation_is_local_with_no_job(spark, tmp_path, monkeypatch
     old = [sc.getLocalProperty(k) for k in keys]
     sc.setJobGroup(group, "append")
     try:
-        res = store.append([AppendRequest("b-7", "E")])
+        res = store.append_df(one)
     finally:
         for k, v in zip(keys, old):
             sc.setLocalProperty(k, v)
-    assert res[0].accepted and res[0].stream_version == 1, res
+    res = res.collect()
+    assert res[0]["accepted"] and res[0]["stream_version"] == 1, res
 
     assert len(seen) == 1, seen
     heads, jobs = seen[0]

@@ -14,7 +14,6 @@ point reads must also hand it only the target partition's files.
 from __future__ import annotations
 
 import re
-import uuid
 
 import pytest
 
@@ -92,25 +91,7 @@ def wide_store(spark, tmp_path):
     return s
 
 
-def _jobs_started(spark, build) -> tuple[object, int]:
-    """Call ``build`` under a fresh job group; return its result and the
-    number of Spark jobs it started."""
-    sc = spark.sparkContext
-    group = f"build-{uuid.uuid4().hex}"
-    keys = ("spark.jobGroup.id", "spark.job.description")
-    old = [sc.getLocalProperty(k) for k in keys]
-    sc.setJobGroup(group, "point-read build")
-    try:
-        out = build()
-    finally:
-        for k, v in zip(keys, old):
-            sc.setLocalProperty(k, v)
-    # The status store is fed by the asynchronous listener bus: drain it.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_point_reads_open_only_the_target_partition(spark, wide_store):
+def test_point_reads_open_only_the_target_partition(wide_store, jobs_started):
     sid = "w-0"
     pid = _pid(sid)
     eid = wide_store.scan(sid).collect()[0]["event_id"]
@@ -120,7 +101,7 @@ def test_point_reads_open_only_the_target_partition(spark, wide_store):
         "get": lambda: wide_store.get(eid),
     }
     for name, build in builds.items():
-        df, jobs = _jobs_started(spark, build)
+        df, jobs = jobs_started(build)
         assert jobs == 0, f"building {name} started {jobs} Spark job(s)"
         files = df.inputFiles()
         assert files, name
