@@ -145,26 +145,26 @@ def _pk_of(stream_id: str) -> str:
     return str(ids.partition_key_for_stream(stream_id))
 
 
-def _event_rows(df) -> list[dict]:
-    """Rows → the server's encode_event map shape (request.rs:798-812)."""
-    out = []
-    for r in df.collect():
-        out.append(
-            {
-                "event_id": r["event_id"],
-                "partition_key": r["partition_key"],
-                "partition_id": r["partition_id"],
-                "transaction_id": r["transaction_id"],
-                "partition_sequence": r["partition_sequence"],
-                "stream_version": r["stream_version"],
-                "timestamp": r["timestamp_ns"] // 1_000_000,
-                "stream_id": r["stream_id"],
-                "event_name": r["event_name"],
-                "metadata": bytes(r["metadata"]) if r["metadata"] is not None else b"",
-                "payload": bytes(r["payload"]) if r["payload"] is not None else b"",
-            }
-        )
-    return out
+def _event_rows(rows) -> list[dict]:
+    """An Arrow table of events → the server's encode_event map shape
+    (request.rs:798-812)."""
+    c = rows.to_pydict()
+    return [
+        {
+            "event_id": c["event_id"][i],
+            "partition_key": c["partition_key"][i],
+            "partition_id": c["partition_id"][i],
+            "transaction_id": c["transaction_id"][i],
+            "partition_sequence": c["partition_sequence"][i],
+            "stream_version": c["stream_version"][i],
+            "timestamp": c["timestamp_ns"][i] // 1_000_000,
+            "stream_id": c["stream_id"][i],
+            "event_name": c["event_name"][i],
+            "metadata": c["metadata"][i] or b"",
+            "payload": c["payload"][i] or b"",
+        }
+        for i in range(rows.num_rows)
+    ]
 
 
 def execute_command(store: EventStore, cmd: Any, *args: Any) -> Any:
@@ -227,7 +227,7 @@ def execute_command(store: EventStore, cmd: Any, *args: Any) -> Any:
             # layer before any lookup; mirror that as a CommandError
             # rather than leaking the uuid module's ValueError.
             raise CommandError(f"EGET: {eid!r} is not a UUID")
-        return _event_rows(store.get(eid, as_of=_as_of(opts)))
+        return _event_rows(store.get_rows(eid, as_of=_as_of(opts)))
     if name in ("ESCAN", "EPSCAN"):
         if len(a) < 3:
             raise CommandError(f"{name} requires <target> <start> <end>")
@@ -244,18 +244,20 @@ def execute_command(store: EventStore, cmd: Any, *args: Any) -> Any:
         if rest:
             raise CommandError(f"unexpected arguments: {rest}")
         count = _int(opts["COUNT"], "COUNT") if "COUNT" in opts else None
+        if count is not None and count < 0:
+            raise CommandError(f"COUNT must be >= 0, got {count}")
         if name == "ESCAN":
-            df = store.scan(
+            rows = store.scan_rows(
                 _s(target), start, end, count=count, direction=direction,
                 partition_key=_s(opts["PARTITION_KEY"]) if "PARTITION_KEY" in opts else None,
                 as_of=_as_of(opts),
             )
         else:
-            df = store.pscan(
+            rows = store.pscan_rows(
                 _int(target, "partition"), start, end, count=count, direction=direction,
                 as_of=_as_of(opts),
             )
-        return _event_rows(df)
+        return _event_rows(rows)
     if name == "ESVER":
         if not a:
             raise CommandError("ESVER <stream_id> [PARTITION_KEY <pk>] [AS_OF <commit>]")
@@ -286,9 +288,7 @@ def execute_command(store: EventStore, cmd: Any, *args: Any) -> Any:
             raise CommandError(f"unexpected arguments: {rest}")
         to = _int(opts["TO"], "TO commit") if "TO" in opts else None
         df = store.changes(_int(a[0], "since commit"), to=to)
-        return _event_rows(
-            df.orderBy("partition_id", "partition_sequence")
-        )
+        return _event_rows(df.orderBy("partition_id", "partition_sequence").toArrow())
     if name == "ESUB":
         return _parse_esub(store, a)
     if name == "EPSUB":

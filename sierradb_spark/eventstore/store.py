@@ -7,12 +7,19 @@ analogue of the single-writer-thread-per-bucket discipline,
 ``crates/sierradb/src/writer_thread_pool.rs:120-150,560-645``) → one
 append commit → watermark advance.
 
-Read path: EGET / ESCAN / EPSCAN / ESVER / EPSEQ as DataFrame queries
-with partition pruning and watermark gating (``sierradb-cluster/src/
-read.rs:460-496,663-697``). A point read (EGET / ESCAN / EPSCAN) hands
-the parquet reader only the target partition's manifest files, so
-building it lists O(partition files), never the whole table
-(test_store_pruning pins this through ``inputFiles()``).
+Read path: the entry point picks where a read runs, as on the write
+side. The row reads the commands serve (EGET / ESCAN / EPSCAN via
+:meth:`~EventStore.get_rows` / ``scan_rows`` / ``pscan_rows``, ESVER,
+EPSEQ) run on the driver with pyarrow and start no Spark job — the
+reference's reader-thread lookup (``reader_thread_pool.rs``, read path
+``database.rs:127-207``, ``read.rs:663-697,1044-1068``): they open only
+the target partition's manifest files (or the heads log), skip row
+groups by parquet stats, and keep a running top-COUNT. :meth:`get` /
+:meth:`scan` / :meth:`pscan` stay lazy DataFrame queries with the same
+partition pruning, handed only the target partition's files
+(test_store_pruning pins this through ``inputFiles()``). Watermark
+gating (``read.rs:460-496``) is implicit on both paths: only
+manifest-committed files are read.
 
 Commit protocol (plain-Parquet stand-in for Delta/Iceberg):
 every append publishes ONE manifest file in ``_commits/`` via atomic
@@ -85,6 +92,7 @@ from typing import Callable, Iterable, Iterator, Literal, Optional, Sequence
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -132,6 +140,17 @@ _EVENT_ARROW = pa.schema(
         ("metadata", pa.binary()),
         ("transaction_id", pa.string()),
         ("confirmation_count", pa.int32()),
+    ]
+)
+# The event columns the driver reads return. ``timestamp`` and
+# ``confirmation_count`` are not read and ``partition_id`` comes from
+# the hive directory, so Spark-written, compacted and pyarrow-written
+# files all read alike.
+_READ_ARROW = pa.schema(
+    [
+        f
+        for f in _EVENT_ARROW
+        if f.name not in ("partition_id", "timestamp", "confirmation_count")
     ]
 )
 # _validate_and_assign's output columns that must not be left to pandas
@@ -215,6 +234,16 @@ def _partition_of(rel: str) -> int:
     (``partition_id=N/<file>``): every selection of manifest files by
     partition goes through here."""
     return int(rel.split(os.sep, 1)[0].partition("=")[2])
+
+
+def _range_expr(col: str, start: RangeValue, end: RangeValue) -> pc.Expression:
+    """``start <= col <= end`` as a pyarrow filter ("-"/"+" = open)."""
+    cond = pc.scalar(True)
+    if start != "-":
+        cond = cond & (pc.field(col) >= int(start))
+    if end != "+":
+        cond = cond & (pc.field(col) <= int(end))
+    return cond
 
 
 def _cap_batch_tokens(tokens, cap: int = 1024) -> list[str]:
@@ -764,21 +793,9 @@ class EventStore:
         never scans the events table. Compacted by :meth:`compact`.
         ``as_of``: resolve at that commit (time travel).
         """
-        return self._heads_for_state(self._read_state(as_of))
-
-    def _heads_for_state(self, state: _State) -> DataFrame:
+        state = self._read_state(as_of)
         if not state.heads_files:
-            # .where(lit(False)) makes the emptiness PROVABLE: a bare
-            # createDataFrame([]) is RDD-backed (Scan ExistingRDD),
-            # which Catalyst cannot fold, so the append path's heads
-            # join still planned (and AQE ran) a broadcast-stage job
-            # over the empty relation on every first append. The
-            # always-false filter collapses to an empty LocalRelation
-            # and the left join folds into a null projection — zero
-            # jobs (r12).
-            return self.spark.createDataFrame([], HEADS_SCHEMA).where(
-                F.lit(False)
-            )
+            return self.spark.createDataFrame([], HEADS_SCHEMA)
         paths = [os.path.join(self.heads_path, p) for p in state.heads_files]
         return self.spark.read.schema(HEADS_SCHEMA).parquet(*paths)
 
@@ -790,13 +807,22 @@ class EventStore:
         the Spark append join, the heads-log rollover, compact and
         delete_streams all read current stream heads through here (the
         reference's live index, writer_thread_pool.rs:43-54)."""
-        parts = [
-            pq.read_table(os.path.join(self.heads_path, rel)).cast(_HEADS_ARROW)
-            for rel in state.heads_files
-        ]
+        heads = self._read_heads(state)
         if extra is not None:
-            parts.append(extra.cast(_HEADS_ARROW))
-        return _latest_heads(pa.concat_tables(parts or [_HEADS_ARROW.empty_table()]))
+            heads = pa.concat_tables([heads, extra.cast(_HEADS_ARROW)])
+        return _latest_heads(heads)
+
+    def _read_heads(
+        self, state: _State, filter: pc.Expression | None = None
+    ) -> pa.Table:
+        """The rows of ``state``'s heads log matching ``filter``: one
+        pyarrow dataset over its files, whose parquet stats skip row
+        groups on the filter. The one heads reader (:meth:`_fold_heads`,
+        :meth:`stream_version`)."""
+        paths = [os.path.join(self.heads_path, rel) for rel in state.heads_files]
+        return ds.dataset(paths, schema=_HEADS_ARROW, format="parquet").to_table(
+            filter=filter
+        )
 
     def watermarks(self, as_of: Optional[int] = None) -> DataFrame:
         """Per-partition confirmed watermark table (SURVEY §4.3) as a
@@ -951,6 +977,8 @@ class EventStore:
                     )  # database.rs:880
                 if not (1 <= len(r.stream_id) <= self.config.max_stream_id_len):
                     raise ValueError("stream_id must be 1-64 chars")  # lib.rs:26,36-50
+                if "\x00" in r.stream_id:
+                    raise ValueError("stream_id cannot contain null bytes")  # lib.rs:45-47
                 if len(r.event_name) > self.config.max_event_name_len:
                     raise ValueError("event_name too long")  # format.rs:150
                 expected = V.parse_expected_version(r.expected_version)
@@ -1455,8 +1483,135 @@ class EventStore:
 
     # --- read path -----------------------------------------------------------
 
+    def _read_partition(
+        self,
+        state: _State,
+        pid: int,
+        filter: pc.Expression,
+        order_key: str,
+        descending: bool = False,
+        count: int | None = None,
+    ) -> pa.Table:
+        """The events of partition ``pid`` in ``state`` that match
+        ``filter``, ordered by ``order_key``, the first ``count`` only:
+        the driver read behind EGET / ESCAN / EPSCAN, no Spark job.
+
+        One pyarrow dataset over only the partition's manifest files,
+        with an explicit schema (``_READ_ARROW``); parquet stats skip
+        row groups on ``filter``. Record batches stream through a
+        running top-``count`` by the order key, so driver memory is
+        O(count + the scanner's few read-ahead batches), never
+        O(partition); an unbounded read holds only its result. A
+        partition with no watermark has no committed events: empty.
+        """
+        if count is not None and count < 0:
+            raise ValueError(f"count must be >= 0, got {count}")
+        order = [(order_key, "descending" if descending else "ascending")]
+        kept: list[pa.RecordBatch] = []
+        if state.watermarks.get(int(pid)) is not None:
+            paths = [
+                os.path.join(self.events_path, rel)
+                for rel in state.events_files
+                if _partition_of(rel) == pid
+            ]
+            dataset = ds.dataset(paths, schema=_READ_ARROW, format="parquet")
+            held = 0
+            for batch in dataset.to_batches(filter=filter):
+                kept.append(batch)
+                held += batch.num_rows
+                if count is not None and held > count:
+                    top = pa.Table.from_batches(kept).sort_by(order).slice(0, count)
+                    kept, held = top.to_batches(), top.num_rows
+        rows = pa.Table.from_batches(kept, schema=_READ_ARROW).sort_by(order)
+        if count is not None:
+            rows = rows.slice(0, count)
+        return rows.add_column(
+            2, "partition_id", pa.repeat(pa.scalar(pid, pa.int32()), rows.num_rows)
+        )
+
+    def _event_partition(self, event_id: str) -> tuple[str, int]:
+        """The canonical form of ``event_id`` and the partition its
+        embedded hash names (id.rs:50-53).
+
+        Canonicalized first: the stored column is the canonical
+        lowercase-hyphenated form (the append path writes str(UUID)),
+        so an uppercase / no-dash / urn:uuid: encoding of a REAL event
+        must not silently miss on a raw string compare."""
+        event_id = str(_uuid.UUID(str(event_id)))
+        phash = ids.uuid_to_partition_hash(event_id)
+        return event_id, ids.partition_id_for_hash(phash, self.config.num_partitions)
+
+    def _stream_partition(self, stream_id: str, partition_key: str | None) -> int:
+        """The partition a stream lives in: its explicit partition key's,
+        else its default key's (routing invariant)."""
+        pkey = partition_key or str(ids.partition_key_for_stream(stream_id))
+        return ids.partition_id_for_hash(
+            ids.uuid_to_partition_hash(pkey), self.config.num_partitions
+        )
+
+    def get_rows(self, event_id: str, as_of: Optional[int] = None) -> pa.Table:
+        """EGET on the driver: :meth:`get`'s events (without
+        ``timestamp`` and ``confirmation_count``) as an Arrow table,
+        read by :meth:`_read_partition` with no Spark job — one read for
+        the event's transaction id, one for the transaction's events."""
+        event_id, pid = self._event_partition(event_id)
+        state = self._read_state(as_of)
+        hit = self._read_partition(
+            state, pid, pc.field("event_id") == event_id, "partition_sequence"
+        )
+        if not hit.num_rows:
+            return hit
+        txn = pc.field("transaction_id") == hit["transaction_id"][0].as_py()
+        return self._read_partition(state, pid, txn, "partition_sequence")
+
+    def scan_rows(
+        self,
+        stream_id: str,
+        start: RangeValue = "-",
+        end: RangeValue = "+",
+        count: int | None = None,
+        direction: Literal["forward", "reverse"] = "forward",
+        partition_key: str | None = None,
+        as_of: Optional[int] = None,
+    ) -> pa.Table:
+        """ESCAN on the driver: :meth:`scan`'s rows (without
+        ``timestamp`` and ``confirmation_count``) as an Arrow table,
+        read by :meth:`_read_partition` with no Spark job."""
+        return self._read_partition(
+            self._read_state(as_of),
+            self._stream_partition(stream_id, partition_key),
+            (pc.field("stream_id") == stream_id)
+            & _range_expr("stream_version", start, end),
+            "stream_version",
+            direction == "reverse",
+            count,
+        )
+
+    def pscan_rows(
+        self,
+        partition_id: int,
+        start: RangeValue = "-",
+        end: RangeValue = "+",
+        count: int | None = None,
+        direction: Literal["forward", "reverse"] = "forward",
+        as_of: Optional[int] = None,
+    ) -> pa.Table:
+        """EPSCAN on the driver: :meth:`pscan`'s rows (without
+        ``timestamp`` and ``confirmation_count``) as an Arrow table,
+        read by :meth:`_read_partition` with no Spark job."""
+        return self._read_partition(
+            self._read_state(as_of),
+            int(partition_id),
+            _range_expr("partition_sequence", start, end),
+            "partition_sequence",
+            direction == "reverse",
+            count,
+        )
+
     def get(self, event_id: str, as_of: Optional[int] = None) -> DataFrame:
-        """EGET: committed events of the transaction containing event_id.
+        """EGET: committed events of the transaction containing event_id,
+        as a lazy DataFrame (:meth:`get_rows` serves the same rows to a
+        client on the driver).
 
         Partition pruned from the hash embedded in the UUID
         (id.rs:50-53; read path database.rs:127-207): the reader is
@@ -1483,13 +1638,7 @@ class EventStore:
         scan is the not-found proof, not a shortcut past one. Pinned by
         test_eget_foreign_hash_id_is_clean_miss.
         """
-        # Canonicalize first: the stored column is the canonical
-        # lowercase-hyphenated form (the append path writes str(UUID)),
-        # so an uppercase / no-dash / urn:uuid: encoding of a REAL event
-        # must not silently miss on a raw string compare.
-        event_id = str(_uuid.UUID(str(event_id)))
-        phash = ids.uuid_to_partition_hash(event_id)
-        pid = ids.partition_id_for_hash(phash, self.config.num_partitions)
+        event_id, pid = self._event_partition(event_id)
         state = self._read_state(as_of)
         if state.watermarks.get(int(pid)) is None:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
@@ -1531,12 +1680,10 @@ class EventStore:
         files are readable.
 
         ``as_of``: scan the snapshot at that commit (time travel, valid
-        back to the last compaction — see :meth:`events`).
+        back to the last compaction — see :meth:`events`). A lazy
+        DataFrame; :meth:`scan_rows` serves the same rows on the driver.
         """
-        pkey = partition_key or str(ids.partition_key_for_stream(stream_id))
-        pid = ids.partition_id_for_hash(
-            ids.uuid_to_partition_hash(pkey), self.config.num_partitions
-        )
+        pid = self._stream_partition(stream_id, partition_key)
         state = self._read_state(as_of)
         if state.watermarks.get(int(pid)) is None:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
@@ -1567,7 +1714,8 @@ class EventStore:
     ) -> DataFrame:
         """EPSCAN: sequence-range scan of one partition
         (request/epscan.rs:90-136). ``as_of`` scans the snapshot at that
-        commit (time travel — see :meth:`events`)."""
+        commit (time travel — see :meth:`events`). A lazy DataFrame;
+        :meth:`pscan_rows` serves the same rows on the driver."""
         state = self._read_state(as_of)
         if state.watermarks.get(int(partition_id)) is None:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
@@ -1593,35 +1741,24 @@ class EventStore:
         end: RangeValue = "+",
         batch_size: int | None = None,
         direction: Literal["forward", "reverse"] = "forward",
-    ) -> Iterator[list]:
-        """Batched iteration (R7): yield lists of ≤ batch_size events,
-        paginating by version cursor — the reference's ``next_batch(50)``
-        (iter.rs:491-568, DEFAULT_BATCH_SIZE sierradb-cluster/src/lib.rs:43).
+    ) -> Iterator[list[dict]]:
+        """Batched iteration (R7): yield lists of ≤ batch_size events
+        (dicts of :meth:`scan_rows`' columns), paginating by version
+        cursor — the reference's ``next_batch(50)`` (iter.rs:491-568,
+        DEFAULT_BATCH_SIZE sierradb-cluster/src/lib.rs:43).
 
-        Each page is an independent pruned+limited Spark job, so the
-        driver holds one page of rows at a time — O(batch) memory for an
-        arbitrarily long stream.
+        Each page is one :meth:`scan_rows` driver read (no Spark job)
+        that keeps only its top batch_size rows, so the driver holds one
+        page at a time — O(batch) memory for an arbitrarily long stream.
         """
-        size = batch_size or self.config.default_batch_size
-        lo = None if start == "-" else int(start)
-        hi = None if end == "+" else int(end)
-        while True:
-            rows = self.scan(
-                stream_id,
-                "-" if lo is None else lo,
-                "+" if hi is None else hi,
-                count=size,
-                direction=direction,
-            ).collect()
-            if not rows:
-                return
-            yield rows
-            if len(rows) < size:
-                return
-            if direction == "forward":
-                lo = rows[-1]["stream_version"] + 1
-            else:
-                hi = rows[-1]["stream_version"] - 1
+        return self._pages(
+            lambda lo, hi, n: self.scan_rows(stream_id, lo, hi, n, direction),
+            "stream_version",
+            start,
+            end,
+            batch_size,
+            direction,
+        )
 
     def pscan_batches(
         self,
@@ -1630,31 +1767,42 @@ class EventStore:
         end: RangeValue = "+",
         batch_size: int | None = None,
         direction: Literal["forward", "reverse"] = "forward",
-    ) -> Iterator[list]:
+    ) -> Iterator[list[dict]]:
         """Batched partition iteration (R7 over EPSCAN, mirroring
         :meth:`scan_batches`): ≤ batch_size events per page, paginating
         by sequence cursor — the reference's partition iterator with
         ``next_batch`` (iter.rs:54-149,491-568)."""
+        return self._pages(
+            lambda lo, hi, n: self.pscan_rows(partition_id, lo, hi, n, direction),
+            "partition_sequence",
+            start,
+            end,
+            batch_size,
+            direction,
+        )
+
+    def _pages(
+        self,
+        read: Callable[[RangeValue, RangeValue, int], pa.Table],
+        key: str,
+        lo: RangeValue,
+        hi: RangeValue,
+        batch_size: int | None,
+        direction: str,
+    ) -> Iterator[list[dict]]:
+        """Pages of ``read(lo, hi, size)``, moving the ``key`` cursor
+        past each page's last row until a short page."""
         size = batch_size or self.config.default_batch_size
-        lo = None if start == "-" else int(start)
-        hi = None if end == "+" else int(end)
         while True:
-            rows = self.pscan(
-                partition_id,
-                "-" if lo is None else lo,
-                "+" if hi is None else hi,
-                count=size,
-                direction=direction,
-            ).collect()
-            if not rows:
-                return
-            yield rows
+            rows = read(lo, hi, size).to_pylist()
+            if rows:
+                yield rows
             if len(rows) < size:
                 return
             if direction == "forward":
-                lo = rows[-1]["partition_sequence"] + 1
+                lo = rows[-1][key] + 1
             else:
-                hi = rows[-1]["partition_sequence"] - 1
+                hi = rows[-1][key] - 1
 
     @staticmethod
     def _zorder_col() -> "F.Column":
@@ -1972,27 +2120,20 @@ class EventStore:
         appended under an explicit partition key live in that key's
         partition, so the lookup must accept the same key.
 
-        Served from the heads log — O(heads files) with predicate
-        pushdown, never an events scan (GetStreamVersion parity,
-        read.rs:1044-1068). Heads are manifest-committed together with
-        the watermark advance, so this can never report a version that
-        scan() would not return (watermark-gated by construction).
+        Served on the driver from the heads log, never an events scan
+        (GetStreamVersion parity, read.rs:1044-1068): the max over one
+        filtered pyarrow read of the heads files (:meth:`_read_heads`;
+        row groups skipped by parquet stats), no Spark job. Heads are
+        manifest-committed together with the watermark advance, so this
+        can never report a version that scan() would not return
+        (watermark-gated by construction).
         """
-        pkey = partition_key or str(ids.partition_key_for_stream(stream_id))
-        pid = ids.partition_id_for_hash(
-            ids.uuid_to_partition_hash(pkey), self.config.num_partitions
+        heads = self._read_heads(
+            self._read_state(as_of),
+            (pc.field("partition_id") == self._stream_partition(stream_id, partition_key))
+            & (pc.field("stream_id") == stream_id),
         )
-        state = self._read_state(as_of)
-        if state.watermarks.get(int(pid)) is None:
-            return None
-        row = (
-            self._heads_for_state(state)
-            .where(F.col("partition_id") == pid)
-            .where(F.col("stream_id") == stream_id)
-            .agg(F.max("stream_version").alias("v"))
-            .collect()[0]
-        )
-        return row["v"]
+        return pc.max(heads["stream_version"]).as_py()
 
     def partition_sequence(
         self, partition_id: int, as_of: Optional[int] = None

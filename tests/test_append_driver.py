@@ -331,3 +331,23 @@ def test_compact_and_delete_fsync_placed_files_before_publish(
         log = _spy_durability(store, m)
         store.delete_streams(["f-gone"])
     _check_synced_before_publish(store, log, "delete-")
+
+
+def test_nul_byte_stream_id_is_refused_on_both_paths(spark, tmp_path):
+    """A stream id with a NUL byte is invalid (lib.rs:45-47) on every
+    append path: the driver append and EAPPEND raise, ``append_df``
+    rejects the request with the same reason, and nothing is stored."""
+    from sierradb_spark.commands import execute_command
+
+    store = EventStore(spark, str(tmp_path / "nul"), CFG)
+    with pytest.raises(ValueError, match="stream_id cannot contain null bytes"):
+        store.append([AppendRequest("a\x00b", "E")])
+    with pytest.raises(ValueError, match="stream_id cannot contain null bytes"):
+        execute_command(store, "EAPPEND", "a\x00b", "E")
+    res = store.append_df(
+        spark.createDataFrame([("a\x00b", "E")], "stream_id string, event_name string")
+    ).collect()
+    assert [(r["accepted"], r["error"]) for r in res] == [
+        (False, "stream_id cannot contain null bytes")
+    ]
+    assert store.stats()["total_events"] == 0

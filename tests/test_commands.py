@@ -104,6 +104,35 @@ def test_eappend_emappend_start_no_spark_job(store, jobs_started):
     assert ex(store, "ESVER", "j-2", "PARTITION_KEY", pk) == 0
 
 
+def test_read_commands_start_no_spark_job(store, jobs_started):
+    """EGET, ESCAN (forward and REVERSE, with and without COUNT),
+    EPSCAN, ESVER and EPSEQ read on the driver: none starts a Spark job,
+    and each still returns the committed rows."""
+    first = ex(store, "EAPPEND", "r-1", "E0")
+    for i in range(1, 4):
+        ex(store, "EAPPEND", "r-1", f"E{i}")
+    pid = first["partition_id"]
+    names = lambda rows: [r["event_name"] for r in rows]  # noqa: E731
+    calls = {
+        "EGET": (("EGET", first["event_id"].upper()), names, ["E0"]),
+        "ESCAN": (("ESCAN", "r-1", "-", "+"), names, ["E0", "E1", "E2", "E3"]),
+        "ESCAN COUNT": (("ESCAN", "r-1", 1, "+", "COUNT", 2), names, ["E1", "E2"]),
+        "ESCAN REVERSE": (("ESCAN", "r-1", "-", 2, "REVERSE"), names, ["E2", "E1", "E0"]),
+        "ESCAN COUNT REVERSE": (
+            ("ESCAN", "r-1", "-", "+", "COUNT", 2, "REVERSE"), names, ["E3", "E2"]
+        ),
+        "EPSCAN": (("EPSCAN", pid, 1, "+", "COUNT", 2), names, ["E1", "E2"]),
+        "ESVER": (("ESVER", "r-1"), lambda v: v, 3),
+        "EPSEQ": (("EPSEQ", pid), lambda v: v, 3),
+    }
+    for name, (args, view, want) in calls.items():
+        out, jobs = jobs_started(lambda: ex(store, *args))
+        assert jobs == 0, f"{name} started {jobs} Spark job(s)"
+        assert view(out) == want, (name, out)
+    with pytest.raises(CommandError, match="COUNT must be >= 0"):
+        ex(store, "ESCAN", "r-1", "-", "+", "COUNT", -1)
+
+
 def test_esub_epsub_build_matchers(store):
     ex(store, "EAPPEND", "s-a", "E1")
     ex(store, "EAPPEND", "s-a", "E2")

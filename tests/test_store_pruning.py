@@ -110,44 +110,77 @@ def test_point_reads_open_only_the_target_partition(wide_store, jobs_started):
     assert [r["event_id"] for r in wide_store.get(eid).collect()] == [eid]
 
 
-def _eids(df) -> list[str]:
-    return [r["event_id"] for r in df.collect()]
+# The columns the driver reads return (no timestamp/confirmation_count).
+ROW_COLS = [
+    "event_id", "partition_key", "partition_id", "partition_sequence",
+    "stream_id", "stream_version", "event_name", "timestamp_ns",
+    "payload", "metadata", "transaction_id",
+]
+
+
+def _rows(df) -> list[dict]:
+    return df.select(*ROW_COLS).toArrow().to_pylist()
+
+
+def _eids(rows: list[dict]) -> list[str]:
+    return [r["event_id"] for r in rows]
 
 
 def _check_reads_match_events(store, streams, pids, as_of=None):
-    """get/scan/pscan equal a pandas filter of events() at the same snapshot."""
+    """Each driver read (get_rows/scan_rows/pscan_rows, the
+    scan_batches/pscan_batches pages, stream_version) equals both its
+    DataFrame twin (get/scan/pscan) and a pandas filter of events() at
+    the same snapshot."""
     ev = store.events(as_of=as_of).toPandas()
-    cases = [("-", "+", None), (1, 3, None), (1, "+", 2)]
+    cases = [("-", "+", None), (1, 3, None), (1, "+", 2), ("-", "+", 3)]
     for direction in ("forward", "reverse"):
         asc = direction == "forward"
         for start, end, count in cases:
             lo = -1 if start == "-" else start
             hi = 1 << 62 if end == "+" else end
+            args = (start, end, count, direction)
             for sid in streams:
                 want = ev[
                     (ev.stream_id == sid)
                     & ev.stream_version.between(lo, hi)
                 ].sort_values("stream_version", ascending=asc)
                 want = list(want.event_id[: count or len(want)])
-                got = _eids(
-                    store.scan(sid, start, end, count, direction, as_of=as_of)
-                )
-                assert got == want, (sid, start, end, count, direction, as_of)
+                got = store.scan_rows(sid, *args, as_of=as_of).to_pylist()
+                assert _eids(got) == want, (sid, args, as_of)
+                assert _rows(store.scan(sid, *args, as_of=as_of)) == got, (sid, args)
+                if count is None and as_of is None:
+                    pages = store.scan_batches(sid, start, end, 2, direction)
+                    assert [r for p in pages for r in p] == got, (sid, args)
             for pid in pids:
                 want = ev[
                     (ev.partition_id == pid)
                     & ev.partition_sequence.between(lo, hi)
                 ].sort_values("partition_sequence", ascending=asc)
                 want = list(want.event_id[: count or len(want)])
-                got = _eids(
-                    store.pscan(pid, start, end, count, direction, as_of=as_of)
-                )
-                assert got == want, (pid, start, end, count, direction, as_of)
+                got = store.pscan_rows(pid, *args, as_of=as_of).to_pylist()
+                assert _eids(got) == want, (pid, args, as_of)
+                assert _rows(store.pscan(pid, *args, as_of=as_of)) == got, (pid, args)
+                if count is None and as_of is None:
+                    pages = store.pscan_batches(pid, start, end, 2, direction)
+                    assert [r for p in pages for r in p] == got, (pid, args)
+    for sid in streams:
+        want = ev[ev.stream_id == sid].stream_version
+        want = int(want.max()) if len(want) else None
+        assert store.stream_version(sid, as_of=as_of) == want, (sid, as_of)
     for txn in ev[ev.stream_id.isin(streams)].transaction_id.unique():
         want = list(
             ev[ev.transaction_id == txn].sort_values("partition_sequence").event_id
         )
-        assert _eids(store.get(want[-1], as_of=as_of)) == want, (txn, as_of)
+        got = store.get_rows(want[-1], as_of=as_of).to_pylist()
+        assert _eids(got) == want, (txn, as_of)
+        assert _rows(store.get(want[-1], as_of=as_of)) == got, (txn, as_of)
+        assert store.get_rows(want[0].upper(), as_of=as_of).to_pylist() == got
+    # An id whose embedded hash names another (populated) partition: a
+    # clean miss on both paths.
+    pid = next(int(p) for p in sorted(set(ev.partition_id)) if p != pids[0])
+    foreign = str(ids.uuid_v7_with_partition_hash(pid, timestamp_ms=1, rand12=0, rand46=0))
+    assert store.get_rows(foreign, as_of=as_of).num_rows == 0
+    assert store.get(foreign, as_of=as_of).collect() == []
 
 
 def test_point_reads_match_events_oracle(wide_store):
@@ -159,11 +192,19 @@ def test_point_reads_match_events_oracle(wide_store):
     )
     early = store.commits()[1]
     streams = ["w-0", "w-1"]
-    pids = sorted({_pid(s) for s in streams})
+    pids = list(dict.fromkeys(_pid(s) for s in streams))
+    # w-0's 7 events lie in 4 files, so a COUNT of 2 or 3 runs the
+    # reader's top-COUNT merge across record batches.
+    w0_files = [
+        f for f in store._read_state().events_files if f"partition_id={pids[0]}/" in f
+    ]
+    assert len(w0_files) >= 4, w0_files
     _check_reads_match_events(store, streams, pids)
     _check_reads_match_events(store, streams, pids, as_of=early)
 
-    store.compact()
+    store.compact(order="zorder")
+    _check_reads_match_events(store, streams, pids)
+    store.compact(order="stream")
     _check_reads_match_events(store, streams, pids)
 
     # A hard delete that empties one partition: its watermark stays, its
@@ -178,4 +219,8 @@ def test_point_reads_match_events_oracle(wide_store):
     assert store.pscan(gone_pid).collect() == []
     assert store.scan(gone[0]).collect() == []
     assert store.get(gone_eid).collect() == []
+    assert store.pscan_rows(gone_pid).num_rows == 0
+    assert store.scan_rows(gone[0]).num_rows == 0
+    assert store.get_rows(gone_eid).num_rows == 0
+    assert store.stream_version(gone[0]) is None
     _check_reads_match_events(store, streams + gone, pids + [gone_pid])
