@@ -13,8 +13,12 @@ side. The row reads the commands serve (EGET / ESCAN / EPSCAN via
 EPSEQ) run on the driver with pyarrow and start no Spark job — the
 reference's reader-thread lookup (``reader_thread_pool.rs``, read path
 ``database.rs:127-207``, ``read.rs:663-697,1044-1068``): they open only
-the target partition's manifest files (or the heads log), skip row
-groups by parquet stats, and keep a running top-COUNT. :meth:`get` /
+the target partition's manifest files (ESVER: a lookup in the heads
+fold), skip row groups by parquet stats, and keep a running top-COUNT.
+Driver memos make a read on an unchanged store re-read nothing but the
+``_commits`` listing and the row groups it needs: the resolved HEAD
+state (keyed by that listing), the heads fold (keyed by its heads files)
+and each events file's parsed footer. :meth:`get` /
 :meth:`scan` / :meth:`pscan` stay lazy DataFrame queries with the same
 partition pruning, handed only the target partition's files
 (test_store_pruning pins this through ``inputFiles()``). Watermark
@@ -55,9 +59,13 @@ Scale notes (100 TB):
   come from the heads log (O(streams touched since last compaction)),
   folded latest-wins on the driver by ONE pyarrow group_by
   (``_fold_heads``) that the append join (as an Arrow LocalRelation —
-  no Spark job), the heads-log rollover, compact and delete_streams
-  share; partition sequences come from the manifest's watermark map
-  (O(partitions), driver-side). Append cost is O(batch) in the events
+  no Spark job), ESVER, the heads-log rollover, compact and
+  delete_streams share. The fold is memoized on the heads files: a
+  commit adds one heads file, and only that file is read and folded
+  into the memo (the reference's live index, ``LiveIndexSet``,
+  writer_thread_pool.rs:43-54), so an append reads one heads file, not
+  the whole log. Partition sequences come from the manifest's watermark
+  map (O(partitions), driver-side). Append cost is O(batch) in the events
   table regardless of its size — the reference's headline design goal
   (README.md:96-99).
 - Requests that arrive as Python objects (EAPPEND / EMAPPEND,
@@ -87,12 +95,14 @@ import shutil
 import time
 import uuid as _uuid
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Callable, Iterable, Iterator, Literal, Optional, Sequence
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -163,6 +173,8 @@ _RESULT_DTYPES = {
     "stream_version": "Int64",
     "timestamp_ns": "int64",
 }
+_PARQUET = ds.ParquetFileFormat()
+_LOCAL_FS = pafs.LocalFileSystem()
 
 
 @dataclass
@@ -224,6 +236,15 @@ class _State:
     # a replayed foreachBatch whose token is here is skipped whole.
     batch_tokens: frozenset[str] = frozenset()
 
+    @cached_property
+    def files_by_partition(self) -> dict[int, tuple[str, ...]]:
+        """``events_files`` grouped by partition id, in manifest order:
+        built once per state, on first use."""
+        by_pid: dict[int, list[str]] = {}
+        for rel in self.events_files:
+            by_pid.setdefault(_partition_of(rel), []).append(rel)
+        return {pid: tuple(rels) for pid, rels in by_pid.items()}
+
 
 def _int_or_none(v) -> Optional[int]:
     return None if pd.isna(v) else int(v)
@@ -231,8 +252,7 @@ def _int_or_none(v) -> Optional[int]:
 
 def _partition_of(rel: str) -> int:
     """Partition id of a manifest-relative events file path
-    (``partition_id=N/<file>``): every selection of manifest files by
-    partition goes through here."""
+    (``partition_id=N/<file>``), for ``_State.files_by_partition``."""
     return int(rel.split(os.sep, 1)[0].partition("=")[2])
 
 
@@ -440,6 +460,14 @@ class EventStore:
             os.makedirs(p, exist_ok=True)
         # Manifests are immutable once renamed into place: cache parses.
         self._manifest_cache: dict[str, dict] = {}
+        # Driver memos, each keyed by immutable files (manifests, heads
+        # files, events files) and replaced by one assignment, so a
+        # racing thread can at worst recompute: the HEAD state by its
+        # ``_commits`` listing, the heads fold by its heads files, and
+        # parsed events-file footers by file.
+        self._state_memo: tuple[list[str], _State] | None = None
+        self._heads_memo: tuple[tuple[str, ...], pa.Table] | None = None
+        self._fragments: dict[str, ds.ParquetFileFragment] = {}
 
     # --- manifest log --------------------------------------------------------
 
@@ -451,11 +479,18 @@ class EventStore:
         plain-file analogue of a Delta checkpoint + JSON commits; the
         listing is O(#commits since compaction).
 
+        HEAD reads are memoized on the sorted ``_commits/*.json``
+        listing: manifests are immutable once published, so an
+        unchanged listing resolves to the memo's state, which is
+        returned without touching a manifest. A changed listing (a new
+        commit, a base manifest, a swept one) resolves the chain again
+        and drops the parsed footers of events files that left it.
+
         ``as_of``: resolve the snapshot at that commit number instead of
         the latest — time travel over the immutable log (files are only
         ever removed by :meth:`compact`, so every post-compaction commit
         remains readable, exactly like Delta time travel bounded by
-        VACUUM).
+        VACUUM). Never memoized.
         """
         try:
             names = sorted(
@@ -496,6 +531,21 @@ class EventStore:
                     "manifest; it was compacted away (increase compact()'s "
                     "retain_seconds to keep older snapshots readable)"
                 )
+            return self._resolve(names, as_of)
+        memo = self._state_memo
+        if memo is not None and memo[0] == names:
+            return memo[1]
+        state = self._resolve(names, None)
+        live = set(state.events_files)
+        self._fragments = {
+            rel: frag for rel, frag in self._fragments.items() if rel in live
+        }
+        self._state_memo = (names, state)
+        return state
+
+    def _resolve(self, names: list[str], as_of: Optional[int]) -> _State:
+        """The state of the chain of manifests ``names`` (sorted), from
+        its last base manifest on."""
         if not names:
             return _State(0, (), (), {})
         manifests = [self._load_manifest(n) for n in names]
@@ -653,9 +703,7 @@ class EventStore:
         """
         state = self._read_state()
         ev_bytes = 0
-        parts: set[int] = set()
         for rel in state.events_files:
-            parts.add(_partition_of(rel))
             try:
                 ev_bytes += os.path.getsize(os.path.join(self.events_path, rel))
             except OSError:
@@ -667,7 +715,7 @@ class EventStore:
             "events_files": len(state.events_files),
             "events_bytes": ev_bytes,
             "heads_files": len(state.heads_files),
-            "partitions_touched": len(parts),
+            "partitions_touched": len(state.files_by_partition),
             "confirmed_sequences": dict(sorted(wm.items())),
             # gapless assignment: partition p holds exactly wm[p]+1 events
             "total_events": sum(s + 1 for s in wm.values()),
@@ -700,8 +748,8 @@ class EventStore:
         """
         files = state.events_files
         if partitions is not None:
-            keep = {int(p) for p in partitions}
-            files = tuple(f for f in files if _partition_of(f) in keep)
+            by_pid = state.files_by_partition
+            files = tuple(rel for p in partitions for rel in by_pid.get(int(p), ()))
         if not files:
             return self.spark.createDataFrame([], EVENT_SCHEMA)
         paths = [os.path.join(self.events_path, p) for p in files]
@@ -803,26 +851,35 @@ class EventStore:
         """The heads log of ``state`` folded latest-wins on the driver:
         max (stream_version, partition_sequence) per (partition_id,
         stream_id), plus the rows of ``extra`` (a batch's heads at
-        rollover). The one fold of the write path: the driver append,
-        the Spark append join, the heads-log rollover, compact and
+        rollover). The one heads source: the driver append, ESVER, the
+        Spark append join, the heads-log rollover, compact and
         delete_streams all read current stream heads through here (the
-        reference's live index, writer_thread_pool.rs:43-54)."""
-        heads = self._read_heads(state)
-        if extra is not None:
-            heads = pa.concat_tables([heads, extra.cast(_HEADS_ARROW)])
-        return _latest_heads(heads)
+        reference's live index, writer_thread_pool.rs:43-54).
 
-    def _read_heads(
-        self, state: _State, filter: pc.Expression | None = None
-    ) -> pa.Table:
-        """The rows of ``state``'s heads log matching ``filter``: one
-        pyarrow dataset over its files, whose parquet stats skip row
-        groups on the filter. The one heads reader (:meth:`_fold_heads`,
-        :meth:`stream_version`)."""
-        paths = [os.path.join(self.heads_path, rel) for rel in state.heads_files]
-        return ds.dataset(paths, schema=_HEADS_ARROW, format="parquet").to_table(
-            filter=filter
-        )
+        Memoized on ``state.heads_files``. Heads files are immutable, so
+        the same tuple folds to the same table; a tuple that extends the
+        memo's (one heads file per commit since) reads only the added
+        files and folds them into the memo's table, since a latest-wins
+        max of maxima is the max. Any other tuple (after a rollover, a
+        compaction or an ``as_of`` read) folds from scratch."""
+        files = state.heads_files
+        memo = self._heads_memo
+        if memo is None or files[: len(memo[0])] != memo[0]:
+            memo = ((), _latest_heads(_HEADS_ARROW.empty_table()))
+        if memo[0] != files:
+            added = self._read_heads(files[len(memo[0]) :])
+            memo = (files, _latest_heads(pa.concat_tables([memo[1], added])))
+            self._heads_memo = memo
+        heads = memo[1]
+        if extra is not None:
+            heads = _latest_heads(pa.concat_tables([heads, extra.cast(_HEADS_ARROW)]))
+        return heads
+
+    def _read_heads(self, rels: Sequence[str]) -> pa.Table:
+        """The rows of the heads files ``rels``: one pyarrow dataset,
+        the only reader of heads files on the driver."""
+        paths = [os.path.join(self.heads_path, rel) for rel in rels]
+        return ds.dataset(paths, schema=_HEADS_ARROW, format="parquet").to_table()
 
     def watermarks(self, as_of: Optional[int] = None) -> DataFrame:
         """Per-partition confirmed watermark table (SURVEY §4.3) as a
@@ -1497,8 +1554,10 @@ class EventStore:
         the driver read behind EGET / ESCAN / EPSCAN, no Spark job.
 
         One pyarrow dataset over only the partition's manifest files,
-        with an explicit schema (``_READ_ARROW``); parquet stats skip
-        row groups on ``filter``. Record batches stream through a
+        with an explicit schema (``_READ_ARROW``), built from memoized
+        fragments (:meth:`_fragment`) so no footer is parsed twice;
+        parquet stats skip row groups, or whole files, on ``filter``.
+        Record batches stream through a
         running top-``count`` by the order key, so driver memory is
         O(count + the scanner's few read-ahead batches), never
         O(partition); an unbounded read holds only its result. A
@@ -1509,12 +1568,12 @@ class EventStore:
         order = [(order_key, "descending" if descending else "ascending")]
         kept: list[pa.RecordBatch] = []
         if state.watermarks.get(int(pid)) is not None:
-            paths = [
-                os.path.join(self.events_path, rel)
-                for rel in state.events_files
-                if _partition_of(rel) == pid
-            ]
-            dataset = ds.dataset(paths, schema=_READ_ARROW, format="parquet")
+            dataset = ds.FileSystemDataset(
+                [self._fragment(rel) for rel in state.files_by_partition.get(pid, ())],
+                schema=_READ_ARROW,
+                format=_PARQUET,
+                filesystem=_LOCAL_FS,
+            )
             held = 0
             for batch in dataset.to_batches(filter=filter):
                 kept.append(batch)
@@ -1528,6 +1587,20 @@ class EventStore:
         return rows.add_column(
             2, "partition_id", pa.repeat(pa.scalar(pid, pa.int32()), rows.num_rows)
         )
+
+    def _fragment(self, rel: str) -> ds.ParquetFileFragment:
+        """The parquet fragment of events file ``rel`` with its footer
+        parsed. Events files are token-named and never rewritten, so
+        each footer is parsed once; :meth:`_read_state` drops the files
+        that leave the HEAD state."""
+        frag = self._fragments.get(rel)
+        if frag is None:
+            frag = _PARQUET.make_fragment(
+                os.path.abspath(os.path.join(self.events_path, rel)), _LOCAL_FS
+            )
+            frag.ensure_complete_metadata()
+            self._fragments[rel] = frag
+        return frag
 
     def _event_partition(self, event_id: str) -> tuple[str, int]:
         """The canonical form of ``event_id`` and the partition its
@@ -2095,7 +2168,12 @@ class EventStore:
             .parquet(staging)
         )
         added = self._place_staged(staging, f"delete-{token}")
-        carried = [f for f in state.events_files if _partition_of(f) not in affected]
+        carried = [
+            rel
+            for pid, rels in state.files_by_partition.items()
+            if pid not in affected
+            for rel in rels
+        ]
 
         heads = self._fold_heads(state)
         if mode == "hard":
@@ -2121,19 +2199,21 @@ class EventStore:
         partition, so the lookup must accept the same key.
 
         Served on the driver from the heads log, never an events scan
-        (GetStreamVersion parity, read.rs:1044-1068): the max over one
-        filtered pyarrow read of the heads files (:meth:`_read_heads`;
-        row groups skipped by parquet stats), no Spark job. Heads are
-        manifest-committed together with the watermark advance, so this
-        can never report a version that scan() would not return
-        (watermark-gated by construction).
+        (GetStreamVersion parity, read.rs:1044-1068): a lookup in the
+        memoized heads fold (:meth:`_fold_heads`), no Spark job and, on
+        an unchanged store, no file read. Heads are manifest-committed
+        together with the watermark advance, so this can never report a
+        version that scan() would not return (watermark-gated by
+        construction).
         """
-        heads = self._read_heads(
-            self._read_state(as_of),
-            (pc.field("partition_id") == self._stream_partition(stream_id, partition_key))
-            & (pc.field("stream_id") == stream_id),
+        heads = self._fold_heads(self._read_state(as_of))
+        hit = pc.and_(
+            pc.equal(
+                heads["partition_id"], self._stream_partition(stream_id, partition_key)
+            ),
+            pc.equal(heads["stream_id"], stream_id),
         )
-        return pc.max(heads["stream_version"]).as_py()
+        return pc.max(heads["stream_version"].filter(hit)).as_py()
 
     def partition_sequence(
         self, partition_id: int, as_of: Optional[int] = None

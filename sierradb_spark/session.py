@@ -39,6 +39,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Past this many paths Spark lists a reader's paths with a Spark
+        # job, one task per path (default 32). The event store hands the
+        # reader its manifest's leaf files, so there is nothing to
+        # discover: listing on the driver is one stat per file. On an
+        # object store that is one request per file, serial, where the
+        # job would fan out; compaction keeps a manifest's file count
+        # low enough that the driver wins there too.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(1 << 20))
         # The events table carries TIMESTAMP(NANOS) parquet timestamps,
         # which Spark only reads as raw longs (registry.load converts
         # them to µs-precision timestamps). Owned HERE so loading a

@@ -110,6 +110,15 @@ def test_point_reads_open_only_the_target_partition(wide_store, jobs_started):
     assert [r["event_id"] for r in wide_store.get(eid).collect()] == [eid]
 
 
+def test_events_over_many_files_starts_no_listing_job(wide_store, jobs_started):
+    """The session lists a reader's paths on the driver: past Spark's
+    default parallel-listing threshold (32 paths) building events()
+    would start a listing job with one task per manifest file."""
+    df, jobs = jobs_started(wide_store.events)
+    assert jobs == 0, f"building events() started {jobs} Spark job(s)"
+    assert len(df.inputFiles()) == wide_store.stats()["events_files"]
+
+
 # The columns the driver reads return (no timestamp/confirmation_count).
 ROW_COLS = [
     "event_id", "partition_key", "partition_id", "partition_sequence",
