@@ -26,7 +26,7 @@ from sierradb_spark.session import get_spark  # noqa: E402
 
 def tour(store_dir: str) -> None:
     spark = get_spark(shuffle_partitions=8)
-    store = EventStore(spark, store_dir, EngineConfig(shuffle_partitions=8))
+    store = EventStore(spark, store_dir, EngineConfig())
 
     # --- 1. EAPPEND: optimistic concurrency ------------------------------
     r0 = store.append([AppendRequest("acct-1", "Opened", b"{}",

@@ -2,14 +2,17 @@
 
 Defaults mirror the reference server's defaults
 (``crates/sierradb-server/src/config.rs:192-208``): 32 partitions,
-4 buckets, replication factor min(nodes, 3). Replication/quorum is
-delegated to the storage platform (Parquet/Delta on a replicated FS), so
-only the logical-layout knobs survive here.
+replication factor min(nodes, 3). Replication/quorum is delegated to
+the storage platform (Parquet/Delta on a replicated FS), so only the
+logical-layout knobs survive here. The reference's bucket tier (4
+buckets, ``bucket_id = partition_id % num_buckets``) is physically
+subsumed by Spark partitioning and has no knob; the session's shuffle
+width is ``session.get_spark(shuffle_partitions=...)``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -17,10 +20,6 @@ class EngineConfig:
     # Logical partition count for the event table. Reference default:
     # config.rs:200 (num_partitions = 32). partition_id = hash % num_partitions.
     num_partitions: int = 32
-    # Coarse bucket tier (reference: 4). Kept for arithmetic parity
-    # (bucket_id = partition_id % num_buckets); physically subsumed by
-    # Spark partitioning.
-    num_buckets: int = 4
     # Max stream id length (crates/sierradb/src/lib.rs:26).
     max_stream_id_len: int = 64
     # Max event name length (ShortString, format.rs:150).
@@ -40,9 +39,6 @@ class EngineConfig:
     # append reads the whole heads log, so without folding per-batch cost
     # grows O(commits since compaction) and sustained ingest degrades.
     heads_fold_threshold: int = 64
-    # Shuffle partitions for local testing; at 100 TB cluster scale this
-    # should be ~2-3x total executor cores (AQE coalesces the tail).
-    shuffle_partitions: int = 32
     # Bounded retries when an append loses the manifest-commit CAS race:
     # the loser re-reads state and re-drives validation/assignment for
     # the SAME batch — the analogue of the reference's forward/retry
@@ -55,12 +51,6 @@ class EngineConfig:
         """(rf/2)+1 — confirmations a committed write has reached
         (quorum check, sierradb-cluster/src/write/execute.rs:34-40)."""
         return self.replication_factor // 2 + 1
-
-    def bucket_for_partition(self, partition_id: int) -> int:
-        """bucket_id = partition_id % num_buckets (database.rs:66)."""
-        if self.num_buckets == 1:
-            return 0
-        return partition_id % self.num_buckets
 
 
 DEFAULT_CONFIG = EngineConfig()

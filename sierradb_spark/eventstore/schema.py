@@ -79,10 +79,10 @@ HEADS_SCHEMA = T.StructType(
 # (shape of EAppendResp, eappend.rs:256-278, + error reporting).
 # partition_key/partition_id/stream_id/event_name are nullable because
 # a REJECTED request may lack them — a NULL stream_id (poison message)
-# has no derivable partition, and the Arrow exchange under
-# applyInPandas ENFORCES declared non-nullability (IllegalStateException
-# at read), so the result schema must admit what rejects actually
-# carry. Accepted rows always have all four (validation guarantees it).
+# has no derivable partition — and the result DataFrame is built from
+# the driver's Arrow results, so the schema must admit what rejects
+# actually carry. Accepted rows always have all four (validation
+# guarantees it).
 APPEND_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("arrival", T.LongType(), False),

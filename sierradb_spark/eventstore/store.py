@@ -1,14 +1,14 @@
 """EventStore — SierraDB capabilities on a partitioned Parquet event table.
 
 Write path (mirrors the reference lifecycle, SURVEY §3.1):
-request enrichment (partition key/hash/id derivation) → per-partition
-serialized validation + gapless sequence assignment (the Spark-native
-analogue of the single-writer-thread-per-bucket discipline,
+request enrichment (partition key/hash/id derivation) → serialized
+validation + gapless sequence assignment on the driver (the analogue of
+the single-writer-thread-per-bucket discipline,
 ``crates/sierradb/src/writer_thread_pool.rs:120-150,560-645``) → one
 append commit → watermark advance.
 
-Read path: the entry point picks where a read runs, as on the write
-side. The row reads the commands serve (EGET / ESCAN / EPSCAN via
+Read path: the entry point picks where a read runs. The row reads
+the commands serve (EGET / ESCAN / EPSCAN via
 :meth:`~EventStore.get_rows` / ``scan_rows`` / ``pscan_rows``, ESVER,
 EPSEQ) run on the driver with pyarrow and start no Spark job — the
 reference's reader-thread lookup (``reader_thread_pool.rs``, read path
@@ -58,9 +58,8 @@ Scale notes (100 TB):
 - The write path NEVER scans the events table. Current stream versions
   come from the heads log (O(streams touched since last compaction)),
   folded latest-wins on the driver by ONE pyarrow group_by
-  (``_fold_heads``) that the append join (as an Arrow LocalRelation —
-  no Spark job), ESVER, the heads-log rollover, compact and
-  delete_streams share. The fold is memoized on the heads files: a
+  (``_fold_heads``) that the append, ESVER, the heads-log rollover,
+  compact and delete_streams share. The fold is memoized on the heads files: a
   commit adds one heads file, and only that file is read and folded
   into the memo (the reference's live index, ``LiveIndexSet``,
   writer_thread_pool.rs:43-54), so an append reads one heads file, not
@@ -68,22 +67,21 @@ Scale notes (100 TB):
   map (O(partitions), driver-side). Append cost is O(batch) in the events
   table regardless of its size — the reference's headline design goal
   (README.md:96-99).
-- Requests that arrive as Python objects (EAPPEND / EMAPPEND,
-  :meth:`append_transactions`) commit on the driver with zero Spark
-  jobs: validation and assignment run ``_validate_and_assign`` per
-  partition group in pandas, and pyarrow writes the events. A
-  DataFrame batch (:meth:`append_df`, streaming ingest) stays on
-  Spark. Its hot bulk path (no expected-version preconditions) is pure
-  JVM: sequence/version assignment via two window functions over one
-  hash(partition_id) exchange. ``applyInPandas`` runs the same
-  ``_validate_and_assign`` only when optimistic-concurrency checks
-  require per-partition serial replay.
-- Both paths end in one publish step (``_publish``): staged files are
-  fsynced and renamed into place, then the heads file and the manifest
-  are written driver-side. A DataFrame batch costs ~4–5 Spark jobs per
-  commit (perfbench traced ``append_df``), a driver batch none; tiny
-  state (watermarks, manifests) lives driver-side with zero Spark jobs
-  to read it.
+- Every append commits through ONE writer loop on the driver
+  (``_assign_and_commit``): ``_validate_and_assign`` validates and
+  assigns the whole batch in one pass, pyarrow writes the accepted
+  events (one file per partition), and one publish step (``_publish``)
+  fsyncs and renames the staged files into place, then writes the
+  heads file and the manifest. Requests that arrive as Python objects
+  (EAPPEND / EMAPPEND, :meth:`append_transactions`) start no Spark
+  job. A DataFrame batch (:meth:`append_df`, streaming ingest) is
+  enriched and request-validated in the JVM and collected once with
+  ``toArrow()`` — its one Spark job (perfbench traced ``append_df``).
+- So the driver holds one batch plus the heads fold: cap streaming
+  micro-batches with the source's ``maxOffsetsPerTrigger`` /
+  ``maxFilesPerTrigger`` (docs/SCALE.md has the measured batch-size
+  curve). Tiny state (watermarks, manifests) lives driver-side with
+  zero Spark jobs to read it.
 """
 
 from __future__ import annotations
@@ -98,7 +96,6 @@ from dataclasses import dataclass
 from functools import cached_property
 from typing import Callable, Iterable, Iterator, Literal, Optional, Sequence
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -152,6 +149,17 @@ _EVENT_ARROW = pa.schema(
         ("confirmation_count", pa.int32()),
     ]
 )
+# The columns the reads filter on (ESCAN, EPSCAN, EGET's event and
+# transaction lookups): the only ones the append writer keeps parquet
+# min/max statistics for. A payload's min/max would cost about two
+# payloads a file and could skip nothing.
+_STATS_COLS = [
+    "event_id",
+    "stream_id",
+    "stream_version",
+    "partition_sequence",
+    "transaction_id",
+]
 # The event columns the driver reads return. ``timestamp`` and
 # ``confirmation_count`` are not read and ``partition_id`` comes from
 # the hive directory, so Spark-written, compacted and pyarrow-written
@@ -163,16 +171,18 @@ _READ_ARROW = pa.schema(
         if f.name not in ("partition_id", "timestamp", "confirmation_count")
     ]
 )
-# _validate_and_assign's output columns that must not be left to pandas
-# inference (None-only columns would concat as object).
-_RESULT_DTYPES = {
-    "arrival": "int64",
-    "accepted": "bool",
-    "partition_id": "Int32",
-    "partition_sequence": "Int64",
-    "stream_version": "Int64",
-    "timestamp_ns": "int64",
+# The Arrow types of the append path's request and result columns.
+_ARROW_TYPES = {
+    **{f.name: f.type for f in _EVENT_ARROW},
+    "arrival": pa.int64(),
+    "txn_id": pa.string(),
+    "expected_version": pa.string(),
+    "reject_reason": pa.string(),
+    "accepted": pa.bool_(),
+    "error": pa.string(),
 }
+_REQUEST_ARROW = pa.schema([(c, _ARROW_TYPES[c]) for c in _REQUEST_COLS])
+_RESULT_ARROW = pa.schema([(c, _ARROW_TYPES[c]) for c in _RESULT_COLS])
 _PARQUET = ds.ParquetFileFormat()
 _LOCAL_FS = pafs.LocalFileSystem()
 
@@ -244,10 +254,6 @@ class _State:
         for rel in self.events_files:
             by_pid.setdefault(_partition_of(rel), []).append(rel)
         return {pid: tuple(rels) for pid, rels in by_pid.items()}
-
-
-def _int_or_none(v) -> Optional[int]:
-    return None if pd.isna(v) else int(v)
 
 
 def _partition_of(rel: str) -> int:
@@ -329,108 +335,78 @@ def _latest_heads(rows: pa.Table) -> pa.Table:
     )
 
 
-def _validate_and_assign(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Serialized per-partition validation + assignment.
+def _validate_and_assign(
+    batch: pa.Table, heads: pa.Table, watermarks: dict[int, int]
+) -> pa.Table:
+    """Serialized validation + gapless assignment of one batch: the one
+    assigner of every append path (:meth:`EventStore.append_transactions`
+    and :meth:`EventStore.append_df` / streaming ingest alike).
 
-    Runs once per ``partition_id`` group: on the driver for
-    :meth:`EventStore.append_transactions`, under applyInPandas for a
-    DataFrame batch with preconditions. Input carries
-    ``cur_stream_version`` / ``cur_partition_sequence`` columns (heads
-    as of the previous commit; NaN = empty) and ``reject_reason`` from
-    request validation. Transactions are processed in arrival order; a
-    transaction is all-or-nothing (EMAPPEND, request/emappend.rs;
-    database.rs:867-897 validates the whole txn), and a transaction with
-    any invalid request is rejected whole without consuming sequences.
+    ``batch`` has the request columns (``_REQUEST_ARROW``) with
+    ``reject_reason`` from request validation; ``heads`` are the current
+    stream heads (at least those of the batch's streams) and
+    ``watermarks`` the last assigned sequence per partition, both as of
+    the previous commit. Transactions are processed in arrival order of
+    their first request; a transaction is all-or-nothing (EMAPPEND,
+    request/emappend.rs; database.rs:867-897 validates the whole txn),
+    and a transaction with any invalid request is rejected whole
+    without consuming sequences. Returns the per-request results
+    (``_RESULT_ARROW``) in arrival order.
 
-    Pure pandas + the versions truth table — no Spark calls here; the
-    sequential loop is the *semantic* serialization point the reference
-    implements with one writer thread per bucket.
+    One pass over column lists with one version map keyed by
+    (partition_id, stream_id); a transaction's own increments live in a
+    small overlay that is merged only when the whole transaction
+    validates. Partitions are independent, so one pass over the batch
+    is the per-partition writer loop of the reference
+    (writer_thread_pool.rs:560-645) for every partition at once.
     """
-    pdf = pdf.sort_values("arrival", kind="stable")
-    cur_seq: Optional[int] = None
-    seq_head = pdf["cur_partition_sequence"].dropna()
-    if len(seq_head):
-        cur_seq = int(seq_head.iloc[0])
-    stream_heads: dict[str, Optional[int]] = {}
-    for sid, ver in zip(pdf["stream_id"], pdf["cur_stream_version"]):
-        if sid not in stream_heads:
-            stream_heads[sid] = None if pd.isna(ver) else int(ver)
-
-    out_rows = []
-
-    def _reject(rows, error: str) -> None:
-        for row in rows:
-            out_rows.append(
-                {
-                    "arrival": row.arrival,
-                    "txn_id": row.txn_id,
-                    "accepted": False,
-                    "error": error,
-                    "event_id": row.event_id,
-                    "partition_key": row.partition_key,
-                    "partition_id": row.partition_id,
-                    "partition_sequence": None,
-                    "stream_id": row.stream_id,
-                    "stream_version": None,
-                    "event_name": row.event_name,
-                    "timestamp_ns": row.timestamp_ns,
-                    "payload": row.payload,
-                    "metadata": row.metadata,
-                }
-            )
-
-    for _, txn in pdf.groupby("txn_id", sort=False):
-        rows = list(txn.itertuples(index=False))
-        # Request-validation rejection is all-or-nothing per transaction
-        # (database.rs:867-897 validates before any write).
-        reasons = [
-            r.reject_reason
-            for r in rows
-            if isinstance(r.reject_reason, str) and r.reject_reason
-        ]
-        if reasons:
-            _reject(rows, reasons[0])
-            continue
-        # Validate the whole transaction against current state, tracking
-        # in-txn version increments (a txn may append 2 events to one stream).
-        txn_heads = dict(stream_heads)
-        error = None
-        planned = []
-        for row in rows:
-            cur = txn_heads.get(row.stream_id)
-            expected = V.parse_expected_version(row.expected_version)
-            gap = V.gap_from(expected, cur)
-            if not gap.ok:
-                error = f"version conflict on {row.stream_id}: {gap.kind} by {gap.by}"
-                break
-            new_version = V.next_version(cur)
-            txn_heads[row.stream_id] = new_version
-            planned.append((row, new_version))
+    batch = batch.sort_by("arrival")
+    versions = dict(
+        zip(
+            zip(heads["partition_id"].to_pylist(), heads["stream_id"].to_pylist()),
+            heads["stream_version"].to_pylist(),
+        )
+    )
+    seqs = dict(watermarks)
+    pids = batch["partition_id"].to_pylist()
+    sids = batch["stream_id"].to_pylist()
+    expected = batch["expected_version"].to_pylist()
+    errors = [r or None for r in batch["reject_reason"].to_pylist()]
+    seq_out: list[int | None] = [None] * batch.num_rows
+    ver_out: list[int | None] = [None] * batch.num_rows
+    txns: dict[str, list[int]] = {}
+    for i, txn_id in enumerate(batch["txn_id"].to_pylist()):
+        txns.setdefault(txn_id, []).append(i)
+    for rows in txns.values():
+        error = next((errors[i] for i in rows if errors[i]), None)
+        overlay: dict[tuple, int] = {}
         if error is None:
-            stream_heads = txn_heads
-            for row, new_version in planned:
-                cur_seq = 0 if cur_seq is None else cur_seq + 1
-                out_rows.append(
-                    {
-                        "arrival": row.arrival,
-                        "txn_id": row.txn_id,
-                        "accepted": True,
-                        "error": None,
-                        "event_id": row.event_id,
-                        "partition_key": row.partition_key,
-                        "partition_id": row.partition_id,
-                        "partition_sequence": cur_seq,
-                        "stream_id": row.stream_id,
-                        "stream_version": new_version,
-                        "event_name": row.event_name,
-                        "timestamp_ns": row.timestamp_ns,
-                        "payload": row.payload,
-                        "metadata": row.metadata,
-                    }
-                )
-        else:
-            _reject(rows, error)
-    return pd.DataFrame(out_rows, columns=_RESULT_COLS)
+            for i in rows:
+                key = (pids[i], sids[i])
+                cur = overlay[key] if key in overlay else versions.get(key)
+                if expected[i] != V.ANY:
+                    gap = V.gap_from(V.parse_expected_version(expected[i]), cur)
+                    if not gap.ok:
+                        error = f"version conflict on {sids[i]}: {gap.kind} by {gap.by}"
+                        break
+                overlay[key] = ver_out[i] = V.next_version(cur)
+        if error is not None:
+            for i in rows:
+                errors[i], ver_out[i] = error, None
+            continue
+        versions.update(overlay)
+        for i in rows:
+            seq_out[i] = seqs[pids[i]] = seqs.get(pids[i], -1) + 1
+    assigned = {
+        "accepted": pa.array([e is None for e in errors], pa.bool_()),
+        "error": pa.array(errors, pa.string()),
+        "partition_sequence": pa.array(seq_out, pa.int64()),
+        "stream_version": pa.array(ver_out, pa.int64()),
+    }
+    return pa.table(
+        {c: assigned[c] if c in assigned else batch[c] for c in _RESULT_COLS},
+        schema=_RESULT_ARROW,
+    )
 
 
 class EventStore:
@@ -851,10 +827,10 @@ class EventStore:
         """The heads log of ``state`` folded latest-wins on the driver:
         max (stream_version, partition_sequence) per (partition_id,
         stream_id), plus the rows of ``extra`` (a batch's heads at
-        rollover). The one heads source: the driver append, ESVER, the
-        Spark append join, the heads-log rollover, compact and
-        delete_streams all read current stream heads through here (the
-        reference's live index, writer_thread_pool.rs:43-54).
+        rollover). The one heads source: every append, ESVER, the
+        heads-log rollover, compact and delete_streams all read current
+        stream heads through here (the reference's live index,
+        writer_thread_pool.rs:43-54).
 
         Memoized on ``state.heads_files``. Heads files are immutable, so
         the same tuple folds to the same table; a tuple that extends the
@@ -972,22 +948,20 @@ class EventStore:
     ) -> list[AppendResult]:
         """Apply a batch of transactions in arrival order, on the driver.
 
-        Batch semantics == one group-commit of the reference
-        (writer_thread_pool.rs:687-699), and like the reference's
-        writer thread it is one local handoff: the requests are already
-        Python objects, so no Spark job runs. Each partition group is
-        validated and assigned by ``_validate_and_assign`` (the function
-        :meth:`append_df` runs under applyInPandas) against the heads
-        fold and the manifest watermarks; pyarrow writes the accepted
-        events, and :meth:`_publish` commits them as it does a Spark
-        batch. tests/test_append_driver.py pins the results and the
-        stored rows equal to :meth:`append_df`'s.
+        Like the reference's writer thread it is one local handoff: the
+        requests are already Python objects, so no Spark job runs. They
+        are enriched and validated here (the Python twin of
+        ``enrich_requests``), then assigned, written and published by
+        :meth:`_assign_and_commit`, the writer loop :meth:`append_df`
+        shares. tests/test_append_driver.py pins the results and the
+        stored rows equal to :meth:`append_df`'s, whose enrichment runs
+        in the JVM.
 
         A transaction that resolves to more than one partition_id is
         rejected whole (single-partition invariant, database.rs:867-897)
-        rather than split across partition groups. A lost manifest CAS
+        rather than split across partitions. A lost manifest CAS
         re-reads the state and re-drives the same requests, up to
-        ``config.commit_retries`` times (see :meth:`_apply_batch`).
+        ``config.commit_retries`` times.
         """
         rows = []
         arrival = 0
@@ -1072,338 +1046,148 @@ class EventStore:
             rows.extend(tuple(tr) for tr in txn_rows)
         if not rows:
             return []
-        batch = pd.DataFrame(rows, columns=_REQUEST_COLS)
-        last_err: ConcurrentWriteError | None = None
-        for _attempt in range(max(1, self.config.commit_retries + 1)):
-            state = self._read_state()
-            heads = self._fold_heads(state)
-            heads = heads.filter(
-                pc.is_in(heads["stream_id"], pa.array(batch["stream_id"].unique()))
-            )
-            enr = batch.merge(
-                heads.select(["partition_id", "stream_id", "stream_version"])
-                .rename_columns(["partition_id", "stream_id", "cur_stream_version"])
-                .to_pandas(),
-                on=["partition_id", "stream_id"],
-                how="left",
-            )
-            enr["cur_partition_sequence"] = (
-                enr["partition_id"].map(state.watermarks).astype("Int64")
-            )
-            result = pd.concat(
-                [
-                    _validate_and_assign(group).astype(_RESULT_DTYPES)
-                    for _, group in enr.groupby("partition_id", sort=False)
-                ],
-                ignore_index=True,
-            ).sort_values("arrival", ignore_index=True)
-            try:
-                self._commit_rows(result[result["accepted"]], state)
-            except ConcurrentWriteError as e:
-                last_err = e  # lost the CAS: re-assign from the new head
-                continue
-            return [
-                AppendResult(
-                    accepted=bool(x.accepted),
-                    error=x.error,
-                    event_id=x.event_id,
-                    partition_id=int(x.partition_id),
-                    partition_sequence=_int_or_none(x.partition_sequence),
-                    stream_id=x.stream_id,
-                    stream_version=_int_or_none(x.stream_version),
-                )
-                for x in result.itertuples(index=False)
-            ]
-        raise last_err  # retries exhausted
+        batch = pa.table(dict(zip(_REQUEST_COLS, zip(*rows))), schema=_REQUEST_ARROW)
+        result = self._assign_and_commit(batch, self._read_state())
+        fields = list(AppendResult.__dataclass_fields__)
+        return [AppendResult(**r) for r in result.select(fields).to_pylist()]
 
     def append_df(self, requests: DataFrame) -> DataFrame:
         """Batch append from a DataFrame of request rows (the connector
         path — sources/connectors.py): columns ``stream_id, event_name``
         plus optional payload/metadata/expected_version/timestamp_ms/
-        partition_key/event_id/txn_id. Enrichment and validation are
-        JVM-side (streaming/ingest.py: invalid requests are routed to
-        rejected results, never executor exceptions); returns the
-        per-request result DataFrame.
-
-        When the caller supplies no ``expected_version`` column (bulk
-        ingest), assignment runs on the pure-JVM fast path — no Python
-        in the hot loop at all.
+        partition_key/event_id/txn_id. Enrichment and request validation
+        are JVM-side (streaming/ingest.py: invalid requests are routed
+        to rejected results, never executor exceptions); the enriched
+        batch is collected once and committed on the driver by
+        :meth:`_apply_batch`. Returns the per-request result DataFrame,
+        built from Arrow on the driver (no further Spark job to read).
         """
         from sierradb_spark.streaming.ingest import enrich_requests
 
-        fast = (
-            "expected_version" not in requests.columns
-            and not self.config.strict_versioning
-        )
         enriched = enrich_requests(requests, self.config)
-        return self._apply_batch(enriched.select(*_REQUEST_COLS), fast=fast)
+        return self._apply_batch(enriched.select(*_REQUEST_COLS))
 
     def _apply_batch(
         self,
         batch: DataFrame,
-        fast: bool,
         batch_token: str | None = None,
         pre_commit: "Callable[[DataFrame], None] | None" = None,
     ) -> DataFrame:
-        """Validate + assign + commit one batch. Returns per-request results.
+        """Validate + assign + commit one enriched DataFrame batch (the
+        request columns). Returns the per-request results.
 
-        One localCheckpoint pins the batch (so the non-deterministic
-        generated ids are evaluated exactly once); everything downstream
-        — assignment, the events write, the heads aggregation — reuses
-        those cached blocks. Current stream versions come from the heads
-        log, never the events table: :meth:`_fold_heads` folds it on the
-        driver and the batch joins it as an Arrow LocalRelation — no
-        Spark job, O(streams since compaction), not O(table).
+        The batch is collected once with ``toArrow()`` — the one Spark
+        job of the append. The collect is the pin: the non-deterministic
+        generated ids and ``arrival`` are evaluated exactly once, and
+        everything after — assignment, the events write, the batch
+        heads, every retry — runs on the driver over the same rows
+        (:meth:`_assign_and_commit`, shared with
+        :meth:`append_transactions`). The driver therefore holds one
+        batch plus the heads fold; streaming sources cap a micro-batch
+        with ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger``.
 
         ``batch_token``: idempotence key for streaming replays. If the
         token is already in the manifest chain, the batch committed in a
         previous incarnation (crash landed between manifest-rename and
-        checkpoint-commit) and is skipped whole — the analogue of the
-        reference's single-assignment writer thread, where a client
-        retry cannot double-append (writer_thread_pool.rs:560-645), and
-        of Delta's txn-id check.
+        checkpoint-commit) and is skipped whole, before the collect —
+        the analogue of the reference's single-assignment writer thread,
+        where a client retry cannot double-append
+        (writer_thread_pool.rs:560-645), and of Delta's txn-id check.
 
-        Losing the manifest CAS race does NOT fail the batch: the writer
-        re-reads state and re-drives validation/assignment for the same
-        (pinned) batch, up to ``config.commit_retries`` times — the
-        analogue of the reference's forward/retry loop when a write
-        lands on a stale coordinator (write/execute.rs:19-68). Only
-        after exhausting retries does :class:`ConcurrentWriteError`
-        escape. A lost attempt's staged files stay unreferenced
-        (invisible) and are swept by :meth:`compact`, identical to a
-        crashed writer's leftovers.
-
-        ``pre_commit``: optional callback invoked with the pinned
-        per-request result DataFrame AFTER validation/assignment but
-        BEFORE the manifest commit. Side effects that must survive a
+        ``pre_commit``: optional callback invoked with the per-request
+        result DataFrame AFTER validation/assignment but BEFORE the
+        manifest commit. Side effects that must survive a
         crash-then-replay (the streaming dead-letter write: a replayed
-        batch whose token is already in the chain takes the fast path
-        above and never re-materializes its rejects) belong here — the
-        callback must be replay-idempotent, because a lost CAS retry
-        re-runs it with the recomputed result.
+        batch whose token is already in the chain is skipped above and
+        never re-materializes its rejects) belong here — the callback
+        must be replay-idempotent, because a lost CAS retry re-runs it
+        with the recomputed result.
         """
-        # ONE chain resolution serves both the replay fast path and the
-        # first commit attempt (a second listing+fold per batch is pure
-        # overhead); retry attempts re-read because a lost CAS means the
-        # chain moved under us.
         state = self._read_state()
-        if batch_token is not None:
-            # Replay fast path: if this micro-batch's token is already in
-            # the manifest chain (crash landed between manifest-rename
-            # and checkpoint-commit), skip BEFORE materializing anything
-            # — a replayed 100k-row batch must cost a manifest read, not
-            # a full pipeline run. The retry-path re-check below still
-            # guards the race where a concurrent writer replaying the
-            # same source commits the token between here and our CAS.
-            if batch_token in state.batch_tokens:
-                return self.spark.createDataFrame([], APPEND_RESULT_SCHEMA)
-        # Lazy pin: the checkpoint materializes inside the FIRST job that
-        # consumes the batch (the precondition probe or the assignment
-        # pass) instead of costing a job of its own — one fewer fixed
-        # per-commit job on the hot ingest path. Once materialized, the
-        # non-deterministic generated ids are frozen: every later
-        # consumer (retry attempts after a lost CAS race included) reads
-        # the same pinned blocks.
-        batch = batch.localCheckpoint(eager=False)
-        if not fast and not self.config.strict_versioning:
-            # Common connector case: an expected_version column exists but
-            # every row is 'any' (no preconditions anywhere). One cheap
-            # limit(1) probe on the pinned batch upgrades it to the pure-
-            # JVM path — the per-partition serial replay exists only to
-            # order precondition checks, which such a batch doesn't have.
-            has_precondition = (
-                batch.where(
-                    F.col("expected_version").isNotNull()
-                    & (F.col("expected_version") != "any")
-                )
-                .limit(1)
-                .count()
-                > 0
-            )
-            fast = not has_precondition
+        if batch_token is not None and batch_token in state.batch_tokens:
+            return self._result_frame(_RESULT_ARROW.empty_table())
+        rows = batch.toArrow().select(_REQUEST_COLS).cast(_REQUEST_ARROW)
+        result = self._assign_and_commit(
+            rows,
+            state,
+            batch_token,
+            pre_commit and (lambda r: pre_commit(self._result_frame(r))),
+        )
+        return self._result_frame(result)
+
+    def _result_frame(self, result: pa.Table) -> DataFrame:
+        """Per-request results as a DataFrame (an Arrow LocalRelation)."""
+        return self.spark.createDataFrame(result, APPEND_RESULT_SCHEMA)
+
+    def _assign_and_commit(
+        self,
+        batch: pa.Table,
+        state: _State,
+        batch_token: str | None = None,
+        pre_commit: "Callable[[pa.Table], None] | None" = None,
+    ) -> pa.Table:
+        """Assign ``batch`` (request rows) on top of ``state`` and commit
+        it: the one writer loop of every append. Returns the per-request
+        results (``_RESULT_ARROW``, arrival order).
+
+        Batch semantics == one group-commit of the reference
+        (writer_thread_pool.rs:687-699). Each attempt validates against
+        the heads fold of the batch's streams and the manifest
+        watermarks (:func:`_validate_and_assign`), calls ``pre_commit``
+        with the results, and writes and publishes the accepted events
+        (:meth:`_commit_rows`). Losing the manifest CAS race does NOT
+        fail the batch: the writer re-reads state and re-drives
+        validation/assignment for the same rows, up to
+        ``config.commit_retries`` times — the analogue of the
+        reference's forward/retry loop when a write lands on a stale
+        coordinator (write/execute.rs:19-68). Only after exhausting
+        retries does :class:`ConcurrentWriteError` escape. A lost
+        attempt's staged files stay unreferenced (invisible) and are
+        swept by :meth:`compact`, identical to a crashed writer's
+        leftovers. A retry that finds ``batch_token`` committed (by the
+        racing writer replaying the same source) returns no results.
+        """
+        streams = pc.unique(batch["stream_id"])
         last_err: ConcurrentWriteError | None = None
-        for _attempt in range(max(1, self.config.commit_retries + 1)):
-            if _attempt > 0:
+        for attempt in range(max(1, self.config.commit_retries + 1)):
+            if attempt:
                 state = self._read_state()  # the chain moved: re-resolve
                 if batch_token is not None and batch_token in state.batch_tokens:
-                    # Committed by the racing writer we just lost to,
-                    # replaying the same source.
-                    return self.spark.createDataFrame([], APPEND_RESULT_SCHEMA)
-            # Same resolved state as the watermarks below: heads and
-            # watermark base always reflect ONE commit. An Arrow
-            # createDataFrame is a true LocalRelation with an exact size
-            # (empty for an empty heads log, which folds the join away),
-            # so autoBroadcastJoinThreshold picks broadcast or sort-merge
-            # and a broadcast build collects locally — no Spark job.
-            heads = self.spark.createDataFrame(
-                self._fold_heads(state)
-                .select(["partition_id", "stream_id", "stream_version"])
-                .rename_columns(["partition_id", "stream_id", "cur_stream_version"])
-            )
-            enr = batch.join(heads, ["partition_id", "stream_id"], "left")
-            base_seq = (
-                self._wm_col(state.watermarks)
-                if state.watermarks
-                else F.lit(-1).cast("long")
-            )
-            if fast:
-                # Pin the assignment once: the events write, the heads
-                # aggregation, and the caller's inspection of the results
-                # all reuse the same blocks instead of re-running the
-                # join+window. Lazy pin (same trick as the batch pin
-                # above): the FIRST consumer — the events write inside
-                # _commit — materializes the blocks in its own pass, so
-                # the assignment costs no standalone job. Everything
-                # after reads the pinned blocks; recomputation of a
-                # not-yet-cached partition is deterministic anyway
-                # because the inputs are the pinned batch + the heads
-                # log on disk.
-                result = self._assign_fast(enr, base_seq).localCheckpoint(
-                    eager=False
-                )
-            else:
-                enr = enr.withColumn(
-                    "cur_partition_sequence",
-                    F.when(base_seq >= 0, base_seq).cast("long"),
-                )
-                # One group per partition: the Spark-native single-writer-
-                # per-partition discipline. Shuffle size = batch size.
-                result = (
-                    enr.groupBy("partition_id")
-                    .applyInPandas(
-                        _validate_and_assign, schema=APPEND_RESULT_SCHEMA
-                    )
-                    # Lazy pin (see the fast path above): the events
-                    # write materializes it; later consumers reuse the
-                    # blocks.
-                    .localCheckpoint(eager=False)
-                )
+                    return _RESULT_ARROW.empty_table()
+            heads = self._fold_heads(state)
+            heads = heads.filter(pc.is_in(heads["stream_id"], streams))
+            result = _validate_and_assign(batch, heads, state.watermarks)
             try:
                 if pre_commit is not None:
                     pre_commit(result)
-                self._commit(result.where(F.col("accepted")), state, batch_token)
+                self._commit_rows(result, state, batch_token)
                 return result
             except ConcurrentWriteError as e:
-                # Lost the CAS: another writer advanced the chain under
-                # us. Versions/sequences we assigned may now be stale —
-                # recompute everything from the new head and try again.
-                last_err = e
-                continue
+                last_err = e  # lost the CAS: re-assign from the new head
         raise last_err  # retries exhausted
 
-    @staticmethod
-    def _assign_fast(enr: DataFrame, base_seq) -> DataFrame:
-        """Pure-JVM gapless assignment for precondition-free batches.
-
-        partition_sequence: a running count of VALID rows over
-        hash(partition_id) — ONE exchange; stream_version: the same
-        running count per (partition_id, stream_id), which Catalyst
-        satisfies with a sort under the same exchange (hash(pid)
-        clusters (pid, stream) too — no second shuffle; verified in
-        tests/test_plans.py). Rejected requests (request validation)
-        contribute 0 to both running counts and take NULL assignments,
-        so they never consume sequences — row-for-row the same output
-        as filtering them out before a row_number, but in ONE branch:
-        the old valid/rejected union doubled the pinned result's
-        partition count (and with it every downstream job's task count
-        — the events write, the heads aggregation, the caller's count)
-        and the plan Catalyst re-analyzes per batch.
-        """
-        ws = (
-            Window.partitionBy("partition_id")
-            .orderBy("arrival")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wv = (
-            Window.partitionBy("partition_id", "stream_id")
-            .orderBy("arrival")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        valid = F.col("reject_reason").isNull()
-        vflag = F.when(valid, F.lit(1)).otherwise(F.lit(0))
-        return (
-            enr.withColumn(
-                "partition_sequence",
-                F.when(valid, base_seq + F.sum(vflag).over(ws)).cast("long"),
-            )
-            .withColumn(
-                "stream_version",
-                F.when(
-                    valid,
-                    F.coalesce(F.col("cur_stream_version"), F.lit(-1))
-                    + F.sum(vflag).over(wv),
-                ).cast("long"),
-            )
-            .withColumn("accepted", valid)
-            .withColumn("error", F.col("reject_reason"))
-            .select(*_RESULT_COLS)
-        )
-
-    def _commit(
-        self, accepted: DataFrame, state: _State, batch_token: str | None = None
+    def _commit_rows(
+        self, result: pa.Table, state: _State, batch_token: str | None = None
     ) -> None:
-        """Stage a Spark batch's accepted events (one Spark job), then
-        publish them (:meth:`_publish`); the batch heads are ONE small
-        driver-bound aggregation (O(streams in batch) rows), run only
-        when some event was accepted."""
+        """Stage the accepted events of ``result`` with pyarrow, one file
+        per partition sorted by (stream_id, stream_version) so row-group
+        stats make stream scans skip (replaces the reference's
+        per-segment stream index, SURVEY §2.4 X2), then publish them
+        (:meth:`_publish`)."""
         token = secrets.token_hex(8)
-        staging = os.path.join(self.staging_path, token)
-        events = accepted.select(
-            "event_id",
-            "partition_key",
-            "partition_id",
-            "partition_sequence",
-            "stream_id",
-            "stream_version",
-            "event_name",
-            # Integer division: a double ns/1000 rounds up to the next µs
-            # for about one ns value in eight near today's clock.
-            F.timestamp_micros(F.expr("timestamp_ns div 1000")).alias("timestamp"),
-            "timestamp_ns",
-            "payload",
-            "metadata",
-            F.col("txn_id").alias("transaction_id"),
+        acc = result.filter(result["accepted"])
+        derived = {
+            "timestamp": pc.divide(acc["timestamp_ns"], 1000),  # integer µs
+            "transaction_id": acc["txn_id"],
             # A manifest-committed write is quorum-durable by platform
             # guarantee; record the quorum the configured rf implies.
-            F.lit(self.config.write_quorum).cast("int").alias("confirmation_count"),
-        )
-        # Sort within files by (stream_id, stream_version) so row-group
-        # stats make stream scans skip (replaces the reference's
-        # per-segment stream index, SURVEY §2.4 X2).
-        (
-            events.sortWithinPartitions("stream_id", "stream_version")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(staging)
-        )
-        self._publish(
-            state,
-            token,
-            lambda: accepted.groupBy("partition_id", "stream_id")
-            .agg(
-                F.max("stream_version").alias("stream_version"),
-                F.max("partition_sequence").alias("partition_sequence"),
-            )
-            .toArrow(),
-            batch_token,
-        )
-
-    def _commit_rows(self, accepted: pd.DataFrame, state: _State) -> None:
-        """Stage a driver batch's accepted events with pyarrow, one
-        file per partition sorted like the Spark writer's, then publish
-        them (:meth:`_publish`)."""
-        if accepted.empty:
-            return  # nothing accepted; no commit needed
-        token = secrets.token_hex(8)
-        events = pa.Table.from_pandas(
-            accepted.assign(
-                timestamp=accepted["timestamp_ns"] // 1000,
-                transaction_id=accepted["txn_id"],
-                confirmation_count=self.config.write_quorum,
+            "confirmation_count": pa.repeat(
+                pa.scalar(self.config.write_quorum, pa.int32()), acc.num_rows
             ),
-            schema=_EVENT_ARROW,
-            preserve_index=False,
-        )
+        }
+        events = pa.table(
+            {c: derived[c] if c in derived else acc[c] for c in _EVENT_ARROW.names}
+        ).cast(_EVENT_ARROW)
         for pid in pc.unique(events["partition_id"]).to_pylist():
             part_dir = os.path.join(self.staging_path, token, f"partition_id={pid}")
             os.makedirs(part_dir)
@@ -1413,17 +1197,19 @@ class EventStore:
                 .drop_columns(["partition_id"]),
                 os.path.join(part_dir, "part-0.parquet"),
                 # Without the Arrow schema blob and dictionary pages a
-                # one-event file is no larger than the Spark writer's.
+                # one-event file is no larger than Spark's writer makes
+                # it; min/max stats only for the columns reads filter on.
                 store_schema=False,
                 use_dictionary=False,
+                write_statistics=_STATS_COLS,
             )
-        self._publish(state, token, lambda: _latest_heads(events))
+        self._publish(state, token, _latest_heads(events), batch_token)
 
     def _publish(
         self,
         state: _State,
         token: str,
-        batch_heads: Callable[[], pa.Table],
+        heads: pa.Table,
         batch_token: str | None = None,
     ) -> None:
         """Commit the events staged under ``_staging/<token>/`` on top
@@ -1431,8 +1217,8 @@ class EventStore:
 
         1. Staged files move into ``events/partition_id=N/``
            (:meth:`_place_staged`, fsynced).
-        2. ``batch_heads()`` gives the batch's per-stream heads; the
-           heads file and the manifest are written driver-side, and the
+        2. ``heads`` are the batch's per-stream heads; the heads
+           file and the manifest are written driver-side, and the
            per-partition watermarks advance to the heads' maxima.
         3. The manifest publish is the commit point. A crash anywhere
            before it leaves only unreferenced files — invisible to every
@@ -1465,7 +1251,6 @@ class EventStore:
                 }
             )
             return
-        heads = batch_heads()
         # Heads-log rollover (W8 for the heads log): every append reads
         # the whole heads log, so fold it into ONE file once enough
         # commits accumulate — per-batch cost stays O(batch + streams/

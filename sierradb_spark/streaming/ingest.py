@@ -9,8 +9,9 @@ trigger interval is the group-commit knob (reference defaults: 5 ms /
 50 events / 4 KB, ``config.rs:206-208``).
 
 Scale design:
-- Per-batch cost is O(batch) — heads recovery prunes to touched
-  partitions, the validation shuffle moves only batch rows. Append
+- Per-batch cost is O(batch) — enrichment and request validation run
+  in the JVM, then the batch is collected once and assigned and
+  committed on the driver against the memoized heads fold. Append
   throughput is independent of table size (the reference's headline
   design goal, README.md:96-99).
 - Exactly-once: the streaming checkpoint records source offsets per
@@ -395,7 +396,13 @@ def prune_dead_letters(store: EventStore, dead_letter_dir: str) -> dict:
 
 
 class StreamIngest:
-    """Continuous ingest into an EventStore table via foreachBatch."""
+    """Continuous ingest into an EventStore table via foreachBatch.
+
+    Each micro-batch is collected to the driver once and committed
+    there (``EventStore._apply_batch``): the driver holds one batch plus
+    the heads fold, so cap micro-batches with the source's
+    ``maxOffsetsPerTrigger`` (Kafka) / ``maxFilesPerTrigger`` (files);
+    docs/SCALE.md has the measured batch-size curve."""
 
     def __init__(self, store: EventStore) -> None:
         self.store = store
@@ -449,7 +456,7 @@ class StreamIngest:
         recomputed reject set shrank to empty clears the stale letters
         instead of leaving them; reading the root dir yields a
         ``batch`` partition column. Costs one write job per micro-batch
-        over result blocks the commit pass shares; disabled by
+        over the driver-built result; disabled by
         default. Consumers should read through
         :func:`read_dead_letters`, which filters out the one artifact
         the pre-commit ordering can leave behind (letters for a batch
@@ -476,10 +483,6 @@ class StreamIngest:
         ).hexdigest()[:16]
 
         def process(batch: DataFrame, batch_id: int) -> None:
-            fast = (
-                "expected_version" not in batch.columns
-                and not self.store.config.strict_versioning
-            )
             enriched = enrich_requests(batch, self.store.config)
             req_cols = [
                 "arrival",
@@ -506,9 +509,8 @@ class StreamIngest:
                 # and a now-empty reject set must CLEAR the previous
                 # attempt's letters — a conditional write would leave
                 # them stale. Overwrite-of-empty truncates the batch
-                # dir through the same fs-agnostic writer; it also
-                # drops the old emptiness probe job (the pass it takes
-                # shares blocks with the events write that follows).
+                # dir through the same fs-agnostic writer, and needs no
+                # emptiness probe job.
                 # Each letter carries its batch_token: the pre-commit
                 # ordering means a crash between this write and the
                 # manifest rename leaves an ORPHAN dir (letters for a
@@ -523,7 +525,6 @@ class StreamIngest:
 
             result = self.store._apply_batch(
                 enriched.select(*req_cols),
-                fast=fast,
                 batch_token=f"{query_key}-{batch_id}",
                 pre_commit=(
                     write_dead_letters if dead_letter_dir is not None else None

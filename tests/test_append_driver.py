@@ -1,13 +1,17 @@
 """The driver append path (``EventStore.append_transactions``) against
-the Spark one (``append_df``), and the commit step they share.
+the DataFrame one (``append_df``), and the commit step they share.
 
-EAPPEND / EMAPPEND requests are validated, assigned and written on the
-driver; a DataFrame batch is assigned by ``_assign_fast`` (no
-preconditions) or by ``_validate_and_assign`` under applyInPandas. The
-differential test pins the three to the same results and the same
-stored table. The crash tests pin the publish step: a failed manifest
-publish leaves no visible trace, and every file a writer places is
-fsynced, with its directory, before the manifest names it.
+Both paths run one writer loop (``_assign_and_commit``: one assigner,
+one pyarrow events writer, one publish). What differs is enrichment:
+EAPPEND / EMAPPEND requests are enriched and validated in Python on the
+driver, a DataFrame batch by ``enrich_requests`` in the JVM before its
+one collect. The differential test pins the two enrichments to the same
+results and the same stored table, with and without preconditions. The
+overlay test pins the assigner's per-transaction rollback, the stats
+test the writer's parquet statistics. The crash tests pin the publish
+step: a failed manifest publish leaves no visible trace, and every file
+a writer places is fsynced, with its directory, before the manifest
+names it.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ import random
 import uuid
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from sierradb_spark import ids
@@ -25,7 +30,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 from sierradb_spark.eventstore.commit_backend import LinkCAS
 from sierradb_spark.eventstore.schema import EVENT_SCHEMA
 
-CFG = EngineConfig(shuffle_partitions=8)
+CFG = EngineConfig()
 EVENT_COLS = [f.name for f in EVENT_SCHEMA.fields]
 DF_SCHEMA = (
     "stream_id string, event_name string, payload binary, metadata binary, "
@@ -187,25 +192,97 @@ def test_driver_append_matches_append_df(spark, tmp_path, monkeypatch):
     def fresh(name):
         return EventStore(spark, str(tmp_path / name), CFG)
 
-    # Precondition-free: driver vs append_df's _assign_fast.
-    drv, fast = fresh("drv"), fresh("fast")
+    # Precondition-free.
+    drv, df_st = fresh("drv"), fresh("df")
     batches = _halves(txns, txn_uuids)
     got = _driver(drv, batches, monkeypatch)
-    assert got == _via_df(spark, fast, batches, expected=False)
+    assert got == _via_df(spark, df_st, batches, expected=False)
     rejected = [g for g in got if not g[0]]
     assert [g[1] for g in rejected] == ["transaction spans multiple partitions"] * 2
-    _assert_same_table(drv, fast)
+    _assert_same_table(drv, df_st)
 
-    # Satisfiable and stale preconditions: driver vs applyInPandas.
+    # Satisfiable, `any`/`exists` and stale preconditions.
     pre, accepted = _with_expected(txns, random.Random(12))
     assert accepted.count(False) > 4
-    drv_pre, slow = fresh("drv_pre"), fresh("slow")
+    drv_pre, df_pre = fresh("drv_pre"), fresh("df_pre")
     batches = _halves(pre, txn_uuids)
     got = _driver(drv_pre, batches, monkeypatch)
-    assert got == _via_df(spark, slow, batches, expected=True)
+    assert got == _via_df(spark, df_pre, batches, expected=True)
     assert [g[0] for g in got] == accepted
     assert any("version conflict" in (g[1] or "") for g in got)
-    _assert_same_table(drv_pre, slow)
+    _assert_same_table(drv_pre, df_pre)
+
+
+def test_failed_transaction_leaves_heads_unchanged(spark, tmp_path):
+    """A multi-event transaction that fails on a later event rolls back
+    the versions of its earlier events: the next transactions of the
+    same batch validate against the unchanged heads, on both paths."""
+    pk = str(ids.partition_key_for_stream("o-1"))
+    seed = [AppendRequest("o-1", "Seed"), AppendRequest("o-2", "Seed", partition_key=pk)]
+    txns = [
+        [
+            AppendRequest("o-2", "T1a", expected_version="0", partition_key=pk),
+            AppendRequest("o-1", "T1b", expected_version="0"),
+            AppendRequest("o-1", "T1c", expected_version="0"),  # stale: 1 in txn
+        ],
+        [AppendRequest("o-2", "T2", expected_version="0", partition_key=pk)],
+        [AppendRequest("o-1", "T3", expected_version="0")],
+    ]
+    want = [(False, None, None)] * 3 + [(True, 1, 2), (True, 1, 3)]
+    conflict = "version conflict on o-1: ahead by 1"
+
+    drv = EventStore(spark, str(tmp_path / "drv"), CFG)
+    drv.append(seed)
+    res = drv.append_transactions(txns)
+    assert [(r.accepted, r.stream_version, r.partition_sequence) for r in res] == want
+    assert [r.error for r in res[:3]] == [conflict] * 3
+
+    via_df = EventStore(spark, str(tmp_path / "df"), CFG)
+    via_df.append(seed)
+    rows = [
+        (f"t{n}", r.stream_id, r.event_name, r.expected_version, r.partition_key)
+        for n, txn in enumerate(txns)
+        for r in txn
+    ]
+    res = via_df.append_df(
+        spark.createDataFrame(
+            rows,
+            "txn_id string, stream_id string, event_name string, "
+            "expected_version string, partition_key string",
+        )
+    )
+    got = [
+        (x["accepted"], x["stream_version"], x["partition_sequence"], x["error"])
+        for x in res.orderBy("arrival").collect()
+    ]
+    assert got == [w + (conflict if not w[0] else None,) for w in want]
+    got = via_df.scan("o-2", partition_key=pk).collect()
+    assert [r["event_name"] for r in got] == ["Seed", "T2"]
+
+
+def test_writer_keeps_stats_only_for_filtered_columns(spark, tmp_path):
+    """The append writer stores parquet min/max statistics for the
+    columns reads filter on, and none for payloads and the rest."""
+    store = EventStore(spark, str(tmp_path / "stats"), CFG)
+    store.append([AppendRequest("st-1", "E", payload=b"x" * 300)])
+    store.append_df(
+        spark.createDataFrame(
+            [("st-2", "E", b"y" * 300)],
+            "stream_id string, event_name string, payload binary",
+        )
+    )
+    files = store._read_state().events_files
+    assert len(files) == 2
+    for rel in files:
+        md = pq.ParquetFile(os.path.join(store.events_path, rel)).metadata
+        chunks = [md.row_group(0).column(i) for i in range(md.num_columns)]
+        assert {c.path_in_schema for c in chunks if c.is_stats_set} == {
+            "event_id",
+            "stream_id",
+            "stream_version",
+            "partition_sequence",
+            "transaction_id",
+        }, rel
 
 
 class _FailOnce(LinkCAS):

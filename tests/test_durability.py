@@ -42,7 +42,7 @@ def store(spark, tmp_path, request):
     return EventStore(
         spark,
         str(tmp_path / "store"),
-        EngineConfig(shuffle_partitions=8),
+        EngineConfig(),
         commit_backend=backend,
     )
 
@@ -57,8 +57,8 @@ def _events_count(store):
 def test_manifest_cas_rejects_stale_commit(spark, tmp_path):
     """A writer holding stale state cannot publish over the new head."""
     path = str(tmp_path / "store")
-    s1 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
-    s2 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
+    s1 = EventStore(spark, path, EngineConfig())
+    s2 = EventStore(spark, path, EngineConfig())
     s1.append([AppendRequest("cas-a", "E0")])
     stale = s2._read_state()  # head == 1
     s1.append([AppendRequest("cas-a", "E1")])  # head moves to 2
@@ -81,8 +81,8 @@ def test_two_instances_interleaved_appends_no_loss(spark, tmp_path):
     """Sequential interleaving through two instances is safe: each append
     re-reads the manifest head, so the chain stays gapless."""
     path = str(tmp_path / "store")
-    s1 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
-    s2 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
+    s1 = EventStore(spark, path, EngineConfig())
+    s2 = EventStore(spark, path, EngineConfig())
     for i, s in enumerate([s1, s2, s1, s2]):
         s.append([AppendRequest("interleave", f"E{i}")])
     assert [r["stream_version"] for r in s1.scan("interleave").collect()] == [0, 1, 2, 3]
@@ -108,16 +108,16 @@ def test_apply_batch_skips_committed_token(spark, store):
     ]
     enriched = enrich_requests(_request_df(spark, 5), store.config).select(*cols)
     enriched = enriched.localCheckpoint(eager=True)  # stable ids across calls
-    r1 = store._apply_batch(enriched, fast=True, batch_token="qk-0")
+    r1 = store._apply_batch(enriched, batch_token="qk-0")
     assert r1.count() == 5
     assert _events_count(store) == 5
     # Replay of the same micro-batch (crash between manifest-rename and
     # checkpoint-commit): token already committed -> skipped whole.
-    r2 = store._apply_batch(enriched, fast=True, batch_token="qk-0")
+    r2 = store._apply_batch(enriched, batch_token="qk-0")
     assert r2.count() == 0
     assert _events_count(store) == 5
     # A different token is a genuinely new batch.
-    store._apply_batch(enriched, fast=True, batch_token="qk-1")
+    store._apply_batch(enriched, batch_token="qk-1")
     assert _events_count(store) == 10
 
 
@@ -161,9 +161,9 @@ def test_compact_carries_tokens_forward(spark, store):
     ]
     enriched = enrich_requests(_request_df(spark, 3), store.config).select(*cols)
     enriched = enriched.localCheckpoint(eager=True)
-    store._apply_batch(enriched, fast=True, batch_token="survives-compact")
+    store._apply_batch(enriched, batch_token="survives-compact")
     store.compact()
-    r = store._apply_batch(enriched, fast=True, batch_token="survives-compact")
+    r = store._apply_batch(enriched, batch_token="survives-compact")
     assert r.count() == 0
     assert _events_count(store) == 3
 
@@ -260,7 +260,7 @@ def test_confirmation_count_tracks_replication_factor(spark, tmp_path):
         st = EventStore(
             spark,
             str(tmp_path / f"rf{rf}"),
-            EngineConfig(shuffle_partitions=8, replication_factor=rf),
+            EngineConfig(replication_factor=rf),
         )
         st.append([AppendRequest("q", "E")])
         [row] = st.events().select("confirmation_count").collect()
@@ -294,7 +294,7 @@ def test_heads_log_folds_at_threshold(spark, tmp_path):
     st = EventStore(
         spark,
         str(tmp_path / "fold"),
-        EngineConfig(shuffle_partitions=8, heads_fold_threshold=4),
+        EngineConfig(heads_fold_threshold=4),
     )
     for b in range(7):
         st.append([AppendRequest(f"hf-{i}", f"E{b}") for i in range(3)])
@@ -373,7 +373,7 @@ def test_retry_on_commit_race_both_writers_commit(spark, tmp_path):
     — no ConcurrentWriteError escaping, no manual re-drive (the
     reference's forward/retry loop, write/execute.rs:19-68)."""
     path = str(tmp_path / "store")
-    cfg = EngineConfig(shuffle_partitions=8)
+    cfg = EngineConfig()
     s1 = EventStore(spark, path, cfg)
 
     class RacingBackend(LinkCAS):
@@ -404,7 +404,7 @@ def test_retry_exhaustion_raises(spark, tmp_path):
     """A writer that loses every attempt (pathological livelock) must
     surface ConcurrentWriteError rather than loop forever."""
     path = str(tmp_path / "store")
-    cfg = EngineConfig(shuffle_partitions=8, commit_retries=2)
+    cfg = EngineConfig(commit_retries=2)
     s1 = EventStore(spark, path, cfg)
 
     class AlwaysLose(LinkCAS):

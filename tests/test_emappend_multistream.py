@@ -13,7 +13,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def test_multi_stream_atomic_txn(store):

@@ -163,7 +163,7 @@ def test_windowed_counts_over_event_schema_stream(spark, tmp_path):
     from sierradb_spark.streaming import windowed_event_counts
 
     store = EventStore(
-        spark, str(tmp_path / "st"), EngineConfig(shuffle_partitions=8)
+        spark, str(tmp_path / "st"), EngineConfig()
     )
     store.append([AppendRequest(f"w-{i % 3}", "E") for i in range(12)])
     src = (

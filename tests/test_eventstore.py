@@ -22,7 +22,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def test_append_and_scan_roundtrip(store):

@@ -1,12 +1,14 @@
-"""Fast-path (pure-JVM) bulk ingest: invariants match the pandas path.
+"""Bulk ingest through ``append_df``: the writer invariants hold.
 
-The fast path activates when a DataFrame append carries no
-expected_version column (no optimistic-concurrency preconditions) —
-assignment is two window functions over one hash(partition_id)
-exchange. These tests pin the invariants the reference enforces in its
-writer thread (writer_thread_pool.rs:560-645): gapless per-partition
-sequences, gapless per-stream versions, cross-batch continuity, and
-request-validation rejections that consume nothing.
+A DataFrame batch without an expected_version column (no
+optimistic-concurrency preconditions) is enriched and request-validated
+in the JVM, then assigned and committed on the driver by the same
+writer loop EAPPEND uses (tests/test_append_driver.py pins the JVM
+enrichment against the Python one). These tests pin the invariants the
+reference enforces in its writer thread (writer_thread_pool.rs:560-645):
+gapless per-partition sequences, gapless per-stream versions,
+cross-batch continuity, and request-validation rejections (NULL stream
+ids included) that consume nothing and stay in the results.
 """
 
 import pytest
@@ -18,7 +20,7 @@ from sierradb_spark.eventstore import EventStore
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def _mk_reqs(spark, n, streams, tag=""):
@@ -94,33 +96,6 @@ def test_fast_path_rejects_bad_event_id_without_consuming(store, spark):
     _assert_gapless(store)
 
 
-def test_fast_path_single_exchange_single_branch(store, spark):
-    """The fast-path assignment plan: ONE hash(partition_id) exchange
-    serves both running-count windows (hash(pid) clusters (pid, stream)
-    too), and there is no valid/rejected Union — rejected rows ride the
-    same branch with NULL assignments, so the pinned result keeps the
-    shuffle's partition count instead of doubling it."""
-    from pyspark.sql import functions as F
-
-    from sierradb_spark.eventstore.store import APPEND_REQUEST_SCHEMA
-    from sierradb_spark.plans import plan_features
-    from sierradb_spark.streaming.ingest import enrich_requests
-
-    enriched = enrich_requests(_mk_reqs(spark, 50, 5), store.config)
-    cols = [f.name for f in APPEND_REQUEST_SCHEMA.fields]
-    # a literal head column isolates the assignment plan from the
-    # heads-log join subtree (whose broadcast has exchanges of its own)
-    enr = enriched.select(*cols).withColumn(
-        "cur_stream_version", F.lit(None).cast("long")
-    )
-    result = store._assign_fast(enr, F.lit(-1).cast("long"))
-    f = plan_features(result)
-    assert f["exchanges"] == 1, f["plan"][:2000]
-    assert "Union" not in f["plan"], "valid/rejected union is back"
-    # two window specs under the one exchange
-    assert f["plan"].count("windowspecdefinition") >= 2
-
-
 def test_fast_path_matches_row_api_semantics(store, spark):
     """Interleave fast-path DF appends with row-API appends: shared
     version/sequence spaces stay consistent."""
@@ -186,7 +161,7 @@ def test_append_df_caller_grouped_transactions(spark, tmp_path):
     from sierradb_spark.eventstore import EventStore
 
     store = EventStore(
-        spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8)
+        spark, str(tmp_path / "store"), EngineConfig()
     )
     rows = [
         # txn A: two valid events on one stream (one partition) -> accepted

@@ -1,24 +1,22 @@
 """The write path's one heads fold (``EventStore._fold_heads``).
 
-Every reader of current stream heads on the write path — the driver
-append, the ``append_df`` join, the heads-log rollover, compact and
-delete_streams — goes through one latest-wins fold of the heads log.
-These tests pin it against the events table it summarizes (the two must
-agree after every kind of commit), and pin ``append_df``'s heads
-relation to a driver-local plan with no Spark job, at a stream count
-past any inline-literal cap.
+Every reader of current stream heads on the write path — every append,
+the heads-log rollover, compact and delete_streams — goes through one
+latest-wins fold of the heads log. These tests pin it against the
+events table it summarizes (the two must agree after every kind of
+commit), and pin a one-row ``append_df`` to one Spark job and no Spark
+read of heads/, at a stream count past any inline-literal cap.
 """
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
+from pyspark.sql import DataFrameReader
 from pyspark.sql import functions as F
-from pyspark.sql.classic.dataframe import DataFrame
 
 from sierradb_spark.config import EngineConfig
 from sierradb_spark.eventstore import AppendRequest, EventStore
+from sierradb_spark.eventstore.schema import APPEND_RESULT_SCHEMA
 
 # Stream ids carrying SQL quoting/escaping bytes and non-ASCII text.
 ODD = ["q'uote", "back\\slash", "tu),(ple", "ünï-流", "plain"]
@@ -50,7 +48,7 @@ def test_heads_fold_matches_events_oracle(spark, tmp_path):
     store = EventStore(
         spark,
         str(tmp_path / "store"),
-        EngineConfig(shuffle_partitions=8, heads_fold_threshold=3),
+        EngineConfig(heads_fold_threshold=3),
     )
     # Plain appends, several events per stream in one batch.
     store.append([AppendRequest(s, "E", payload=b"x") for s in ODD + ODD[:3]])
@@ -94,44 +92,38 @@ def test_heads_fold_matches_events_oracle(spark, tmp_path):
     _check_fold_matches_events(store, gone=[ODD[2]])
 
 
-def test_append_heads_relation_is_local_with_no_job(spark, tmp_path, monkeypatch):
-    """Past 1024 streams, the relation a one-row ``append_df`` joins its
-    batch against is a LocalRelation (no parquet scan of heads/), and
-    nothing up to that join starts a Spark job."""
-    store = EventStore(spark, str(tmp_path / "big"), EngineConfig(shuffle_partitions=8))
+def test_one_row_append_df_starts_one_job(spark, tmp_path, monkeypatch, jobs_started):
+    """Past 1024 streams, a one-row ``append_df`` starts exactly one
+    Spark job (the collect of its enriched batch): no Spark read of
+    heads/, and on the driver only the heads file the previous commit
+    added is read into the memoized fold. The result is a DataFrame
+    with ``APPEND_RESULT_SCHEMA``."""
+    store = EventStore(spark, str(tmp_path / "big"), EngineConfig())
     ids = F.concat(F.lit("b-"), F.col("id").cast("string"))
     store.append_df(
         spark.range(1100).select(ids.alias("stream_id"), F.lit("E").alias("event_name"))
     )
     assert store.heads().count() == 1100  # past the old 1024-stream cap
+    [last_heads] = store._read_state().heads_files
 
     one = spark.createDataFrame([("b-7", "E")], "stream_id string, event_name string")
-    sc = spark.sparkContext
-    group = f"heads-{uuid.uuid4().hex}"
-    seen = []
-    join = DataFrame.join
+    spark_reads, driver_reads = [], []
+    parquet, read_heads = DataFrameReader.parquet, EventStore._read_heads
 
-    def spy(self, other, on=None, how=None):
-        if on == KEY:
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            seen.append((other, len(sc.statusTracker().getJobIdsForGroup(group))))
-        return join(self, other, on, how)
+    def spy_parquet(self, *paths, **kw):
+        spark_reads.extend(paths)
+        return parquet(self, *paths, **kw)
 
-    monkeypatch.setattr(DataFrame, "join", spy)
-    keys = ("spark.jobGroup.id", "spark.job.description")
-    old = [sc.getLocalProperty(k) for k in keys]
-    sc.setJobGroup(group, "append")
-    try:
-        res = store.append_df(one)
-    finally:
-        for k, v in zip(keys, old):
-            sc.setLocalProperty(k, v)
+    def spy_read_heads(self, rels):
+        driver_reads.append(list(rels))
+        return read_heads(self, rels)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+    monkeypatch.setattr(EventStore, "_read_heads", spy_read_heads)
+    res, jobs = jobs_started(lambda: store.append_df(one))
+    assert jobs == 1, f"a one-row append_df started {jobs} Spark job(s)"
+    assert not any(store.heads_path in p for p in spark_reads), spark_reads
+    assert driver_reads == [[last_heads]], driver_reads
+    assert res.schema == APPEND_RESULT_SCHEMA
     res = res.collect()
     assert res[0]["accepted"] and res[0]["stream_version"] == 1, res
-
-    assert len(seen) == 1, seen
-    heads, jobs = seen[0]
-    plan = heads._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.startswith("LocalRelation"), plan
-    assert "parquet" not in plan.lower() and store.heads_path not in plan, plan
-    assert jobs == 0, f"building the heads relation started {jobs} Spark job(s)"

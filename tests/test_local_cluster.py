@@ -124,7 +124,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 
 store_dir = tempfile.mkdtemp(prefix="lc-store-")
 try:
-    store = EventStore(spark, store_dir, EngineConfig(shuffle_partitions=4))
+    store = EventStore(spark, store_dir, EngineConfig())
     res = store.append(
         [AppendRequest(f"s{i}", "E", b"{}", expected_version="empty") for i in range(8)]
     )

@@ -140,7 +140,7 @@ def _tokened_apply(store: EventStore, spark, reqs, token: str, pre_commit=None):
         .localCheckpoint(eager=True)  # pin generated ids across replays
     )
     return enriched, store._apply_batch(
-        enriched, fast=False, batch_token=token, pre_commit=pre_commit
+        enriched, batch_token=token, pre_commit=pre_commit
     )
 
 
@@ -208,7 +208,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
     rng = random.Random(seed)
     model = DatabaseModel()
     store = EventStore(
-        spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8)
+        spark, str(tmp_path / "store"), EngineConfig()
     )
 
     def check_stream(stream_id: str) -> None:
@@ -514,7 +514,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                 )
                 assert got_dead == want_dead, f"dead letters diverged step {step}"
             replay = store._apply_batch(
-                enriched, fast=False, batch_token=token,
+                enriched, batch_token=token,
                 pre_commit=dlq_hook if dlq is not None else None,
             )
             # EVERY tokened batch commits its token — an all-rejected
@@ -581,7 +581,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
             from sierradb_spark.eventstore.store import ConcurrentWriteError
 
             s2 = EventStore(
-                spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8)
+                spark, str(tmp_path / "store"), EngineConfig()
             )
             stale = s2._read_state()
             s = rng.choice(STREAMS)
@@ -610,7 +610,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                     )
         else:  # ReopenDatabase (commands.rs:332): fresh handle, same path
             store = EventStore(
-                spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8)
+                spark, str(tmp_path / "store"), EngineConfig()
             )
 
     # final full sweep

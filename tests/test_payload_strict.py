@@ -15,7 +15,7 @@ from sierradb_spark.functions.payload import (
 
 
 def test_payload_json_roundtrip(spark, tmp_path):
-    store = EventStore(spark, str(tmp_path / "s"), EngineConfig(shuffle_partitions=8))
+    store = EventStore(spark, str(tmp_path / "s"), EngineConfig())
     store.append(
         [
             AppendRequest("p1", "E", payload=b'{"name":"ada","age":36}'),
@@ -36,7 +36,7 @@ def test_strict_versioning_rejects_any_exists(spark, tmp_path):
     store = EventStore(
         spark,
         str(tmp_path / "s2"),
-        EngineConfig(shuffle_partitions=8, strict_versioning=True),
+        EngineConfig(strict_versioning=True),
     )
     # eappend.rs:180-188: strict mode rejects ANY/EXISTS before routing
     with pytest.raises(ValueError, match="strict"):

@@ -35,7 +35,7 @@ def test_validate_invariants_healthy_store(spark, tmp_path):
     from sierradb_spark.eventstore import AppendRequest, EventStore
 
     store = EventStore(
-        spark, str(tmp_path / "vs"), EngineConfig(shuffle_partitions=8)
+        spark, str(tmp_path / "vs"), EngineConfig()
     )
     for b in range(2):
         store.append([AppendRequest(f"v-{i % 4}", f"E{b}") for i in range(12)])

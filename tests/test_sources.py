@@ -21,7 +21,7 @@ from sierradb_spark.streaming import StreamIngest
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def test_json_source_append_df(store, spark, tmp_path):

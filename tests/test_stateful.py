@@ -12,7 +12,7 @@ from sierradb_spark.streaming.stateful import StreamHeadsMaintainer
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def _expected_heads(store):

@@ -27,7 +27,7 @@ from sierradb_spark.eventstore.store import SnapshotExpiredError
 @pytest.fixture()
 def store(spark, tmp_path):
     return EventStore(
-        spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8)
+        spark, str(tmp_path / "store"), EngineConfig()
     )
 
 

@@ -17,7 +17,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def test_scan_batches_pagination(store):
@@ -67,7 +67,7 @@ def test_stats_snapshot(spark, tmp_path):
     from sierradb_spark.eventstore import AppendRequest, EventStore
 
     store = EventStore(
-        spark, str(tmp_path / "st"), EngineConfig(shuffle_partitions=8)
+        spark, str(tmp_path / "st"), EngineConfig()
     )
     assert store.stats()["total_events"] == 0
     store.append([AppendRequest(f"s-{i % 5}", "E") for i in range(20)])
@@ -102,7 +102,7 @@ def test_zorder_compaction_rowgroup_skipping(spark, tmp_path):
             st = EventStore(
                 spark,
                 str(tmp_path / f"z_{order}"),
-                EngineConfig(shuffle_partitions=8),
+                EngineConfig(),
             )
             # One explicit partition key -> one hive dir, one deep file.
             pk = "f0e1d2c3-0000-5000-8000-000000000001"

@@ -23,7 +23,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 from sierradb_spark.eventstore.store import SnapshotExpiredError
 from test_append_driver import _FailOnce
 
-CFG = EngineConfig(shuffle_partitions=8, heads_fold_threshold=4)
+CFG = EngineConfig(heads_fold_threshold=4)
 STREAMS = [f"m-{i}" for i in range(6)]
 KEY = ("partition_id", "stream_id")
 

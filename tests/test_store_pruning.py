@@ -24,7 +24,7 @@ from sierradb_spark.eventstore import AppendRequest, EventStore
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    s = EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    s = EventStore(spark, str(tmp_path / "store"), EngineConfig())
     s.append([AppendRequest(f"s-{i}", "E", payload=b"x") for i in range(40)])
     return s
 
@@ -78,7 +78,7 @@ def _pid(stream_id: str, n: int = 32) -> int:
 def wide_store(spark, tmp_path):
     """More events files than Spark's parallel-listing threshold (32):
     one batch over all 32 partitions, then single-event appends."""
-    s = EventStore(spark, str(tmp_path / "wide"), EngineConfig(shuffle_partitions=8))
+    s = EventStore(spark, str(tmp_path / "wide"), EngineConfig())
     first: dict[int, str] = {}
     i = 0
     while len(first) < 32:

@@ -32,7 +32,7 @@ from sierradb_spark.streaming import (
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return EventStore(spark, str(tmp_path / "store"), EngineConfig(shuffle_partitions=8))
+    return EventStore(spark, str(tmp_path / "store"), EngineConfig())
 
 
 def _fill(store: EventStore, n: int = 120, n_streams: int = 12, batches: int = 3):
@@ -587,7 +587,7 @@ def test_chaos_writers_compaction_subscription(spark, tmp_path, seed):
 
     rng = _random.Random(seed)
     path = str(tmp_path / "store")
-    s1 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
+    s1 = EventStore(spark, path, EngineConfig())
     # s2 publishes through the object-store backend against the same
     # chain — the mid-migration scenario; mutual exclusion must hold
     # across backends because both implement create-iff-absent on the
@@ -595,7 +595,7 @@ def test_chaos_writers_compaction_subscription(spark, tmp_path, seed):
     s2 = EventStore(
         spark,
         path,
-        EngineConfig(shuffle_partitions=8),
+        EngineConfig(),
         commit_backend=ConditionalPut(),
     )
     sub = Subscription(s1, PartitionMatcher())
@@ -620,7 +620,7 @@ def test_chaos_writers_compaction_subscription(spark, tmp_path, seed):
             )
         elif roll < 0.8:  # subscriber/store restart: fresh objects, same
             # checkpoint + cursor — delivery must resume exactly
-            s1 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
+            s1 = EventStore(spark, path, EngineConfig())
             sub = Subscription(s1, PartitionMatcher())
         else:  # tail
             sub.catchup(delivered.extend, ckpt)
@@ -640,8 +640,8 @@ def test_chaos_sink_delivery(spark, tmp_path):
 
     rng = _random.Random(23)
     path = str(tmp_path / "store")
-    s1 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
-    s2 = EventStore(spark, path, EngineConfig(shuffle_partitions=8))
+    s1 = EventStore(spark, path, EngineConfig())
+    s2 = EventStore(spark, path, EngineConfig())
     sub = Subscription(s1, PartitionMatcher())
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
     appended = 0
@@ -963,14 +963,12 @@ def test_dead_letters_are_durable_before_the_manifest_commit(
             os.path.join(dlq, "batch=0")
         )
 
-    store._apply_batch(enriched, fast=False, batch_token=token,
-                       pre_commit=hook)
+    store._apply_batch(enriched, batch_token=token, pre_commit=hook)
     assert seen == {"token_pre_committed": False}
     assert token in store._read_state().batch_tokens  # commit landed after
 
     # replay of the committed token: fast path, empty result, letters kept
-    replay = store._apply_batch(enriched, fast=False, batch_token=token,
-                                pre_commit=hook)
+    replay = store._apply_batch(enriched, batch_token=token, pre_commit=hook)
     assert replay.count() == 0
     dead = spark.read.parquet(dlq)
     assert [bytes(r["payload"]) for r in dead.collect()] == [b"poison"]
@@ -998,16 +996,14 @@ def test_all_rejected_batch_commits_its_token(store, spark, tmp_path):
     ).localCheckpoint(eager=True)
     token = "allrej-0"
     head_before = store._read_state().commit
-    res = store._apply_batch(enriched, fast=False, batch_token=token)
+    res = store._apply_batch(enriched, batch_token=token)
     assert res.where("accepted").count() == 0 and res.count() == 2
     state = store._read_state()
     assert token in state.batch_tokens  # empty manifest carried it
     assert state.commit == head_before + 1
     assert store.events().count() == 0  # ...but added no events
     # replay: fast skip, no recompute
-    assert store._apply_batch(
-        enriched, fast=False, batch_token=token
-    ).count() == 0
+    assert store._apply_batch(enriched, batch_token=token).count() == 0
 
 
 def test_dead_letter_orphans_hidden_and_pruned(store, spark, tmp_path):
@@ -1191,7 +1187,7 @@ def test_checkpoint_reset_recipe_prune_retired_dlq_first(
         spark.createDataFrame([("ok-2", "Evt", b"p", b"", "any")], schema),
         store.config,
     ).select(*cols)
-    store._apply_batch(enriched, fast=False, batch_token=f"{key}-1")
+    store._apply_batch(enriched, batch_token=f"{key}-1")
     assert f"{key}-1" in store._read_state().batch_tokens
 
     # Demonstrate the window the recipe closes: had the orphan (id 1)
@@ -1239,8 +1235,8 @@ def test_evicted_token_letters_survive_by_monotone_rule(
     # never committing "qk-5" — but 5 < 7, so the monotone rule proves
     # a batch=5 letters dir committed. An id ABOVE the max (qk-9) is an
     # orphan.
-    store._apply_batch(enriched, fast=False, batch_token="qk-3")
-    store._apply_batch(enriched, fast=False, batch_token="qk-7")
+    store._apply_batch(enriched, batch_token="qk-3")
+    store._apply_batch(enriched, batch_token="qk-7")
     dlq = str(tmp_path / "dlq")
     letters = spark.createDataFrame(
         [("bad", b"x", "reason")],
