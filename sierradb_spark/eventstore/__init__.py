@@ -1,9 +1,8 @@
-from sierradb_spark.eventstore.schema import EVENT_SCHEMA, APPEND_REQUEST_SCHEMA
+from sierradb_spark.eventstore.schema import EVENT_SCHEMA
 from sierradb_spark.eventstore.store import AppendRequest, AppendResult, EventStore
 
 __all__ = [
     "EVENT_SCHEMA",
-    "APPEND_REQUEST_SCHEMA",
     "AppendRequest",
     "AppendResult",
     "EventStore",

@@ -9,9 +9,9 @@ are deliberate and Spark-native:
 - ``confirmation_count`` is retained for schema parity but writes are
   quorum-durable at commit time on Spark storage, so it is fixed at
   quorum (see SURVEY §4.3 — the watermark table carries visibility).
-- UUIDs are canonical lowercase strings (readable, prunable via
-  bit-extraction column exprs in ids.py); BINARY(16) would save space at
-  100 TB — revisit when storage dominates.
+- UUIDs are canonical lowercase strings (readable; the partition hash
+  bits ids.py extracts route a lookup to its partition); BINARY(16) would
+  save space at 100 TB — revisit when storage dominates.
 """
 
 from __future__ import annotations
@@ -33,32 +33,6 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("metadata", T.BinaryType(), True),
         T.StructField("transaction_id", T.StringType(), False),
         T.StructField("confirmation_count", T.IntegerType(), False),
-    ]
-)
-
-# Input rows for the append path (shape of EAppend/EMAPPEND requests,
-# request/eappend.rs:49-58). ``arrival`` is the batch-local arrival order —
-# the serialization order within a micro-batch (the reference serializes
-# through one writer thread per bucket; writer_thread_pool.rs:120-150).
-APPEND_REQUEST_SCHEMA = T.StructType(
-    [
-        T.StructField("arrival", T.LongType(), False),
-        T.StructField("txn_id", T.StringType(), False),
-        T.StructField("stream_id", T.StringType(), False),
-        T.StructField("event_name", T.StringType(), False),
-        T.StructField("expected_version", T.StringType(), False),
-        T.StructField("event_id", T.StringType(), True),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("timestamp_ns", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("metadata", T.BinaryType(), True),
-        # Non-null = request failed validation (bad event_id hash, length
-        # limits, malformed expected_version, multi-partition txn...);
-        # carried through assignment so the whole transaction is rejected
-        # without consuming sequences (database.rs:867-897 validates the
-        # txn before any write).
-        T.StructField("reject_reason", T.StringType(), True),
     ]
 )
 

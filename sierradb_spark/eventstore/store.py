@@ -1,11 +1,12 @@
 """EventStore — SierraDB capabilities on a partitioned Parquet event table.
 
 Write path (mirrors the reference lifecycle, SURVEY §3.1):
-request enrichment (partition key/hash/id derivation) → serialized
-validation + gapless sequence assignment on the driver (the analogue of
-the single-writer-thread-per-bucket discipline,
+request enrichment and validation (partition key/hash/id derivation,
+``streaming.ingest.enrich_requests``) → serialized transaction
+validation + gapless sequence assignment (the analogue of the
+single-writer-thread-per-bucket discipline,
 ``crates/sierradb/src/writer_thread_pool.rs:120-150,560-645``) → one
-append commit → watermark advance.
+append commit → watermark advance, all on the driver.
 
 Read path: the entry point picks where a read runs. The row reads
 the commands serve (EGET / ESCAN / EPSCAN via
@@ -67,16 +68,17 @@ Scale notes (100 TB):
   map (O(partitions), driver-side). Append cost is O(batch) in the events
   table regardless of its size — the reference's headline design goal
   (README.md:96-99).
-- Every append commits through ONE writer loop on the driver
-  (``_assign_and_commit``): ``_validate_and_assign`` validates and
-  assigns the whole batch in one pass, pyarrow writes the accepted
-  events (one file per partition), and one publish step (``_publish``)
-  fsyncs and renames the staged files into place, then writes the
-  heads file and the manifest. Requests that arrive as Python objects
-  (EAPPEND / EMAPPEND, :meth:`append_transactions`) start no Spark
-  job. A DataFrame batch (:meth:`append_df`, streaming ingest) is
-  enriched and request-validated in the JVM and collected once with
-  ``toArrow()`` — its one Spark job (perfbench traced ``append_df``).
+- Every append is enriched by ONE function (``enrich_requests``, over
+  an Arrow table of raw requests) and commits through ONE writer loop
+  on the driver (``_assign_and_commit``): ``_validate_and_assign``
+  validates and assigns the whole batch in one pass, pyarrow writes
+  the accepted events (one file per partition), and one publish step
+  (``_publish``) fsyncs and renames the staged files into place, then
+  writes the heads file and the manifest. Requests that arrive as
+  Python objects (EAPPEND / EMAPPEND, :meth:`append_transactions`)
+  start no Spark job. A DataFrame batch (:meth:`append_df`, streaming
+  ingest) is collected raw, once, with ``toArrow()`` — its one Spark
+  job (perfbench traced ``append_df``).
 - So the driver holds one batch plus the heads fold: cap streaming
   micro-batches with the source's ``maxOffsetsPerTrigger`` /
   ``maxFilesPerTrigger`` (docs/SCALE.md has the measured batch-size
@@ -109,7 +111,6 @@ from sierradb_spark import versions as V
 from sierradb_spark.config import DEFAULT_CONFIG, EngineConfig
 from sierradb_spark.eventstore.commit_backend import fsync_dir, fsync_file
 from sierradb_spark.eventstore.schema import (
-    APPEND_REQUEST_SCHEMA,
     APPEND_RESULT_SCHEMA,
     EVENT_SCHEMA,
     HEADS_SCHEMA,
@@ -119,7 +120,6 @@ RangeValue = int | Literal["-", "+"]
 
 _EVENT_COLS = [f.name for f in EVENT_SCHEMA.fields]
 _RESULT_COLS = [f.name for f in APPEND_RESULT_SCHEMA.fields]
-_REQUEST_COLS = [f.name for f in APPEND_REQUEST_SCHEMA.fields]
 # HEADS_SCHEMA as the heads files store it.
 _HEADS_ARROW = pa.schema(
     [
@@ -171,17 +171,14 @@ _READ_ARROW = pa.schema(
         if f.name not in ("partition_id", "timestamp", "confirmation_count")
     ]
 )
-# The Arrow types of the append path's request and result columns.
+# The Arrow types of the append path's result columns.
 _ARROW_TYPES = {
     **{f.name: f.type for f in _EVENT_ARROW},
     "arrival": pa.int64(),
     "txn_id": pa.string(),
-    "expected_version": pa.string(),
-    "reject_reason": pa.string(),
     "accepted": pa.bool_(),
     "error": pa.string(),
 }
-_REQUEST_ARROW = pa.schema([(c, _ARROW_TYPES[c]) for c in _REQUEST_COLS])
 _RESULT_ARROW = pa.schema([(c, _ARROW_TYPES[c]) for c in _RESULT_COLS])
 _PARQUET = ds.ParquetFileFormat()
 _LOCAL_FS = pafs.LocalFileSystem()
@@ -342,16 +339,17 @@ def _validate_and_assign(
     assigner of every append path (:meth:`EventStore.append_transactions`
     and :meth:`EventStore.append_df` / streaming ingest alike).
 
-    ``batch`` has the request columns (``_REQUEST_ARROW``) with
-    ``reject_reason`` from request validation; ``heads`` are the current
-    stream heads (at least those of the batch's streams) and
-    ``watermarks`` the last assigned sequence per partition, both as of
-    the previous commit. Transactions are processed in arrival order of
-    their first request; a transaction is all-or-nothing (EMAPPEND,
-    request/emappend.rs; database.rs:867-897 validates the whole txn),
-    and a transaction with any invalid request is rejected whole
-    without consuming sequences. Returns the per-request results
-    (``_RESULT_ARROW``) in arrival order.
+    ``batch`` holds the request rows ``enrich_requests`` returns;
+    ``heads`` are the current stream heads (at least those of the
+    batch's streams) and ``watermarks`` the last assigned sequence per
+    partition, both as of the previous commit. Transactions are
+    processed in arrival order of their first request; a transaction is
+    all-or-nothing (EMAPPEND, request/emappend.rs; database.rs:867-897
+    validates the whole txn): one with an invalid request (the first
+    reason in arrival order applies to all its requests) or spanning
+    more than one partition is rejected whole without consuming
+    sequences. Returns the per-request results (``_RESULT_ARROW``) in
+    arrival order.
 
     One pass over column lists with one version map keyed by
     (partition_id, stream_id); a transaction's own increments live in a
@@ -379,6 +377,8 @@ def _validate_and_assign(
         txns.setdefault(txn_id, []).append(i)
     for rows in txns.values():
         error = next((errors[i] for i in rows if errors[i]), None)
+        if error is None and len({pids[i] for i in rows}) > 1:
+            error = "transaction spans multiple partitions"
         overlay: dict[tuple, int] = {}
         if error is None:
             for i in rows:
@@ -949,104 +949,35 @@ class EventStore:
         """Apply a batch of transactions in arrival order, on the driver.
 
         Like the reference's writer thread it is one local handoff: the
-        requests are already Python objects, so no Spark job runs. They
-        are enriched and validated here (the Python twin of
-        ``enrich_requests``), then assigned, written and published by
-        :meth:`_assign_and_commit`, the writer loop :meth:`append_df`
-        shares. tests/test_append_driver.py pins the results and the
-        stored rows equal to :meth:`append_df`'s, whose enrichment runs
-        in the JVM.
+        requests are already Python objects, so no Spark job runs. Each
+        transaction gets one txn id, flagged as an implicit commit when
+        it holds one event (id.rs:75-89); the requests are enriched and
+        validated by ``streaming.ingest.enrich_requests``, the one
+        enrichment :meth:`append_df` runs too, then assigned, written
+        and published by :meth:`_assign_and_commit`.
 
-        A transaction that resolves to more than one partition_id is
-        rejected whole (single-partition invariant, database.rs:867-897)
-        rather than split across partitions. A lost manifest CAS
-        re-reads the state and re-drives the same requests, up to
-        ``config.commit_retries`` times.
+        A request that fails validation raises ``ValueError`` with its
+        reason (the first one in arrival order) and nothing is
+        committed. A transaction that resolves to more than one
+        partition_id is rejected whole (single-partition invariant,
+        database.rs:867-897) rather than split across partitions. A
+        lost manifest CAS re-reads the state and re-drives the same
+        requests, up to ``config.commit_retries`` times.
         """
+        from sierradb_spark.streaming import ingest  # looked up per call
+
         rows = []
-        arrival = 0
-        now_ns = time.time_ns()
         for txn in transactions:
-            txn_id = str(
-                ids.set_uuid_flag(_uuid.uuid4(), len(txn) == 1)
-            )  # implicit-commit flag for single-event txns (id.rs:75-89)
-            txn_rows = []
-            txn_pids = set()
-            for r in txn:
-                pkey = r.partition_key or str(ids.partition_key_for_stream(r.stream_id))
-                phash = ids.uuid_to_partition_hash(pkey)
-                pid = ids.partition_id_for_hash(phash, self.config.num_partitions)
-                txn_pids.add(pid)
-                # Canonicalize a caller-supplied id: the stored column
-                # must hold the canonical lowercase-hyphenated form or
-                # get()'s canonicalized lookup could never find it
-                # (uppercase / no-dash / urn: encodings parse fine).
-                if r.event_id:
-                    try:
-                        eid = str(_uuid.UUID(str(r.event_id)))
-                    except ValueError:
-                        raise ValueError(
-                            f"event_id {r.event_id!r} is not a UUID"
-                        )
-                else:
-                    eid = None
-                eid = eid or str(
-                    ids.uuid_v7_with_partition_hash(
-                        phash,
-                        timestamp_ms=(
-                            r.timestamp_ms
-                            if r.timestamp_ms is not None
-                            else now_ns // 1_000_000
-                        ),
-                        rand12=secrets.randbits(12),
-                        rand46=secrets.randbits(46),
-                    )
-                )
-                if not ids.validate_event_id(eid, phash):
-                    raise ValueError(
-                        f"event_id {eid} does not embed partition hash {phash}"
-                    )  # database.rs:880
-                if not (1 <= len(r.stream_id) <= self.config.max_stream_id_len):
-                    raise ValueError("stream_id must be 1-64 chars")  # lib.rs:26,36-50
-                if "\x00" in r.stream_id:
-                    raise ValueError("stream_id cannot contain null bytes")  # lib.rs:45-47
-                if len(r.event_name) > self.config.max_event_name_len:
-                    raise ValueError("event_name too long")  # format.rs:150
-                expected = V.parse_expected_version(r.expected_version)
-                if self.config.strict_versioning and not V.is_strict_allowed(expected):
-                    raise ValueError(
-                        "strict versioning rejects 'any'/'exists'"
-                    )  # eappend.rs:180-188
-                txn_rows.append(
-                    [
-                        arrival,
-                        txn_id,
-                        r.stream_id,
-                        r.event_name,
-                        r.expected_version,
-                        eid,
-                        pkey,
-                        pid,
-                        (
-                            r.timestamp_ms * 1_000_000  # ms→ns, eappend.rs:203-217
-                            if r.timestamp_ms is not None
-                            else now_ns
-                        ),
-                        r.payload,
-                        r.metadata,
-                        None,  # reject_reason
-                    ]
-                )
-                arrival += 1
-            if len(txn_pids) > 1:
-                # Reject rather than raise: the batch may carry other
-                # valid transactions (EMAPPEND single-partition rule).
-                for tr in txn_rows:
-                    tr[-1] = "transaction spans multiple partitions"
-            rows.extend(tuple(tr) for tr in txn_rows)
+            txn_id = str(ids.set_uuid_flag(_uuid.uuid4(), len(txn) == 1))
+            rows += [{**vars(r), "txn_id": txn_id} for r in txn]
         if not rows:
             return []
-        batch = pa.table(dict(zip(_REQUEST_COLS, zip(*rows))), schema=_REQUEST_ARROW)
+        batch = ingest.enrich_requests(
+            pa.Table.from_pylist(rows, schema=ingest.REQUEST_COLUMNS), self.config
+        )
+        reasons = batch["reject_reason"].drop_null()
+        if len(reasons):
+            raise ValueError(reasons[0].as_py())
         result = self._assign_and_commit(batch, self._read_state())
         fields = list(AppendResult.__dataclass_fields__)
         return [AppendResult(**r) for r in result.select(fields).to_pylist()]
@@ -1055,34 +986,32 @@ class EventStore:
         """Batch append from a DataFrame of request rows (the connector
         path — sources/connectors.py): columns ``stream_id, event_name``
         plus optional payload/metadata/expected_version/timestamp_ms/
-        partition_key/event_id/txn_id. Enrichment and request validation
-        are JVM-side (streaming/ingest.py: invalid requests are routed
-        to rejected results, never executor exceptions); the enriched
-        batch is collected once and committed on the driver by
-        :meth:`_apply_batch`. Returns the per-request result DataFrame,
-        built from Arrow on the driver (no further Spark job to read).
+        partition_key/event_id/txn_id. The frame is collected once and
+        enriched, validated and committed on the driver by
+        :meth:`_apply_batch` (invalid requests are routed to rejected
+        results, never exceptions). Returns the per-request result
+        DataFrame, built from Arrow on the driver (no further Spark job
+        to read).
         """
-        from sierradb_spark.streaming.ingest import enrich_requests
-
-        enriched = enrich_requests(requests, self.config)
-        return self._apply_batch(enriched.select(*_REQUEST_COLS))
+        return self._apply_batch(requests)
 
     def _apply_batch(
         self,
-        batch: DataFrame,
+        requests: DataFrame,
         batch_token: str | None = None,
         pre_commit: "Callable[[DataFrame], None] | None" = None,
     ) -> DataFrame:
-        """Validate + assign + commit one enriched DataFrame batch (the
-        request columns). Returns the per-request results.
+        """Enrich + validate + assign + commit one DataFrame batch of raw
+        requests (``streaming.ingest.REQUEST_COLUMNS``; other columns are
+        not collected). Returns the per-request results.
 
         The batch is collected once with ``toArrow()`` — the one Spark
-        job of the append. The collect is the pin: the non-deterministic
-        generated ids and ``arrival`` are evaluated exactly once, and
-        everything after — assignment, the events write, the batch
-        heads, every retry — runs on the driver over the same rows
-        (:meth:`_assign_and_commit`, shared with
-        :meth:`append_transactions`). The driver therefore holds one
+        job of the append. Everything after runs on the driver over the
+        collected rows: enrichment (``streaming.ingest.enrich_requests``,
+        shared with :meth:`append_transactions`; ``arrival`` is the row
+        order of the collect, and generated ids are drawn once), then
+        assignment, the events write, the batch heads and every retry
+        (:meth:`_assign_and_commit`). The driver therefore holds one
         batch plus the heads fold; streaming sources cap a micro-batch
         with ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger``.
 
@@ -1103,12 +1032,16 @@ class EventStore:
         must be replay-idempotent, because a lost CAS retry re-runs it
         with the recomputed result.
         """
+        from sierradb_spark.streaming import ingest  # looked up per call
+
         state = self._read_state()
         if batch_token is not None and batch_token in state.batch_tokens:
             return self._result_frame(_RESULT_ARROW.empty_table())
-        rows = batch.toArrow().select(_REQUEST_COLS).cast(_REQUEST_ARROW)
+        raw = requests.select(
+            *[c for c in requests.columns if c in ingest.REQUEST_COLUMNS.names]
+        ).toArrow()
         result = self._assign_and_commit(
-            rows,
+            ingest.enrich_requests(raw, self.config),
             state,
             batch_token,
             pre_commit and (lambda r: pre_commit(self._result_frame(r))),

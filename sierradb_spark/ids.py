@@ -16,17 +16,20 @@ Reference semantics (all cited against /root/reference/):
 - UUID flag bit: MSB of byte 8 (bit 65 counted from the MSB side), used
   to mark implicit-commit transactions (``id.rs:75-98``).
 
-These are pure-Python (driver-side / ingest-side); the hash *extraction*
-is also provided as a Column expression so EGET can prune partitions
-JVM-side without a UDF.
+The scalar functions are the reference implementation (one id at a
+time, on ``uuid.UUID``); the ``*_bytes`` / :func:`uuid_strings` group
+computes the same ids for a whole request batch at once over NumPy
+arrays of raw UUID bytes, for ``streaming.ingest.enrich_requests``.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import uuid as _uuid
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
 
 # uuid5(NAMESPACE_DNS, "sierradb.tqwewe.com") — id.rs:8-9
 NAMESPACE_PARTITION_KEY = _uuid.UUID("219bd637-e279-53e9-9e2b-eabe5d9120cc")
@@ -69,19 +72,6 @@ def uuid_v7_with_partition_hash(
     return _uuid.UUID(int=val)
 
 
-def new_event_id(partition_hash: int) -> _uuid.UUID:
-    """Production event-id generator (non-deterministic)."""
-    import secrets
-    import time
-
-    return uuid_v7_with_partition_hash(
-        partition_hash,
-        timestamp_ms=int(time.time() * 1000),
-        rand12=secrets.randbits(12),
-        rand46=secrets.randbits(46),
-    )
-
-
 def validate_event_id(event_id: _uuid.UUID | str, partition_hash: int) -> bool:
     """Event IDs must embed the routing hash. id.rs:71-73, database.rs:880.
     A string that is not a UUID at all is invalid, not a crash."""
@@ -111,127 +101,75 @@ def get_uuid_flag(u: _uuid.UUID) -> bool:
     return (u.bytes[8] & 0x80) != 0
 
 
-# --- Column-expression variants (JVM-side, no UDF) ---------------------------
+# --- batch variants: (n, 16) uint8 arrays of big-endian UUID bytes ----------
+
+# Two lowercase hex digits per byte value, and the character positions
+# of the 32 digits in the 36-character 8-4-4-4-12 form.
+_HEX_DIGITS = np.frombuffer(
+    b"".join(b"%02x" % i for i in range(256)), np.uint8
+).reshape(256, 2)
+_DIGIT_POS = [i for i in range(36) if i not in (8, 13, 18, 23)]
 
 
-def uuid_hash_col(uuid_str_col: Column | str) -> Column:
-    """Column expr extracting bits 46-61 from a canonical UUID string.
-
-    The 16 embedded bits span hex nibbles: the UUID's 128-bit value
-    >> 46 & 0xFFFF. Hex digit i (0-indexed from the left, dashes removed)
-    holds bits (127-4i-3 .. 127-4i). Bits 61..46 live in hex digits
-    16..20 (5 nibbles, shifted). Cheapest correct route: take hex chars
-    17..21 (20 bits = bits 63..44), parse base-16, >>2 & 0xFFFF... but
-    bits 63-62 are the variant; simpler: chars index 16..20 give bits
-    63..44 → (v >> 2) & 0xFFFF drops bits 45-44 and masks the variant.
-    """
-    c = F.col(uuid_str_col) if isinstance(uuid_str_col, str) else uuid_str_col
-    hex32 = F.lower(F.regexp_replace(c, "-", ""))
-    # chars 17..21 (1-based substr): bits 63..44 of the 128-bit value
-    top20 = F.conv(F.substring(hex32, 17, 5), 16, 10).cast("long")
-    return (F.shiftright(top20, 2) % F.lit(1 << 16)).cast("int")
-
-
-def partition_id_col(uuid_str_col: Column | str, num_partitions: int) -> Column:
-    """partition_id from a uuid string column, for EGET pruning."""
-    return F.pmod(uuid_hash_col(uuid_str_col), F.lit(num_partitions)).cast("int")
-
-
-def _dashed(hex32: Column) -> Column:
-    """Canonical 8-4-4-4-12 form from 32 hex chars."""
-    return F.concat_ws(
-        "-",
-        F.substring(hex32, 1, 8),
-        F.substring(hex32, 9, 4),
-        F.substring(hex32, 13, 4),
-        F.substring(hex32, 17, 4),
-        F.substring(hex32, 21, 12),
+def uuid_strings(raw: np.ndarray) -> pa.StringArray:
+    """The canonical lowercase hyphenated strings of ``raw``'s UUIDs:
+    ``str(uuid.UUID(bytes=row))`` for every row, without a UUID object."""
+    n = len(raw)
+    text = np.full((n, 36), ord("-"), np.uint8)
+    text[:, _DIGIT_POS] = _HEX_DIGITS[raw].reshape(n, 32)
+    offsets = np.arange(0, 36 * (n + 1), 36, dtype=np.int32)
+    return pa.Array.from_buffers(
+        pa.string(), n, [None, pa.py_buffer(offsets), pa.py_buffer(text)]
     )
 
 
-def _hex(value: Column, width: int) -> Column:
-    """Non-negative long → fixed-width lowercase hex."""
-    return F.lpad(F.lower(F.conv(value.cast("string"), 10, 16)), width, "0")
+def partition_hashes(raw: np.ndarray) -> np.ndarray:
+    """Bits 46-61 of each UUID in ``raw`` (id.rs:50-53): they sit in
+    bytes 8-10, which hold bits 40-63."""
+    b = raw[:, 8:11].astype(np.int32)
+    return ((b[:, 0] << 16 | b[:, 1] << 8 | b[:, 2]) >> 6) & 0xFFFF
 
 
-def uuid5_col(stream_id: Column | str) -> Column:
-    """JVM-side uuid5(NAMESPACE_PARTITION_KEY, stream_id) — the default
-    partition key (eappend.rs:193-195) with zero Python in the loop.
+def _versioned(raw: bytes, version: int) -> np.ndarray:
+    """``raw`` as UUID rows with the version nibble and the RFC variant
+    bits 0b10 set."""
+    out = np.frombuffer(raw, np.uint8).reshape(-1, 16).copy()
+    out[:, 6] = out[:, 6] & 0x0F | version << 4
+    out[:, 8] = out[:, 8] & 0x3F | 0x80
+    return out
 
-    uuid5 = SHA1(namespace_bytes || name_utf8)[0:16] with the version
-    nibble forced to 5 (hex char 13) and the variant byte's top two bits
-    forced to 0b10 ((b8 & 0x3f) | 0x80, hex chars 17-18). sha1/conv/
-    substring are all codegen built-ins.
-    """
-    c = F.col(stream_id) if isinstance(stream_id, str) else stream_id
-    digest = F.sha1(
-        F.concat(F.lit(NAMESPACE_PARTITION_KEY.bytes), F.encode(c, "utf-8"))
+
+def uuid5_bytes(names: list[str]) -> np.ndarray:
+    """uuid5(NAMESPACE_PARTITION_KEY, name) of each name — the default
+    partition key (eappend.rs:193-195): SHA-1 of namespace || utf-8
+    name, cut to 16 bytes."""
+    ns = NAMESPACE_PARTITION_KEY.bytes
+    return _versioned(
+        b"".join(hashlib.sha1(ns + s.encode()).digest()[:16] for s in names), 5
     )
-    b8 = F.conv(F.substring(digest, 17, 2), 16, 10).cast("int")
-    variant = _hex((b8.bitwiseAND(F.lit(0x3F)).bitwiseOR(F.lit(0x80))).cast("long"), 2)
-    hex32 = F.concat(
-        F.substring(digest, 1, 12),
-        F.lit("5"),
-        F.substring(digest, 14, 3),
-        variant,
-        F.substring(digest, 19, 14),
+
+
+def v7_bytes(partition_hash: np.ndarray, timestamp_ms: np.ndarray) -> np.ndarray:
+    """One v7 event id per row with its partition hash embedded
+    (id.rs:21-47; the layout of :func:`uuid_v7_with_partition_hash`),
+    random bits from ``os.urandom``."""
+    n = len(partition_hash)
+    rand = np.frombuffer(os.urandom(16 * n), np.uint64).reshape(n, 2)
+    hi = (
+        (timestamp_ms.astype(np.uint64) & np.uint64((1 << 48) - 1)) << np.uint64(16)
+        | (rand[:, 0] & np.uint64(0xFFF)) << np.uint64(4)
+        | np.uint64(0x7)
     )
-    return _dashed(hex32)
-
-
-def event_id_col(
-    partition_hash: Column, timestamp_ms: Column, seed: int | None = None
-) -> Column:
-    """JVM-side v7-with-embedded-hash event id (id.rs:21-47).
-
-    Layout: [ts_ms:48][rand:12][ver=7:4][var=10:2][hash:16][rand:46].
-    Randomness from F.rand() (rerolled on task retry — same caveat as
-    any random id generator). The low 64 bits are assembled as two
-    32-bit halves so conv() never sees a negative long.
-    """
-    rand12 = F.floor((F.rand(seed) if seed is not None else F.rand()) * (1 << 12)).cast("long")
-    rand46 = (
-        F.floor((F.rand(seed + 1) if seed is not None else F.rand()) * (1 << 23)).cast("long")
-        * (1 << 23)
-        + F.floor((F.rand(seed + 2) if seed is not None else F.rand()) * (1 << 23)).cast("long")
+    lo = (
+        np.uint64(0b10 << 62)
+        | (partition_hash.astype(np.uint64) & np.uint64(0xFFFF)) << np.uint64(46)
+        | rand[:, 1] & np.uint64((1 << 46) - 1)
     )
-    ts48 = _hex(timestamp_ms.cast("long").bitwiseAND(F.lit((1 << 48) - 1)), 12)
-    # next 16 bits: rand12 then version nibble (always 7)
-    mid16 = F.concat(_hex(rand12, 3), F.lit("7"))
-    h = partition_hash.cast("long")
-    high32 = (
-        F.lit(0b10 << 30).cast("long")
-        + F.shiftleft(h, 14)
-        + F.shiftright(rand46, 32)
-    )
-    low32 = rand46.bitwiseAND(F.lit((1 << 32) - 1))
-    return _dashed(F.concat(ts48, mid16, _hex(high32, 8), _hex(low32, 8)))
+    return np.stack([hi, lo], axis=1).astype(">u8").view(np.uint8).reshape(n, 16)
 
 
-def txn_id_col(implicit_commit: bool, seed: int | None = None) -> Column:
-    """JVM-side v4 transaction id with the implicit-commit flag as the
-    MSB of byte 8 (id.rs:77-100): flagged ids draw the variant char from
-    [89ab] (MSB set), unflagged from [0-7]."""
-
-    def r(off: int) -> Column:
-        return F.rand(seed + off) if seed is not None else F.rand()
-
-    def rhex(off: int, nbits: int, width: int) -> Column:
-        return _hex(F.floor(r(off) * (1 << nbits)).cast("long"), width)
-
-    variant = (
-        F.substring(F.lit("89ab"), (F.floor(r(3) * 4) + 1).cast("int"), 1)
-        if implicit_commit
-        else F.substring(F.lit("01234567"), (F.floor(r(3) * 8) + 1).cast("int"), 1)
-    )
-    hex32 = F.concat(
-        rhex(0, 32, 8),
-        rhex(1, 16, 4),
-        F.lit("4"),
-        rhex(2, 12, 3),
-        variant,
-        rhex(4, 12, 3),
-        rhex(5, 24, 6),
-        rhex(6, 24, 6),
-    )
-    return _dashed(hex32)
+def txn_v4_bytes(n: int) -> np.ndarray:
+    """``n`` random v4 transaction ids with the implicit-commit flag set
+    (id.rs:77-100): the flag is the MSB of byte 8, which the RFC
+    variant bits 0b10 already set."""
+    return _versioned(os.urandom(16 * n), 4)

@@ -1,19 +1,20 @@
-"""Structured Streaming ingest: the continuous write path.
+"""Structured Streaming ingest: the continuous write path, and the one
+request enrichment every append runs.
 
 The reference's server loop (RESP3 appends → writer thread pool group
 commit, ``crates/sierradb/src/writer_thread_pool.rs:292-520,687-699``)
 maps to a Structured Streaming query: a stream of append requests →
-``foreachBatch`` → the same validate/assign/commit logic the batch API
-uses (eventstore/store.py). One micro-batch == one group commit; the
-trigger interval is the group-commit knob (reference defaults: 5 ms /
-50 events / 4 KB, ``config.rs:206-208``).
+``foreachBatch`` → the same enrich/validate/assign/commit logic the
+batch API uses (eventstore/store.py). One micro-batch == one group
+commit; the trigger interval is the group-commit knob (reference
+defaults: 5 ms / 50 events / 4 KB, ``config.rs:206-208``).
 
 Scale design:
-- Per-batch cost is O(batch) — enrichment and request validation run
-  in the JVM, then the batch is collected once and assigned and
-  committed on the driver against the memoized heads fold. Append
-  throughput is independent of table size (the reference's headline
-  design goal, README.md:96-99).
+- Per-batch cost is O(batch) — the raw micro-batch is collected once
+  with ``toArrow()``, then enriched and validated (:func:`enrich_requests`),
+  assigned and committed on the driver against the memoized heads fold.
+  Append throughput is independent of table size (the reference's
+  headline design goal, README.md:96-99).
 - Exactly-once: the streaming checkpoint records source offsets per
   batch, and each micro-batch carries an idempotence token
   (query-checkpoint hash + batch_id) recorded in the manifest it
@@ -23,9 +24,10 @@ Scale design:
   on plain Parquet.
 
 Request-stream contract: any streaming DataFrame with columns
-``stream_id, event_name, payload, metadata, expected_version`` (+
-optional ``timestamp_ms``, ``partition_key``, ``event_id``, ``txn_id``).
-Missing columns are filled with defaults during enrichment.
+``stream_id, event_name`` (+ optional ``payload``, ``metadata``,
+``expected_version``, ``timestamp_ms``, ``partition_key``,
+``event_id``, ``txn_id``; :data:`REQUEST_COLUMNS`). Missing columns
+are filled with defaults during enrichment; other columns are ignored.
 """
 
 from __future__ import annotations
@@ -34,9 +36,13 @@ import hashlib
 import os
 import shutil
 import time
+import uuid as _uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -44,201 +50,166 @@ from sierradb_spark import ids
 from sierradb_spark.config import DEFAULT_CONFIG, EngineConfig
 from sierradb_spark.eventstore.store import EventStore
 
+# The raw request columns enrich_requests reads, with the Arrow types it
+# casts them to; only stream_id and event_name are required.
+REQUEST_COLUMNS = pa.schema(
+    [
+        ("stream_id", pa.string()),
+        ("event_name", pa.string()),
+        ("payload", pa.binary()),
+        ("metadata", pa.binary()),
+        ("expected_version", pa.string()),
+        ("timestamp_ms", pa.int64()),
+        ("partition_key", pa.string()),
+        ("event_id", pa.string()),
+        ("txn_id", pa.string()),
+    ]
+)
 
-# Enrichment Column-expression cache (r11). Building the derived-column
-# trees (uuid5 sha1 bit-twiddling, v7 event-id assembly, the validation
-# when-chain) costs ~0.5-1 s of py4j round-trips per call — charged to
-# EVERY batch append and every streaming micro-batch, ~25-50% of a 20k-
-# event append's wall time. The expressions are pure functions of the
-# input column SET and the config knobs (the per-batch `now_ns` literals
-# live in the timestamp column, which the cached expressions only
-# reference by NAME), so one build per (schema, config) serves the whole
-# session: unresolved Columns are immutable and reusable across plans;
-# nondeterministic ones (the v4 txn id) still evaluate fresh per query.
-_ENRICH_COL_CACHE: dict[tuple, dict] = {}
 
-
-def _enrichment_columns(cols_key: tuple, config: EngineConfig) -> dict:
-    """Reusable enrichment/validation Columns for an input schema whose
-    sorted column names are ``cols_key`` — see _ENRICH_COL_CACHE."""
-    key = (
-        cols_key,
-        config.num_partitions,
-        config.max_stream_id_len,
-        config.max_event_name_len,
-        config.strict_versioning,
-    )
-    cached = _ENRICH_COL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    cols = dict.fromkeys(cols_key)
-    c: dict = {}
-    if "partition_key" in cols:
-        c["partition_key"] = F.coalesce(
-            F.col("partition_key"), ids.uuid5_col("stream_id")
-        )
-    else:
-        c["partition_key"] = ids.uuid5_col("stream_id")
-    phash = ids.uuid_hash_col("partition_key")
-    c["partition_id"] = F.pmod(phash, F.lit(config.num_partitions)).cast("int")
-    user_event_id = "event_id" in cols
-    gen_eid = ids.event_id_col(phash, F.expr("timestamp_ns div 1000000"))
-    if user_event_id:
-        # Canonicalize caller ids to the lowercase-hyphenated form the
-        # store's lookups compare against (uuid_hash_col parses
-        # uppercase/no-dash encodings fine, so without this a valid-hash
-        # non-canonical id would pass validation yet be unreachable via
-        # EGET). Anything that is not 32 hex chars after stripping
-        # urn:uuid:/braces/dashes is left as-is for the validation
-        # below to reject.
-        h32 = F.lower(
-            F.regexp_replace(
-                F.regexp_replace(F.col("event_id"), r"^(?i)urn:uuid:", ""),
-                r"[{}\-]",
-                "",
-            )
-        )
-        canon = F.when(
-            h32.rlike("^[0-9a-f]{32}$"),
-            F.concat_ws(
-                "-",
-                F.substring(h32, 1, 8),
-                F.substring(h32, 9, 4),
-                F.substring(h32, 13, 4),
-                F.substring(h32, 17, 4),
-                F.substring(h32, 21, 12),
-            ),
-        ).otherwise(F.col("event_id"))
-        c["event_id"] = F.coalesce(canon, gen_eid)
-    else:
-        c["event_id"] = gen_eid
-    # One event per transaction (EAPPEND), implicit-commit flag set
-    # (id.rs:77-100): txn id equals a flagged v4 uuid.
-    c["txn_id"] = ids.txn_id_col(implicit_commit=True)
-
-    # --- request validation (reject, don't crash) ----------------------
-    # NULL-safe throughout: a NULL field makes every comparison NULL,
-    # and a plain when() chain would fall through and ACCEPT the row
-    # (with a NULL partition_id corrupting assignment downstream) —
-    # exactly the poison-message shape a Kafka topic can deliver.
-    reason = F.when(
-        F.col("stream_id").isNull()
-        | (F.length("stream_id") < 1)
-        | (F.length("stream_id") > config.max_stream_id_len),
-        F.lit("stream_id must be 1-64 chars"),  # lib.rs:26,36-50
-    ).when(
-        F.instr("stream_id", "\x00") > 0,
-        F.lit("stream_id cannot contain null bytes"),  # lib.rs:45-47
-    ).when(
-        F.col("event_name").isNull(),
-        F.lit("event_name missing"),
-    ).when(
-        F.length("event_name") > config.max_event_name_len,
-        F.lit("event_name too long"),  # format.rs:150
-    ).when(
-        # expected_version is never NULL here — a NULL precondition is
-        # coalesced to 'any' by the caller ("no precondition").
-        ~F.col("expected_version").rlike(r"^(any|exists|empty|[0-9]+)$"),
-        F.concat(F.lit("invalid expected_version: "), F.col("expected_version")),
-    )
-    if config.strict_versioning:
-        reason = reason.when(
-            F.col("expected_version").isin("any", "exists"),
-            F.lit("strict versioning rejects 'any'/'exists'"),
-        )  # eappend.rs:180-188
-    if user_event_id:
-        # NULL-safe: a malformed event_id (too short to carry the hash
-        # bits) makes uuid_hash_col NULL, and `NULL != phash` is NULL —
-        # a plain when() would fall through and ACCEPT the bad id. The
-        # null-safe inequality rejects malformed and mismatched alike.
-        reason = reason.when(
-            ~ids.uuid_hash_col("event_id").eqNullSafe(phash),
-            F.lit("event_id does not embed partition hash"),  # database.rs:880
-        )
-    c["reject_reason"] = reason.otherwise(F.lit(None))
-    _ENRICH_COL_CACHE[key] = c
-    return c
+def _as_uuid(v: str | None) -> _uuid.UUID | None:
+    """``uuid.UUID(v)``, or None for NULL and for a value that is not a
+    UUID in any encoding ``uuid.UUID`` accepts."""
+    try:
+        return _uuid.UUID(v)
+    except (TypeError, ValueError):
+        return None
 
 
 def enrich_requests(
-    df: DataFrame, config: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Derive partition_key/partition_id/event_id/timestamp columns and
-    validate the request — all JVM-side.
+    requests: pa.Table, config: EngineConfig = DEFAULT_CONFIG
+) -> pa.Table:
+    """Enrich and validate a batch of raw append requests: the one
+    enrichment of every append (EAPPEND / EMAPPEND, ``append_df``,
+    streaming ingest). Returns the request rows of the writer loop
+    (``store._assign_and_commit``) in input order, with the columns
+    built at the end.
 
-    Mirrors request enrichment + validation in the reference handler
-    (``request/eappend.rs:180-217``, ``database.rs:867-897``): default
-    partition_key = uuid5(NAMESPACE, stream_id), partition_hash from the
-    key, event_id = v7-with-embedded-hash, ms→ns timestamp scaling.
-    Invalid requests (caller event_id that does not embed the routing
-    hash — database.rs:880; stream_id/event_name length limits —
-    lib.rs:26, format.rs:150; malformed or strict-rejected
-    expected_version — eappend.rs:180-188) get a non-null
-    ``reject_reason`` and are routed to rejected results downstream —
-    never an executor exception that would fail the whole micro-batch.
-
-    Entirely JVM-side Column algebra (ids.uuid5_col / event_id_col /
-    txn_id_col — sha1 + conv + substring): the first implementation used
-    chained pandas UDFs and each UDF-on-UDF dependency became its own
-    ArrowEvalPython stage — a serial JVM↔Python round-trip per batch that
-    dominated ingest wall time. Keeping enrichment in whole-stage codegen
-    removed Python from the ingest hot path entirely.
+    Mirrors the reference handler (``request/eappend.rs:180-217``,
+    ``database.rs:867-897``): the default partition key is
+    uuid5(NAMESPACE, stream_id); a generated event id is v7 with the
+    key's partition hash embedded; a request without a txn id is its
+    own transaction (flagged v4 id, id.rs:77-100); a caller event_id is
+    stored canonical, so EGET's canonicalized lookup finds it; a NULL
+    expected_version is ``any``. An invalid request is not an
+    exception: it gets the ``reject_reason`` of the first rule below
+    that it breaks, so one poison message cannot fail a micro-batch.
+    Transaction-level rules are ``store._validate_and_assign``'s.
     """
-    cols = dict.fromkeys(df.columns)
-    c = _enrichment_columns(tuple(sorted(cols)), config)
-    if "expected_version" not in cols:
-        df = df.withColumn("expected_version", F.lit("any"))
-    else:
-        # A NULL precondition means "no precondition" (= 'any'). Without
-        # the coalesce, NULL slips past the rlike reject (NULL rlike →
-        # NULL → no reason) and then crashes parse_expected_version on
-        # the slow path — an executor exception that would fail the whole
-        # micro-batch, violating the reject-don't-crash contract.
-        df = df.withColumn(
-            "expected_version", F.coalesce(F.col("expected_version"), F.lit("any"))
+    n = requests.num_rows
+    given = set(requests.column_names)
+
+    def column(name: str):
+        typ = REQUEST_COLUMNS.field(name).type
+        return requests[name].cast(typ) if name in given else pa.nulls(n, typ)
+
+    sids = requests["stream_id"].cast(pa.string())  # required: KeyError if absent
+    names = requests["event_name"].cast(pa.string())
+    expected = pc.fill_null(column("expected_version"), "any")
+    sid_len = pc.utf8_length(sids)
+    sid_out_of_range = pc.or_(pc.less(sid_len, 1), pc.greater(sid_len, config.max_stream_id_len))
+    # (broken, reason) in rule order; the first rule a request breaks
+    # wins. A NULL field breaks the rule that reads it.
+    rules = [
+        (
+            pc.or_kleene(pc.is_null(sids), sid_out_of_range),
+            "stream_id must be 1-64 chars",  # lib.rs:26,36-50
+        ),
+        (pc.match_substring(sids, "\x00"), "stream_id cannot contain null bytes"),  # lib.rs:45-47
+        (pc.is_null(names), "event_name missing"),
+        (
+            pc.greater(pc.utf8_length(names), config.max_event_name_len),
+            "event_name too long",  # format.rs:150
+        ),
+        (
+            pc.invert(pc.match_substring_regex(expected, r"^(any|exists|empty|[0-9]+)$")),
+            pc.binary_join_element_wise("invalid expected_version: ", expected, ""),
+        ),
+    ]
+    if config.strict_versioning:
+        rules.append(
+            (
+                pc.is_in(expected, pa.array(["any", "exists"])),
+                "strict versioning rejects 'any'/'exists'",  # eappend.rs:180-188
+            )
         )
-    if "metadata" not in cols:
-        df = df.withColumn("metadata", F.lit(b""))
-    if "payload" not in cols:
-        df = df.withColumn("payload", F.lit(b""))
+
+    # Default partition keys: one uuid5 per distinct stream of the batch.
+    streams = pc.unique(sids).drop_null()
+    keys = ids.uuid5_bytes(streams.to_pylist())
+    at = pc.index_in(sids, streams)
+    pkey = pc.take(ids.uuid_strings(keys), at)
+    phash = pc.take(pa.array(ids.partition_hashes(keys), pa.int32()), at)
+    user = column("partition_key")
+    if user.null_count < n:  # some request names its own partition key
+        hashes = [u and ids.uuid_to_partition_hash(u) for u in map(_as_uuid, user.to_pylist())]
+        pkey = pc.coalesce(user, pkey)
+        phash = pc.if_else(pc.is_valid(user), pa.array(hashes, pa.int32()), phash)
+        rules.append(
+            (pc.and_(pc.is_valid(user), pc.is_null(phash)), "partition_key is not a UUID")
+        )
+    pid = pc.subtract(
+        phash,
+        pc.multiply(pc.divide(phash, config.num_partitions), config.num_partitions),
+    ).cast(pa.int32())
+
     now_ns = time.time_ns()
-    if "timestamp_ms" in cols:
-        df = df.withColumn(
-            "timestamp_ns",
-            F.coalesce(F.col("timestamp_ms") * 1_000_000, F.lit(now_ns)),
-        )
-    else:
-        df = df.withColumn("timestamp_ns", F.lit(now_ns))
-    df = df.withColumn("partition_key", c["partition_key"])
-    df = df.withColumn("partition_id", c["partition_id"])
-    df = df.withColumn("event_id", c["event_id"])
-    user_txn_id = "txn_id" in cols
-    if not user_txn_id:
-        df = df.withColumn("txn_id", c["txn_id"])
-    df = df.withColumn("reject_reason", c["reject_reason"])
-    # Batch-local arrival order: monotonic id is unique and ordered per
-    # partition of the source; good enough as the serialization tiebreak
-    # (the reference serializes by channel arrival, an equally arbitrary
-    # but consistent order). Taken before the txn window below, whose
-    # exchange would otherwise reorder it.
-    df = df.withColumn("arrival", F.monotonically_increasing_id())
-    if user_txn_id:
-        # Caller-grouped transactions: a txn must resolve to ONE
-        # partition (database.rs:867-897) and is rejected whole if any
-        # of its requests is invalid. One window over txn_id (only in
-        # this path — auto-generated txn ids are single-request).
-        wtxn = Window.partitionBy("txn_id")
-        df = df.withColumn(
-            "reject_reason",
-            F.coalesce(
-                F.max("reject_reason").over(wtxn),
-                F.when(
-                    F.size(F.collect_set("partition_id").over(wtxn)) > 1,
-                    F.lit("transaction spans multiple partitions"),
-                ),
+    timestamp_ns = pc.fill_null(pc.multiply(column("timestamp_ms"), 1_000_000), now_ns)
+    generated = ids.v7_bytes(
+        pc.fill_null(phash, 0).to_numpy(), pc.divide(timestamp_ns, 1_000_000).to_numpy()
+    )
+    # A request with no partition hash has no event id either.
+    event_id = pc.if_else(
+        pc.is_valid(phash), ids.uuid_strings(generated), pa.scalar(None, pa.string())
+    )
+    raw = column("event_id")
+    if raw.null_count < n:  # some request names its own event id
+        parsed = [_as_uuid(v) for v in raw.to_pylist()]
+        canon = pa.array([u and str(u) for u in parsed], pa.string())
+        embedded = pa.array([u and ids.uuid_to_partition_hash(u) for u in parsed], pa.int32())
+        event_id = pc.coalesce(canon, raw, event_id)
+        rules += [
+            (
+                pc.and_(pc.is_valid(raw), pc.is_null(canon)),
+                pc.binary_join_element_wise("event_id '", raw, "' is not a UUID", ""),
             ),
-        )
-    return df
+            (
+                # NULL-safe: a request with no partition hash has none
+                # for its id to embed either.
+                pc.and_(pc.is_valid(canon), pc.fill_null(pc.not_equal(embedded, phash), True)),
+                "event_id does not embed partition hash",  # database.rs:880
+            ),
+        ]
+
+    txn_id = pc.coalesce(column("txn_id"), ids.uuid_strings(ids.txn_v4_bytes(n)))
+
+    # case_when takes the first true condition and reads NULL as false.
+    broken, why = zip(*rules)
+    reason = pc.case_when(
+        pc.make_struct(*broken, field_names=[str(i) for i in range(len(rules))]), *why
+    )
+    return pa.table(
+        {
+            # The serialization order within the batch (the reference
+            # serializes through one writer thread per bucket,
+            # writer_thread_pool.rs:120-150).
+            "arrival": pa.array(np.arange(n, dtype=np.int64)),
+            "txn_id": txn_id,
+            "stream_id": sids,
+            "event_name": names,
+            "expected_version": expected,
+            "event_id": event_id,
+            "partition_key": pkey,
+            "partition_id": pid,
+            "timestamp_ns": timestamp_ns,
+            "payload": column("payload") if "payload" in given else pa.repeat(b"", n),
+            "metadata": column("metadata") if "metadata" in given else pa.repeat(b"", n),
+            # Non-null for a request that failed validation: its whole
+            # transaction is rejected without consuming sequences
+            # (database.rs:867-897 validates the txn before any write).
+            "reject_reason": reason,
+        }
+    )
 
 
 def _committed_token_bounds(store: EventStore) -> tuple[frozenset, dict]:
@@ -398,8 +369,8 @@ def prune_dead_letters(store: EventStore, dead_letter_dir: str) -> dict:
 class StreamIngest:
     """Continuous ingest into an EventStore table via foreachBatch.
 
-    Each micro-batch is collected to the driver once and committed
-    there (``EventStore._apply_batch``): the driver holds one batch plus
+    Each micro-batch is collected to the driver once, then enriched
+    and committed there (``EventStore._apply_batch``): the driver holds one batch plus
     the heads fold, so cap micro-batches with the source's
     ``maxOffsetsPerTrigger`` (Kafka) / ``maxFilesPerTrigger`` (files);
     docs/SCALE.md has the measured batch-size curve."""
@@ -483,21 +454,6 @@ class StreamIngest:
         ).hexdigest()[:16]
 
         def process(batch: DataFrame, batch_id: int) -> None:
-            enriched = enrich_requests(batch, self.store.config)
-            req_cols = [
-                "arrival",
-                "txn_id",
-                "stream_id",
-                "event_name",
-                "expected_version",
-                "event_id",
-                "partition_key",
-                "partition_id",
-                "timestamp_ns",
-                "payload",
-                "metadata",
-                "reject_reason",
-            ]
             def write_dead_letters(result: DataFrame) -> None:
                 # Pre-commit hook: runs before the manifest rename, so
                 # rejects are durable no later than the commit they
@@ -524,7 +480,7 @@ class StreamIngest:
                 )
 
             result = self.store._apply_batch(
-                enriched.select(*req_cols),
+                batch,
                 batch_token=f"{query_key}-{batch_id}",
                 pre_commit=(
                     write_dead_letters if dead_letter_dir is not None else None

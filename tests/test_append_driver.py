@@ -1,17 +1,19 @@
 """The driver append path (``EventStore.append_transactions``) against
 the DataFrame one (``append_df``), and the commit step they share.
 
-Both paths run one writer loop (``_assign_and_commit``: one assigner,
-one pyarrow events writer, one publish). What differs is enrichment:
-EAPPEND / EMAPPEND requests are enriched and validated in Python on the
-driver, a DataFrame batch by ``enrich_requests`` in the JVM before its
-one collect. The differential test pins the two enrichments to the same
-results and the same stored table, with and without preconditions. The
-overlay test pins the assigner's per-transaction rollback, the stats
-test the writer's parquet statistics. The crash tests pin the publish
-step: a failed manifest publish leaves no visible trace, and every file
-a writer places is fsynced, with its directory, before the manifest
-names it.
+Both paths run one enrichment (``enrich_requests``) and one writer
+loop (``_assign_and_commit``: one assigner, one pyarrow events writer,
+one publish). What differs is how the raw request table is built:
+EAPPEND / EMAPPEND turn their ``AppendRequest`` objects into it, a
+DataFrame batch is collected into it with ``toArrow()``. The
+differential test pins the two entry points to the same results and
+the same stored table, with and without preconditions. The overlay
+test pins the assigner's per-transaction rollback, the stats test the
+writer's parquet statistics, the partition-key test that a key which is
+no UUID is refused on every path. The crash tests pin the publish step:
+a failed manifest publish leaves no visible trace, and every file a
+writer places is fsynced, with its directory, before the manifest names
+it.
 """
 
 from __future__ import annotations
@@ -185,6 +187,10 @@ def _assert_same_table(a, b):
 
 
 def test_driver_append_matches_append_df(spark, tmp_path, monkeypatch):
+    """The two entry points of the one enrichment — ``AppendRequest``
+    objects → Arrow table (``append_transactions``) and DataFrame →
+    ``toArrow()`` → Arrow table (``append_df``) — give equal results and
+    equal stored events, heads and watermarks."""
     txns, txn_uuids = _batch(seed=11)
     n = sum(map(len, txns))
     assert 190 <= n <= 210 and any(len(t) > 1 for t in txns)
@@ -428,3 +434,41 @@ def test_nul_byte_stream_id_is_refused_on_both_paths(spark, tmp_path):
         (False, "stream_id cannot contain null bytes")
     ]
     assert store.stats()["total_events"] == 0
+
+
+def test_non_uuid_partition_key_is_refused_on_every_path(spark, tmp_path):
+    """A partition_key that is not a UUID has no partition: the driver
+    append and EAPPEND raise, ``append_df`` and a streaming batch reject
+    the request, nothing is stored, and the store still reads and
+    appends (an accepted NULL partition would name ``partition_id=None``
+    in the manifest and break every later state read)."""
+    from sierradb_spark.commands import execute_command
+    from sierradb_spark.streaming.ingest import StreamIngest
+
+    store = EventStore(spark, str(tmp_path / "pk"), CFG)
+    why = "partition_key is not a UUID"
+    with pytest.raises(ValueError, match=why):
+        store.append([AppendRequest("s", "E", partition_key="not-a-uuid")])
+    with pytest.raises(ValueError, match=why):
+        execute_command(store, "EAPPEND", "s", "E", "PARTITION_KEY", "not-a-uuid")
+    schema = "stream_id string, event_name string, partition_key string"
+    rows = [("s", "E", "not-a-uuid"), ("s", "E", None)]
+    res = store.append_df(spark.createDataFrame(rows, schema)).orderBy("arrival")
+    assert [(r["accepted"], r["error"]) for r in res.collect()] == [(False, why), (True, None)]
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.json(src)
+    got = []
+    q = StreamIngest(store).start(
+        spark.readStream.schema(schema).json(src),
+        checkpoint=str(tmp_path / "ckpt"),
+        available_now=True,
+        on_batch=lambda _id, r: got.extend(r.collect()),
+    )
+    q.awaitTermination(120)
+    assert sorted((r["accepted"], r["error"]) for r in got) == [(False, why), (True, None)]
+
+    assert store.append([AppendRequest("s", "E")])[0].stream_version == 2
+    assert all(isinstance(p, int) for p in store._read_state().watermarks)
+    assert store.stats()["total_events"] == 3
+    assert [r["stream_version"] for r in store.scan("s").collect()] == [0, 1, 2]

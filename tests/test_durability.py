@@ -99,25 +99,17 @@ def _request_df(spark, n, stream="replay"):
 
 
 def test_apply_batch_skips_committed_token(spark, store):
-    from sierradb_spark.streaming.ingest import enrich_requests
-
-    cols = [
-        "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-        "event_id", "partition_key", "partition_id", "timestamp_ns",
-        "payload", "metadata", "reject_reason",
-    ]
-    enriched = enrich_requests(_request_df(spark, 5), store.config).select(*cols)
-    enriched = enriched.localCheckpoint(eager=True)  # stable ids across calls
-    r1 = store._apply_batch(enriched, batch_token="qk-0")
+    requests = _request_df(spark, 5)
+    r1 = store._apply_batch(requests, batch_token="qk-0")
     assert r1.count() == 5
     assert _events_count(store) == 5
     # Replay of the same micro-batch (crash between manifest-rename and
     # checkpoint-commit): token already committed -> skipped whole.
-    r2 = store._apply_batch(enriched, batch_token="qk-0")
+    r2 = store._apply_batch(requests, batch_token="qk-0")
     assert r2.count() == 0
     assert _events_count(store) == 5
     # A different token is a genuinely new batch.
-    store._apply_batch(enriched, batch_token="qk-1")
+    store._apply_batch(requests, batch_token="qk-1")
     assert _events_count(store) == 10
 
 
@@ -152,18 +144,10 @@ def test_stream_ingest_checkpoint_loss_replay_no_duplicates(spark, store, tmp_pa
 
 
 def test_compact_carries_tokens_forward(spark, store):
-    from sierradb_spark.streaming.ingest import enrich_requests
-
-    cols = [
-        "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-        "event_id", "partition_key", "partition_id", "timestamp_ns",
-        "payload", "metadata", "reject_reason",
-    ]
-    enriched = enrich_requests(_request_df(spark, 3), store.config).select(*cols)
-    enriched = enriched.localCheckpoint(eager=True)
-    store._apply_batch(enriched, batch_token="survives-compact")
+    requests = _request_df(spark, 3)
+    store._apply_batch(requests, batch_token="survives-compact")
     store.compact()
-    r = store._apply_batch(enriched, batch_token="survives-compact")
+    r = store._apply_batch(requests, batch_token="survives-compact")
     assert r.count() == 0
     assert _events_count(store) == 3
 
@@ -509,7 +493,7 @@ def test_malformed_user_event_id_rejected(spark, store):
     res = store.append_df(reqs).collect()
     by_stream = {r["stream_id"]: r for r in res}
     assert not by_stream["mal"]["accepted"]
-    assert "partition hash" in by_stream["mal"]["error"]
+    assert "not a UUID" in by_stream["mal"]["error"]
     assert by_stream["ok"]["accepted"]
     assert store.events().count() == 1
 

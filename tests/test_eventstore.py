@@ -10,7 +10,6 @@ transactional atomicity, watermark-gated reads.
 from __future__ import annotations
 
 import time
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -251,18 +250,6 @@ def test_scan_ranges_and_limits(store):
     assert seqs == [2, 3, 4, 5]
     assert store.partition_sequence(pid) == 9
     assert store.stream_version("r1") == 9
-
-
-def test_ids_column_expr_matches_python(store, spark):
-    """uuid_hash_col (JVM-side pruning expr) == pure-Python extraction."""
-    keys = [str(uuid.uuid4()) for _ in range(50)] + [
-        str(ids.partition_key_for_stream(f"s{i}")) for i in range(50)
-    ]
-    df = spark.createDataFrame([(k,) for k in keys], "u string").withColumn(
-        "h", ids.uuid_hash_col("u")
-    )
-    for row in df.collect():
-        assert row["h"] == ids.uuid_to_partition_hash(row["u"])
 
 
 def test_time_travel_snapshots(store):

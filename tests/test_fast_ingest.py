@@ -1,10 +1,10 @@
 """Bulk ingest through ``append_df``: the writer invariants hold.
 
 A DataFrame batch without an expected_version column (no
-optimistic-concurrency preconditions) is enriched and request-validated
-in the JVM, then assigned and committed on the driver by the same
-writer loop EAPPEND uses (tests/test_append_driver.py pins the JVM
-enrichment against the Python one). These tests pin the invariants the
+optimistic-concurrency preconditions) is collected once, then enriched,
+request-validated, assigned and committed on the driver by the same
+code EAPPEND runs (tests/test_append_driver.py pins the two entry
+points against each other). These tests pin the invariants the
 reference enforces in its writer thread (writer_thread_pool.rs:560-645):
 gapless per-partition sequences, gapless per-stream versions,
 cross-batch continuity, and request-validation rejections (NULL stream
@@ -193,35 +193,23 @@ def test_append_df_caller_grouped_transactions(spark, tmp_path):
     assert [r["stream_version"] for r in sorted(ev, key=lambda r: r["stream_version"])] == [0, 1]
 
 
-def test_enrich_column_cache_respects_config_and_schema(spark):
-    """r11 opt: enrich_requests memoizes its derived-column expressions
-    per (input schema, config knobs). Two configs sharing a schema must
-    not share validation expressions, and schema variants (user event_id
-    present/absent) must key separately."""
-    from sierradb_spark.config import EngineConfig
+def test_enrich_requests_respects_config_and_event_id():
+    """enrich_requests reads its limits from the config it is given,
+    and validates a caller event_id only where the column is present."""
+    import pyarrow as pa
+
     from sierradb_spark.streaming.ingest import enrich_requests
 
-    df = spark.createDataFrame(
-        [("s", "E" * 40, b"")],
-        "stream_id string, event_name string, payload binary",
-    )
-    ok = enrich_requests(df, EngineConfig(max_event_name_len=64)).select(
-        "reject_reason"
-    ).first()[0]
-    bad = enrich_requests(df, EngineConfig(max_event_name_len=10)).select(
-        "reject_reason"
-    ).first()[0]
-    assert ok is None
-    assert bad == "event_name too long"
-
-    # user-supplied event_id variant: the embedded-hash validation only
-    # exists in that schema's cached expression set
-    df2 = spark.createDataFrame(
-        [("s", "E", b"", "0" * 32)],
-        "stream_id string, event_name string, payload binary, event_id string",
-    )
-    rej = enrich_requests(df2).select("reject_reason").first()[0]
-    assert rej == "event_id does not embed partition hash"
-    # and the no-event_id schema (cached separately) still accepts
-    again = enrich_requests(df).select("reject_reason").first()[0]
-    assert again is None
+    cases = [
+        (EngineConfig(max_event_name_len=64), None, None),
+        (EngineConfig(max_event_name_len=10), None, "event_name too long"),
+        # a well-formed id with a foreign hash, and one that is no UUID
+        (EngineConfig(), "0" * 32, "event_id does not embed partition hash"),
+        (EngineConfig(), "abc", "event_id 'abc' is not a UUID"),
+    ]
+    for config, event_id, reason in cases:
+        cols = {"stream_id": ["s"], "event_name": ["E" * 40], "payload": [b""]}
+        if event_id is not None:
+            cols.update(event_name=["E"], event_id=[event_id])
+        out = enrich_requests(pa.table(cols), config)
+        assert out["reject_reason"].to_pylist() == [reason], (config, event_id)

@@ -94,7 +94,7 @@ def test_heads_fold_matches_events_oracle(spark, tmp_path):
 
 def test_one_row_append_df_starts_one_job(spark, tmp_path, monkeypatch, jobs_started):
     """Past 1024 streams, a one-row ``append_df`` starts exactly one
-    Spark job (the collect of its enriched batch): no Spark read of
+    Spark job (the collect of its request batch): no Spark read of
     heads/, and on the driver only the heads file the previous commit
     added is read into the memoized fold. The result is a DataFrame
     with ``APPEND_RESULT_SCHEMA``."""

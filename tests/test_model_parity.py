@@ -119,29 +119,13 @@ class DatabaseModel:
 STREAMS = [f"stream-{i}" for i in range(8)]
 NAMES = ["Created", "Updated", "Deleted"]
 
-_REQ_COLS = [
-    "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-    "event_id", "partition_key", "partition_id", "timestamp_ns",
-    "payload", "metadata", "reject_reason",
-]
-
-
 def _tokened_apply(store: EventStore, spark, reqs, token: str, pre_commit=None):
     """Apply [(stream, name, expected)] through the streaming-batch path
-    with an idempotence token; returns the pinned enriched df + results."""
-    from sierradb_spark.streaming.ingest import enrich_requests
-
+    with an idempotence token; returns the request df + results."""
     df = spark.createDataFrame(
         reqs, "stream_id string, event_name string, expected_version string"
     )
-    enriched = (
-        enrich_requests(df, store.config)
-        .select(*_REQ_COLS)
-        .localCheckpoint(eager=True)  # pin generated ids across replays
-    )
-    return enriched, store._apply_batch(
-        enriched, batch_token=token, pre_commit=pre_commit
-    )
+    return df, store._apply_batch(df, batch_token=token, pre_commit=pre_commit)
 
 
 def random_expected(rng: random.Random, model: DatabaseModel, stream: str) -> str:
@@ -478,7 +462,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                         ).write.mode("overwrite").parquet(
                             os.path.join(_dlq, "batch=0")
                         )
-            enriched, res = _tokened_apply(
+            requests, res = _tokened_apply(
                 store, spark, reqs, token,
                 pre_commit=dlq_hook if dlq is not None else None,
             )
@@ -514,7 +498,7 @@ def test_randomized_command_sequence(spark, tmp_path, seed):
                 )
                 assert got_dead == want_dead, f"dead letters diverged step {step}"
             replay = store._apply_batch(
-                enriched, batch_token=token,
+                requests, batch_token=token,
                 pre_commit=dlq_hook if dlq is not None else None,
             )
             # EVERY tokened batch commits its token — an all-rejected

@@ -937,21 +937,13 @@ def test_dead_letters_are_durable_before_the_manifest_commit(
     returns an empty result.) Verified by asserting, from inside the
     hook itself, that the token is not yet committed; then replaying
     the token and confirming the fast path leaves the letters intact."""
-    from sierradb_spark.streaming.ingest import enrich_requests
-
     reqs = [("s-ok", "Evt", b"good", b"", "any"),
             (None, "Evt", b"poison", b"", "any")]
     schema = (
         "stream_id string, event_name string, payload binary, "
         "metadata binary, expected_version string"
     )
-    enriched = enrich_requests(
-        spark.createDataFrame(reqs, schema), store.config
-    ).select(
-        "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-        "event_id", "partition_key", "partition_id", "timestamp_ns",
-        "payload", "metadata", "reject_reason",
-    )
+    requests = spark.createDataFrame(reqs, schema)
     dlq = str(tmp_path / "dlq")
     token = "crashwin-0"
     seen = {}
@@ -963,12 +955,12 @@ def test_dead_letters_are_durable_before_the_manifest_commit(
             os.path.join(dlq, "batch=0")
         )
 
-    store._apply_batch(enriched, batch_token=token, pre_commit=hook)
+    store._apply_batch(requests, batch_token=token, pre_commit=hook)
     assert seen == {"token_pre_committed": False}
     assert token in store._read_state().batch_tokens  # commit landed after
 
     # replay of the committed token: fast path, empty result, letters kept
-    replay = store._apply_batch(enriched, batch_token=token, pre_commit=hook)
+    replay = store._apply_batch(requests, batch_token=token, pre_commit=hook)
     assert replay.count() == 0
     dead = spark.read.parquet(dlq)
     assert [bytes(r["payload"]) for r in dead.collect()] == [b"poison"]
@@ -980,30 +972,22 @@ def test_all_rejected_batch_commits_its_token(store, spark, tmp_path):
     skip path, and the token-in-chain invariant (what the dead-letter
     read contract is built on) holds for every processed batch, not
     just batches that appended something."""
-    from sierradb_spark.streaming.ingest import enrich_requests
-
     reqs = [(None, "Evt", b"bad1", b"", "any"), ("s", "Evt", b"bad2", b"", "bogus")]
     schema = (
         "stream_id string, event_name string, payload binary, "
         "metadata binary, expected_version string"
     )
-    enriched = enrich_requests(
-        spark.createDataFrame(reqs, schema), store.config
-    ).select(
-        "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-        "event_id", "partition_key", "partition_id", "timestamp_ns",
-        "payload", "metadata", "reject_reason",
-    ).localCheckpoint(eager=True)
+    requests = spark.createDataFrame(reqs, schema)
     token = "allrej-0"
     head_before = store._read_state().commit
-    res = store._apply_batch(enriched, batch_token=token)
+    res = store._apply_batch(requests, batch_token=token)
     assert res.where("accepted").count() == 0 and res.count() == 2
     state = store._read_state()
     assert token in state.batch_tokens  # empty manifest carried it
     assert state.commit == head_before + 1
     assert store.events().count() == 0  # ...but added no events
     # replay: fast skip, no recompute
-    assert store._apply_batch(enriched, batch_token=token).count() == 0
+    assert store._apply_batch(requests, batch_token=token).count() == 0
 
 
 def test_dead_letter_orphans_hidden_and_pruned(store, spark, tmp_path):
@@ -1176,18 +1160,10 @@ def test_checkpoint_reset_recipe_prune_retired_dlq_first(
 
     # Advance the new incarnation past the orphan's id — deterministic
     # stand-in for its next committed micro-batch.
-    from sierradb_spark.streaming.ingest import enrich_requests
-
-    cols = [
-        "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-        "event_id", "partition_key", "partition_id", "timestamp_ns",
-        "payload", "metadata", "reject_reason",
-    ]
-    enriched = enrich_requests(
+    store._apply_batch(
         spark.createDataFrame([("ok-2", "Evt", b"p", b"", "any")], schema),
-        store.config,
-    ).select(*cols)
-    store._apply_batch(enriched, batch_token=f"{key}-1")
+        batch_token=f"{key}-1",
+    )
     assert f"{key}-1" in store._read_state().batch_tokens
 
     # Demonstrate the window the recipe closes: had the orphan (id 1)
@@ -1214,7 +1190,6 @@ def test_evicted_token_letters_survive_by_monotone_rule(
     read as committed: batch ids are monotone per query key, so an id
     at-or-below the key's newest committed id proves commitment."""
     from sierradb_spark.streaming.ingest import (
-        enrich_requests,
         prune_dead_letters,
         read_dead_letters,
     )
@@ -1223,20 +1198,13 @@ def test_evicted_token_letters_survive_by_monotone_rule(
         "stream_id string, event_name string, payload binary, "
         "metadata binary, expected_version string"
     )
-    enriched = enrich_requests(
-        spark.createDataFrame([("s-1", "Evt", b"p", b"", "any")], schema),
-        store.config,
-    ).select(
-        "arrival", "txn_id", "stream_id", "event_name", "expected_version",
-        "event_id", "partition_key", "partition_id", "timestamp_ns",
-        "payload", "metadata", "reject_reason",
-    )
+    requests = spark.createDataFrame([("s-1", "Evt", b"p", b"", "any")], schema)
     # Commit batches 3 and 7 of query key "qk"; simulate eviction by
     # never committing "qk-5" — but 5 < 7, so the monotone rule proves
     # a batch=5 letters dir committed. An id ABOVE the max (qk-9) is an
     # orphan.
-    store._apply_batch(enriched, batch_token="qk-3")
-    store._apply_batch(enriched, batch_token="qk-7")
+    store._apply_batch(requests, batch_token="qk-3")
+    store._apply_batch(requests, batch_token="qk-7")
     dlq = str(tmp_path / "dlq")
     letters = spark.createDataFrame(
         [("bad", b"x", "reason")],
