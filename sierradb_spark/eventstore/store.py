@@ -84,11 +84,22 @@ Scale notes (100 TB):
   ``maxFilesPerTrigger`` (docs/SCALE.md has the measured batch-size
   curve). Tiny state (watermarks, manifests) lives driver-side with
   zero Spark jobs to read it.
+- Compaction seals, it does not rewrite the store (the reference's
+  segment rollover, writer_thread_pool.rs:697-790): per partition it
+  merges the delta files appended since the last compaction into one
+  sorted segment with the appends' writer, on the driver, and carries
+  every other segment untouched; a size-tiered rule (``_FAN_IN``,
+  ``_SEAL_BYTES``) merges segments of one tier so their count stays
+  bounded. Its cost follows the delta, not the store, and one merge
+  holds at most the delta or ``_FAN_IN`` unsealed segments of one
+  partition.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 import os
 import secrets
 import shutil
@@ -98,12 +109,13 @@ from dataclasses import dataclass
 from functools import cached_property
 from typing import Callable, Iterable, Iterator, Literal, Optional, Sequence
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sierradb_spark import ids
@@ -180,8 +192,26 @@ _ARROW_TYPES = {
     "error": pa.string(),
 }
 _RESULT_ARROW = pa.schema([(c, _ARROW_TYPES[c]) for c in _RESULT_COLS])
+# The columns of an events file: the hive directory carries partition_id.
+_FILE_ARROW = _EVENT_ARROW.remove(_EVENT_ARROW.get_field_index("partition_id"))
 _PARQUET = ds.ParquetFileFormat()
 _LOCAL_FS = pafs.LocalFileSystem()
+# Rows per parquet row group of every events file: stream scans skip
+# row groups by their stats, so a sealed segment holds many of them.
+_ROW_GROUP_ROWS = 64 * 1024
+# Segment policy of compact() (size-tiered, by file bytes): a segment is
+# in tier ``floor(log_FAN_IN(bytes / _TIER_BYTES))`` (tier 0 below
+# FAN_IN × _TIER_BYTES). A partition merges the _FAN_IN newest
+# segments of a tier once it holds that many, so every event is
+# rewritten O(log_FAN_IN(_SEAL_BYTES / _TIER_BYTES)) times; a segment of
+# _SEAL_BYTES or more is sealed and never rewritten, which caps one
+# merge's input at _FAN_IN × _SEAL_BYTES.
+_FAN_IN = 4
+_TIER_BYTES = 16 * 1024
+_SEAL_BYTES = 64 * 1024 * 1024
+# Files compaction and delete_streams write; every other events file is
+# an append's delta file.
+_SEGMENT_PREFIXES = ("compact-", "delete-")
 
 
 @dataclass
@@ -329,6 +359,114 @@ def _latest_heads(rows: pa.Table) -> pa.Table:
             ]
         )
         .rename_columns(_HEADS_ARROW.names)
+    )
+
+
+def _zorder_key(stream_id: pa.ChunkedArray, sequence: pa.ChunkedArray) -> np.ndarray:
+    """16+16-bit Morton interleave of (the first 16 bits of the md5 of
+    ``stream_id``, ``sequence`` scaled over its own min..max to 16 bits):
+    the z-order cluster key of :meth:`EventStore.compact`.
+
+    Sorting a segment by ONE read pattern's key gives that pattern
+    row-group skipping and leaves the other scanning every row group
+    (a stream sort spreads every sequence range over ~all row groups).
+    The z-curve keeps BOTH dimensions locally clustered: a narrow range
+    on either key intersects a bounded fraction of row groups (the
+    reference keeps per-segment indexes for all three read patterns,
+    SURVEY §2.4; parquet stats + this sort order are the columnar
+    equivalent). Each distinct stream is hashed once; the scaling is
+    float64 division truncated, as Spark's ``seq * 65535 / max`` cast to
+    long computes it."""
+    streams = pc.dictionary_encode(stream_id.combine_chunks())
+    s16 = np.array(
+        [
+            int.from_bytes(hashlib.md5(s.encode()).digest()[:2], "big")
+            for s in streams.dictionary.to_pylist()
+        ],
+        dtype=np.int64,
+    )[streams.indices.to_numpy()]
+    seq = sequence.to_numpy()
+    seq = seq - seq.min()
+    q16 = ((seq * 65535).astype(np.float64) / max(int(seq.max()), 1)).astype(np.int64)
+    z = np.zeros(len(seq), np.int64)
+    for i in range(16):
+        z |= ((s16 >> i) & 1) << (2 * i + 1) | ((q16 >> i) & 1) << (2 * i)
+    return z
+
+
+def _write_events_file(
+    rows: pa.Table, path: str, order: Literal["stream", "zorder"] = "stream"
+) -> None:
+    """Write one partition's events (``_FILE_ARROW`` columns) to
+    ``path``: the one events-file writer, of appends and compaction.
+
+    ``order="stream"`` sorts by (stream_id, stream_version), so
+    row-group stats make stream scans skip (the reference's per-segment
+    stream index, SURVEY §2.4 X2); ``"zorder"`` sorts by
+    :func:`_zorder_key`."""
+    if order == "zorder":
+        z = _zorder_key(rows["stream_id"], rows["partition_sequence"])
+        rows = rows.take(np.lexsort((rows["partition_sequence"].to_numpy(), z)))
+    else:
+        rows = rows.sort_by([("stream_id", "ascending"), ("stream_version", "ascending")])
+    pq.write_table(
+        rows,
+        path,
+        row_group_size=_ROW_GROUP_ROWS,
+        # Without the Arrow schema blob and dictionary pages a
+        # one-event file is no larger than Spark's writer makes it;
+        # min/max stats only for the columns reads filter on.
+        store_schema=False,
+        use_dictionary=False,
+        write_statistics=_STATS_COLS,
+    )
+
+
+def _plan_merges(files: Sequence[tuple[str, int]]) -> tuple[list[str], list[list[str]]]:
+    """Compaction's plan for one partition's events files ``(rel,
+    bytes)``, in manifest order (oldest first): the files carried
+    untouched and the groups of files each merged into one new segment.
+
+    The delta files (every file not named ``compact-*`` / ``delete-*``)
+    always form one new segment. Then, while some size tier holds
+    ``_FAN_IN`` unsealed segments (the new one counted at its inputs'
+    bytes), its ``_FAN_IN`` newest merge into one, lowest tier first; a
+    merge can fill the tier above, so merges cascade. Sealed segments
+    (``_SEAL_BYTES`` or more) are always carried."""
+    # (files, bytes, new): segments, then the delta as one new segment.
+    live: list[tuple[list[str], int, bool]] = []
+    delta: list[str] = []
+    delta_bytes = 0
+    for rel, size in files:
+        if os.path.basename(rel).startswith(_SEGMENT_PREFIXES):
+            live.append(([rel], size, False))
+        else:
+            delta.append(rel)
+            delta_bytes += size
+    if delta:
+        live.append((delta, delta_bytes, True))
+
+    def tier(size: int) -> int:
+        return int(math.log(max(size, _TIER_BYTES) / _TIER_BYTES, _FAN_IN))
+
+    while True:
+        tiers: dict[int, list[int]] = {}
+        for i, (_, size, _) in enumerate(live):
+            if size < _SEAL_BYTES:
+                tiers.setdefault(tier(size), []).append(i)
+        full = [t for t, members in tiers.items() if len(members) >= _FAN_IN]
+        if not full:
+            break
+        merge = tiers[min(full)][-_FAN_IN:]
+        merged = (
+            [rel for i in merge for rel in live[i][0]],
+            sum(live[i][1] for i in merge),
+            True,
+        )
+        live = [e for i, e in enumerate(live) if i not in merge] + [merged]
+    return (
+        [files[0] for files, _, new in live if not new],
+        [files for files, _, new in live if new],
     )
 
 
@@ -1102,10 +1240,8 @@ class EventStore:
     def _commit_rows(
         self, result: pa.Table, state: _State, batch_token: str | None = None
     ) -> None:
-        """Stage the accepted events of ``result`` with pyarrow, one file
-        per partition sorted by (stream_id, stream_version) so row-group
-        stats make stream scans skip (replaces the reference's
-        per-segment stream index, SURVEY §2.4 X2), then publish them
+        """Stage the accepted events of ``result``, one file per
+        partition (:func:`_write_events_file`), then publish them
         (:meth:`_publish`)."""
         token = secrets.token_hex(8)
         acc = result.filter(result["accepted"])
@@ -1124,17 +1260,11 @@ class EventStore:
         for pid in pc.unique(events["partition_id"]).to_pylist():
             part_dir = os.path.join(self.staging_path, token, f"partition_id={pid}")
             os.makedirs(part_dir)
-            pq.write_table(
-                events.filter(pc.equal(events["partition_id"], pid))
-                .sort_by([("stream_id", "ascending"), ("stream_version", "ascending")])
-                .drop_columns(["partition_id"]),
+            _write_events_file(
+                events.filter(pc.equal(events["partition_id"], pid)).drop_columns(
+                    ["partition_id"]
+                ),
                 os.path.join(part_dir, "part-0.parquet"),
-                # Without the Arrow schema blob and dictionary pages a
-                # one-event file is no larger than Spark's writer makes
-                # it; min/max stats only for the columns reads filter on.
-                store_schema=False,
-                use_dictionary=False,
-                write_statistics=_STATS_COLS,
             )
         self._publish(state, token, _latest_heads(events), batch_token)
 
@@ -1595,63 +1725,37 @@ class EventStore:
             else:
                 hi = rows[-1][key] - 1
 
-    @staticmethod
-    def _zorder_col() -> "F.Column":
-        """16+16-bit Morton interleave of (md5-hash of stream_id,
-        partition-scaled sequence) — the multi-dimensional cluster key.
-
-        Sorting compacted files by ONE read pattern's key gives that
-        pattern row-group skipping and leaves the other scanning every
-        row group of the rewritten file (a compacted partition is one
-        file, so EPSCAN cost would regress from O(range) to
-        O(partition) under a pure stream sort). The z-curve keeps BOTH
-        dimensions locally clustered: a narrow range on either key
-        intersects a bounded fraction of row groups (the reference
-        keeps per-segment indexes for all three read patterns,
-        SURVEY §2.4; parquet stats + this sort order are the columnar
-        equivalent). Pure Column bit algebra — whole-stage codegen.
-        """
-        s16 = F.conv(F.substring(F.md5(F.col("stream_id")), 1, 4), 16, 10).cast(
-            "long"
-        )
-        mx = F.max("partition_sequence").over(
-            Window.partitionBy("partition_id")
-        )
-        q16 = (
-            F.col("partition_sequence") * 65535 / F.greatest(mx, F.lit(1))
-        ).cast("long")
-        z = F.lit(0).cast("long")
-        for i in range(16):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(s16, i).bitwiseAND(1), 2 * i + 1)
-            ).bitwiseOR(
-                F.shiftleft(F.shiftright(q16, i).bitwiseAND(1), 2 * i)
-            )
-        return z
-
     def compact(
         self,
-        target_files_per_partition: int = 1,
         retain_seconds: float = 0.0,
         order: Literal["stream", "zorder"] = "stream",
     ) -> None:
-        """Segment-rollover/OPTIMIZE analog (W8; writer_thread_pool.rs:697-790).
+        """Seal each partition's new files into a segment (W8; the
+        reference seals a segment at a size limit and never rewrites it,
+        writer_thread_pool.rs:697-790), on the driver with no Spark job.
 
-        Streaming ingest leaves one small file per partition per
-        micro-batch; compaction rewrites each hive partition into
-        ``target_files_per_partition`` files sorted by (stream_id,
-        stream_version), folds the heads log into one file, publishes a
-        ``base`` manifest (supersedes the chain), and sweeps superseded
-        + orphaned files. On Delta this is OPTIMIZE + ZORDER +
-        checkpoint + VACUUM.
+        Appends leave one small delta file per partition per commit.
+        For each partition with delta files, compaction merges them into
+        one segment (:func:`_write_events_file`, the appends' writer);
+        ``compact-*`` and ``delete-*`` segments are carried into the new
+        base manifest untouched, except that a partition whose size tier
+        fills up merges that tier's newest segments, and a sealed one is
+        never rewritten (:func:`_plan_merges`). It then folds the heads
+        log into one file, publishes a ``base`` manifest (supersedes the
+        chain) and sweeps superseded and orphaned files. On Delta this
+        is OPTIMIZE of the new files + checkpoint + VACUUM.
 
-        ``order``: ``"stream"`` (default) sorts rewritten files by
+        Cost: O(delta + the tier merges due), never O(store); the driver
+        holds one merge's rows at a time, one partition after another —
+        at most the delta, or ``_FAN_IN`` segments below the seal size.
+
+        ``order``: ``"stream"`` (default) sorts written segments by
         (stream_id, stream_version) — optimal ESCAN row-group skipping;
         ``"zorder"`` sorts by a Morton interleave of the stream hash and
-        the scaled sequence (see :meth:`_zorder_col`), trading a little
-        ESCAN locality for EPSCAN/sequence-replay row-group skipping on
-        the same file — pick it when subscriptions/partition replays
-        dominate the read mix.
+        the scaled sequence (:func:`_zorder_key`), trading a little
+        ESCAN locality for EPSCAN/sequence-replay row-group skipping —
+        pick it when subscriptions/partition replays dominate the read
+        mix.
 
         Reader safety: superseded *manifests* are removed first, so
         ``commits()`` never lists a snapshot whose files are gone even
@@ -1668,33 +1772,36 @@ class EventStore:
             return
         token = secrets.token_hex(8)
         staging = os.path.join(self.staging_path, token)
-        repartitioned = self.events().repartition(
-            target_files_per_partition * self.config.num_partitions,
-            "partition_id",
-        )
-        if order == "zorder":
-            # Lead with the partition column: the dynamic-partition
-            # writer requires rows clustered by partition_id and will
-            # insert its OWN sort (discarding ours) unless our ordering
-            # already starts with it. The z-key is projected away after
-            # the sort; a projection adds no exchange, so the order
-            # survives to the writer.
-            sorted_df = (
-                repartitioned.withColumn("__z", self._zorder_col())
-                .sortWithinPartitions("partition_id", "__z")
-                .drop("__z")
+        carried: list[str] = []
+        for pid, rels in state.files_by_partition.items():
+            keep, merges = _plan_merges(
+                [(rel, os.path.getsize(os.path.join(self.events_path, rel))) for rel in rels]
             )
-        else:
-            sorted_df = repartitioned.sortWithinPartitions(
-                "partition_id", "stream_id", "stream_version"
-            )
-        (
-            sorted_df.write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(staging)
-        )
+            carried += keep
+            for i, group in enumerate(merges):
+                part_dir = os.path.join(staging, f"partition_id={pid}")
+                os.makedirs(part_dir, exist_ok=True)
+                _write_events_file(
+                    self._read_events_files(group),
+                    os.path.join(part_dir, f"part-{i}.parquet"),
+                    order,
+                )
         added = self._place_staged(staging, f"compact-{token}")
-        self._publish_base(state, token, added, self._fold_heads(state), retain_seconds)
+        self._publish_base(
+            state, token, carried + added, self._fold_heads(state), retain_seconds
+        )
+
+    def _read_events_files(self, rels: Sequence[str]) -> pa.Table:
+        """All rows of the events files ``rels`` as ``_FILE_ARROW``, read
+        as one pyarrow dataset over their memoized fragments
+        (:meth:`_fragment`): pyarrow-written files and Spark-written ones
+        (INT96 timestamps) alike."""
+        return ds.FileSystemDataset(
+            [self._fragment(rel) for rel in rels],
+            schema=_FILE_ARROW,
+            format=_PARQUET,
+            filesystem=_LOCAL_FS,
+        ).to_table()
 
     def _publish_base(
         self,

@@ -2,9 +2,8 @@
 
 Re-implements the ExpectedVersion / CurrentVersion / VersionGap truth
 table of the reference protocol crate
-(``crates/sierradb-protocol/src/lib.rs:14-186``) both as pure Python
-(driver-side validation, model-based tests) and as a Column expression
-(batch validation of many appends in one shuffle-free pass).
+(``crates/sierradb-protocol/src/lib.rs:14-186``) in pure Python: the
+driver-side validation of every append, and the model-based tests.
 
 Truth table (ExpectedVersion x CurrentVersion -> gap):
 
@@ -21,11 +20,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Literal, Optional, Union
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-# --- Pure-Python model --------------------------------------------------------
 
 ANY = "any"
 EXISTS = "exists"
@@ -89,40 +83,3 @@ def next_version(current: CurrentVersion) -> int:
     """CurrentVersion::next — lib.rs:124-129."""
     return 0 if current is None else current + 1
 
-
-# --- Column-expression variant ------------------------------------------------
-
-
-def gap_ok_col(expected: Column, current: Column) -> Column:
-    """Vectorized `gap_from(...).ok` over a batch of appends.
-
-    ``expected``: STRING column, 'any'|'exists'|'empty'|'<N>'.
-    ``current``:  LONG column, NULL = stream doesn't exist.
-    Used by the ingest path to split conflicting appends from valid ones
-    in one JVM-side pass — no per-row Python.
-    """
-    exact = F.when(expected.rlike("^[0-9]+$"), expected.cast("long"))
-    return (
-        F.when(expected == ANY, F.lit(True))
-        .when(expected == EXISTS, current.isNotNull())
-        .when(expected == EMPTY, current.isNull())
-        # current.isNotNull() first: FALSE AND NULL = FALSE, so the
-        # result is a real boolean even when the stream doesn't exist
-        # (exact == NULL alone would propagate NULL).
-        .otherwise(exact.isNotNull() & current.isNotNull() & (exact == current))
-    )
-
-
-def gap_kind_col(expected: Column, current: Column) -> Column:
-    """Vectorized gap *kind* ('none'|'ahead'|'behind'|'incompatible')
-    mirroring lib.rs:47-72, for conflict reporting."""
-    exact = F.when(expected.rlike("^[0-9]+$"), expected.cast("long"))
-    return (
-        F.when(expected == ANY, F.lit("none"))
-        .when(expected == EXISTS, F.when(current.isNull(), "incompatible").otherwise("none"))
-        .when(expected == EMPTY, F.when(current.isNull(), "none").otherwise("ahead"))
-        .when(current.isNull(), F.lit("behind"))
-        .when(exact == current, F.lit("none"))
-        .when(exact > current, F.lit("behind"))
-        .otherwise(F.lit("ahead"))
-    )

@@ -16,10 +16,6 @@ import os
 
 import pytest
 
-# r12 slow tier (pytest.ini): crash-window / kill-point durability soaks —
-# deselected from the driver's default verify run, kept in the
-# builder's full gate.
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from sierradb_spark.config import EngineConfig

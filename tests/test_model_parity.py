@@ -186,7 +186,6 @@ _SEEDS = [
 ]
 
 
-@pytest.mark.slow  # r12 slow tier: seeded command-sequence fuzz (~75 s)
 @pytest.mark.parametrize("seed", _SEEDS)
 def test_randomized_command_sequence(spark, tmp_path, seed):
     rng = random.Random(seed)

@@ -13,10 +13,6 @@ import os
 
 import pytest
 
-# r12 slow tier (pytest.ini): multi-stream delete + compaction integration sweeps —
-# deselected from the driver's default verify run, kept in the
-# builder's full gate.
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from sierradb_spark.config import EngineConfig

@@ -14,10 +14,6 @@ import random
 
 import pytest
 
-# r12 slow tier (pytest.ini): chaos writers/sinks, subscription soak matrices, compaction sweeps —
-# deselected from the driver's default verify run, kept in the
-# builder's full gate.
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from sierradb_spark.config import EngineConfig

@@ -6,10 +6,6 @@ import os
 
 import pytest
 
-# r12 slow tier (pytest.ini): object-store promote crash windows, multi-batch corpus folds —
-# deselected from the driver's default verify run, kept in the
-# builder's full gate.
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from sierradb_spark.streaming.corpus import DOCS_SCHEMA, StreamingCorpusDedup
