@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sierradb_spark.registry import Registry, load, spread
-from sierradb_spark.functions.memo import pending_guard, register_memo
+from sierradb_spark.functions.memo import register_memo
 from sierradb_spark.functions.text2 import _SQL_WORDS, _toks
 
 REG = Registry()
@@ -53,11 +53,11 @@ _BPE_TOP_WORDS = 300
 # learned ONCE and persisted; the encoded vocabulary is a materialized
 # table keyed by word). The learn loop's output is a driver-side list
 # — no executor-held blocks — but it registers through functions.memo
-# anyway so the lifecycle hooks (clear/invalidate/loss-listener) treat
-# every cached artifact uniformly. bpe_learn_merges deliberately
-# BYPASSES the read path of _MERGES_MEMO: it is this family's recorded
-# iterative benchmark and must keep measuring the real learn loop —
-# it still writes the memo so the encode consumer starts warm.
+# anyway so clear/invalidate treat every cached artifact uniformly.
+# bpe_learn_merges deliberately BYPASSES the read path of _MERGES_MEMO:
+# it is this family's recorded iterative benchmark and must keep
+# measuring the real learn loop — it still writes the memo so the
+# encode consumer starts warm.
 _MERGES_MEMO = register_memo("bpe.merges")
 _ENC_VOCAB_MEMO = register_memo("bpe.encoded_vocab")
 
@@ -329,7 +329,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@pending_guard(_ENC_VOCAB_MEMO)
 def _encoded_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, syms): every distinct corpus word with the learned merges
     applied, memoized per (session, sf_dir) behind an eager checkpoint
@@ -365,7 +364,6 @@ def _encoded_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enc
 
 
-@pending_guard(_MERGES_MEMO)
 def _learn_merges(
     spark: SparkSession, sf_dir: str, use_memo: bool = True
 ) -> list[tuple[int, str, str, int]]:
@@ -379,13 +377,6 @@ def _learn_merges(
         got = _MERGES_MEMO.get(key)
         if got is not None:
             return got
-    else:
-        # The benchmark path skips the read but still refreshes the
-        # memo at the end — register the build-start snapshot so that
-        # insert stays subject to the invalidation-overlap guard
-        # (without this the bypass insert carries no snapshot and
-        # would cache a pre-mutation learn unguarded; r11 review).
-        _MERGES_MEMO.begin(key)
     d = load(spark, sf_dir, "documents")
     wfreq = (
         d.select(F.explode(_toks()).alias("word"))

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from sierradb_spark.registry import Registry, load
 from sierradb_spark.functions.memo import (
-    pending_guard,
     register_memo,
     release_checkpoint,
 )
@@ -55,8 +54,8 @@ _LR_TRAIN_MEMO = register_memo("classifier.lr_train")
 class _LRTrain:
     """Memo value for one trained model: moments row, weights, and the
     standardized-feature checkpoint. Exposes the checkpoint DataFrame's
-    ``sparkSession``/``_jdf`` so the memo lifecycle (build-time executor
-    stamps, block release on eviction) sees the localCheckpoint blocks
+    ``sparkSession``/``_jdf`` so the memo (the lost-block check on a
+    hit, block release on eviction) sees the localCheckpoint blocks
     through the wrapper."""
 
     __slots__ = ("mo", "w", "ft")
@@ -215,7 +214,6 @@ def quality_lr_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@pending_guard(_LR_TRAIN_MEMO)
 def _train(spark: SparkSession, sf_dir: str):
     """Run the GD loop; returns (moments row, weights tuple, the
     standardized feature DataFrame for downstream scoring). Memoized

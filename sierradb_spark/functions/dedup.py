@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sierradb_spark.functions.memo import pending_guard, register_memo
+from sierradb_spark.functions.memo import register_memo
 from sierradb_spark.registry import Registry, _shuffle_width, load
 
 REG = Registry()
@@ -378,7 +378,6 @@ def ngram_jaccard_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SHINGLE_SETS_MEMO = register_memo("dedup.shingle_sets")
 
 
-@pending_guard(_SHINGLE_SETS_MEMO)
 def _shingle_sets_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, shingle_set, ns), materialized behind an eager
     checkpoint: both self-join sides and the post-join Jaccard
@@ -422,7 +421,6 @@ _JACCARD_PAIRS_MEMO = register_memo("dedup.jaccard_pairs")
 _JACCARD_BASE_MIN = 0.19995
 
 
-@pending_guard(_JACCARD_PAIRS_MEMO)
 def _jaccard_pairs_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jac_raw): source-blocked pairs with RAW jaccard
     >= ``_JACCARD_BASE_MIN``, materialized once per (session, sf_dir)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sierradb_spark.functions.memo import pending_guard, register_memo
+from sierradb_spark.functions.memo import register_memo
 from sierradb_spark.functions.dedup import (
     _SQL_SHINGLES,
     _SQL_TOKS,
@@ -155,13 +155,12 @@ def wide_bands_for(
 # production path at 100 TB would persist anyway (the streaming corpus
 # dedup already does, via its band index). Keyed by applicationId so a
 # fresh session (fresh JVM state) rebuilds cleanly. Lifecycle
-# (immutable-corpus assumption, executor-loss caveat, clear/invalidate
-# hooks) lives in sierradb_spark.functions.memo.
+# (immutable-corpus assumption, the lost-block check on a hit,
+# clear/invalidate hooks) lives in sierradb_spark.functions.memo.
 _BANDS_MEMO = register_memo("dedup_wide.bands")
 _CAND_MEMO = register_memo("dedup_wide.candidates")
 
 
-@pending_guard(_BANDS_MEMO)
 def _wide_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band digests of the testdata documents table (registry form),
     memoized per (session, sf_dir) — see _BANDS_MEMO."""
@@ -184,7 +183,6 @@ def _wide_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-@pending_guard(_CAND_MEMO)
 def _wide_candidates_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The candidate-pair set, pinned behind a checkpoint and memoized —
     the shared input of the recall audit, the verified-pairs verifier,
@@ -195,7 +193,7 @@ def _wide_candidates_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _CAND_MEMO.get(key)
     if df is None:
         df = minhash_wide_candidates(spark, sf_dir).localCheckpoint(
-            eager=False
+            eager=True
         )
         _CAND_MEMO[key] = df
     return df
@@ -306,7 +304,6 @@ def wide_candidate_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WIDE_LABELS_MEMO = register_memo("dedup_wide.wide_labels")
 
 
-@pending_guard(_WIDE_LABELS_MEMO)
 def wide_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) connected components of the candidate graph — the
     Spark twin of the ``comp`` oracle CTE. The LPA fixpoint is
@@ -478,7 +475,6 @@ _SQL_SIMHASH64 = f"""
 _SIMHASH64_MEMO = register_memo("dedup_wide.simhash64")
 
 
-@pending_guard(_SIMHASH64_MEMO)
 def _simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash64): 64-bit simhash as a 16-char hex string.
 

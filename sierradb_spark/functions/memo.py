@@ -1,643 +1,160 @@
-"""Session-scoped plan memos: central registry + lifecycle hooks.
+"""Session-scoped plan memos: one registry, one hit check.
 
-Several exact-baseline audit passes (the 64-hash MinHash signature
-pass, the O(n²) cosine pair scan, the shingle-set relation, their
-downstream fixpoints) are shared by many registry queries over the
-SAME immutable corpus. Each family pins its pass once per
-``(applicationId, sf_dir)`` behind a ``localCheckpoint`` — the
-engine-level analogue of the materialized signature index the
-production path persists on disk (``streaming/corpus.py``).
+Audit passes shared by many registry queries (the MinHash signature
+pass, the O(n²) cosine pair scan, their fixpoints) are pinned once per
+``(applicationId, sf_dir)`` behind an eager ``localCheckpoint``, the
+engine-level analogue of the index ``streaming/corpus.py`` persists.
 
-The memos assume:
-
-1. **Immutable inputs.** A memo key is ``(applicationId, sf_dir)``;
-   nothing watches the files. If you regenerate or mutate the data
-   under an ``sf_dir`` inside a live session, call
-   :func:`invalidate_sf_dir` (or :func:`clear_session_memos`) first —
-   otherwise consumers silently serve the pre-mutation pass.
-2. **Stable executors.** ``localCheckpoint`` blocks are NOT
-   fault-tolerant: on a multi-executor cluster, losing an executor
-   permanently breaks every plan that references its blocks. Fine in
-   local mode and for bounded bench/audit sessions. On a cluster the
-   escape hatch is automatic: ``get_spark`` installs
-   :class:`ExecutorLossListener` for non-local masters, which on
-   ``onExecutorRemoved`` drops exactly the entries whose build-time
-   executor stamp contains the removed id (entries built while that
-   executor was absent cannot reference its blocks and stay warm —
-   what keeps memos useful under dynamic allocation), so the next
-   consumer rebuilds from the source tables instead of failing. The
-   manual :func:`clear_session_memos` remains for sessions built
-   outside the factory; persisting the pass to a real table is the
-   production posture (see docs/SCALE.md).
-
-Every memo dict in the package is created through :func:`register_memo`
-so the lifecycle hooks cover new families automatically — a family
-added with a bare module-level ``{}`` would escape the hooks, which is
-why ``tests/test_dedup_wide.py`` asserts the registered-family names.
+1. **Inputs are immutable per ``sf_dir``.** Nothing watches the files.
+   After mutating an ``sf_dir`` in a live session, call
+   :func:`invalidate_sf_dir` with no build of that ``sf_dir`` in
+   flight: a racing build reads a mix of old and new files.
+2. **A hit checks its own blocks.** Checkpoint blocks die with their
+   executor, so :meth:`_MemoDict.get` asks the block-manager master,
+   in one call, whether every block of the entry still has a location.
+   If one has none, it drops the entry, logs one ``sierradb_spark``
+   line and returns a miss, so the builder rebuilds, under every master
+   alike. A lazy pin has no blocks before its first action, so every
+   pin is eager.
 """
 
 from __future__ import annotations
 
-import re
+import logging
 import threading
-from collections import deque
 
-# One lock for every memo mutation: _MemoDict inserts run on the main
-# thread while ExecutorLossListener.onExecutorRemoved runs on the py4j
-# callback thread and iterates/deletes across families — without the
-# lock a removal racing an insert could raise "dictionary changed size
-# during iteration" inside the handler and silently lose the
-# invalidation. RLock because invalidate_* holds it while __delitem__
-# re-enters.
+from py4j.protocol import Py4JError
+
+_LOG = logging.getLogger("sierradb_spark")
+
+# One lock for every memo mutation; re-entrant because a dropping
+# ``get`` and ``_drop`` hold it while ``__delitem__`` takes it.
 _LOCK = threading.RLock()
 
-# Bumped (under _LOCK) by every invalidation path — executor removal,
-# sf_dir invalidation, full clear. ``_MemoDict.get`` snapshots it on a
-# miss (= build start) and ``__setitem__`` re-checks it at insert time:
-# a removal whose listener event was processed BEFORE the insert would
-# otherwise never be matched against the new entry's stamp, permanently
-# caching a plan that references dead localCheckpoint blocks. (Same
-# guard keeps a build that raced a manual ``invalidate_sf_dir`` from
-# resurrecting a pre-mutation pass.)
-_REMOVAL_EPOCH = 0
 
-# The invalidation events behind the epoch bumps, so the insert-time
-# guard can be SCOPED to the key instead of refusing on any movement
-# (r11, ADVICE): under dynamic allocation a long build would otherwise
-# never cache while routine events tick the global counter. Entries are
-# ``(epoch, kind, detail)`` with kind in {"executor", "sf_dir",
-# "clear"}. An ``sf_dir`` event can only affect in-flight builds of
-# that sf_dir (keys are ``(applicationId, sf_dir)`` by convention);
-# ``executor`` and ``clear`` conservatively affect every in-flight
-# build — an executor that joined and died entirely inside the build
-# window is invisible to both the pre- and post-build live-set
-# snapshots, yet blocks materialized mid-window could have lived on it,
-# so there is no sound per-key narrowing for removals. The deque is
-# bounded; a build older than the oldest retained event degrades to the
-# conservative refusal.
-_EVENTS: deque = deque(maxlen=4096)
+def _checkpoint_rdds(value) -> list:
+    """The JVM RDDs behind the ``LogicalRDD`` leaves of ``value``'s
+    analyzed plan: the localCheckpoint RDDs a pinned DataFrame reads.
+    Empty for values without a ``_jdf`` (the learned BPE merge list)."""
+    jdf = getattr(value, "_jdf", None)
+    if jdf is None:
+        return []
+    seq = jdf.queryExecution().analyzed().collectLeaves()
+    leaves = [seq.apply(i) for i in range(seq.size())]
+    return [x.rdd() for x in leaves if x.getClass().getSimpleName() == "LogicalRDD"]
 
 
-def _record_event(kind: str, detail: str | None) -> None:
-    # caller holds _LOCK and has already bumped _REMOVAL_EPOCH
-    _EVENTS.append((_REMOVAL_EPOCH, kind, detail))
-
-
-def _overlap_can_affect(start_epoch: int, key) -> bool:
-    """Could any invalidation in ``(start_epoch, now]`` affect a build
-    of ``key``? Conservative on log truncation and non-standard keys."""
-    window = [e for e in _EVENTS if e[0] > start_epoch]
-    if len(window) != _REMOVAL_EPOCH - start_epoch:
-        return True  # events evicted from the bounded log: assume hit
-    sf_dir = key[1] if isinstance(key, tuple) and len(key) >= 2 else None
-    if sf_dir is None:
-        return bool(window)
-    return any(
-        kind != "sf_dir" or detail == sf_dir for _, kind, detail in window
-    )
-
-# "local" / "local[...]" only. "local-cluster[...]" runs REAL separate
-# executor JVMs whose loss kills localCheckpoint blocks, so it must
-# take the cluster path (real stamps + the loss listener), not the
-# driver-only shortcut.
-_LOCAL_MASTER = re.compile(r"local(\[|$)")
-
-
-def _live_ids_from_sc(sc) -> frozenset[str] | None:
-    if _LOCAL_MASTER.match(sc.master):
-        # the sole executor IS the driver; getExecutorIds() would
-        # return empty (and log a scheduler warning) here
-        return frozenset({"driver"})
-    seq = sc._jsc.sc().getExecutorIds()  # Scala Seq via py4j
-    return frozenset(str(seq.apply(i)) for i in range(seq.size()))
-
-
-def _live_executor_ids(df) -> frozenset[str] | None:
-    """Executor ids currently alive in ``df``'s SparkContext, or None
-    if introspection fails (e.g. a mocked session). Used to stamp memo
-    entries at build time: a localCheckpoint's blocks can only live on
-    executors that existed when it materialized, so a LATER-joining
-    executor's removal (routine under dynamic allocation) cannot have
-    killed them."""
-    try:
-        return _live_ids_from_sc(df.sparkSession.sparkContext)
-    except Exception:
+def _block_ids(value):
+    """``(block-manager master, RDDBlockId[], Nil)`` for ``value``'s
+    checkpoint blocks, prepared once at insert so a hit costs one
+    ``getLocations`` call; None when the value holds no blocks."""
+    rdds = _checkpoint_rdds(value)
+    if not rdds:
         return None
-
-
-def _active_live_ids() -> frozenset[str] | None:
-    """Live executor ids via the thread's active session — the
-    pre-build half of an entry's stamp, taken at ``get``-miss time
-    (``_MemoDict.get`` has no DataFrame to introspect yet)."""
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return None
-        return _live_ids_from_sc(spark.sparkContext)
-    except Exception:
-        return None
-
-
-def _release_blocks(value) -> None:
-    """Best-effort: free a dropped entry's localCheckpoint blocks NOW
-    instead of waiting for Python GC + the ContextCleaner (in a
-    long-lived session cycling many (app, sf_dir) keys, dead blocks
-    otherwise linger in executor storage indefinitely). A plain
-    ``df.unpersist()`` is a no-op here — the blocks belong to the
-    internal RDD behind the checkpointed plan's LogicalRDD, not to a
-    CacheManager entry — so go through the analyzed plan (verified to
-    empty ``getRDDStorageInfo`` for both eager and lazy
-    localCheckpoints). Non-DataFrame values and non-checkpoint plans
-    fall through harmlessly. After this, the dropped DataFrame is
-    unrecoverable (truncated lineage) — which is the point: consumers
-    must rebuild from source, never resurrect the dropped pass."""
-    try:
-        value._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    sc = value.sparkSession.sparkContext
+    storage = sc._jvm.org.apache.spark.storage
+    blocks = [(r.id(), i) for r in rdds for i in range(r.getNumPartitions())]
+    ids = sc._gateway.new_array(storage.BlockId, len(blocks))
+    block_id = storage.RDDBlockId  # one class lookup, not one per block
+    for k, (rdd_id, i) in enumerate(blocks):
+        ids[k] = block_id(rdd_id, i)
+    nil = getattr(getattr(sc._jvm.scala.collection.immutable, "Nil$"), "MODULE$")
+    return sc._jsc.sc().env().blockManager().master(), ids, nil
 
 
 def release_checkpoint(df) -> None:
-    """Public form of :func:`_release_blocks` for TRANSIENT staging
-    checkpoints — builder-internal barriers (e.g. the materialized
-    shingle/digest arrays behind the banded-LSH passes) whose blocks
-    are dead as soon as the derived memoized relation has materialized.
-    Releasing them deterministically keeps rebuild churn and streaming
-    micro-batch loops storage-flat instead of GC-paced. Only call once
-    every consumer of the staging plan has materialized; the DataFrame
-    is unrecoverable afterwards."""
-    _release_blocks(df)
+    """Free ``df``'s localCheckpoint blocks now, not at Python GC. A
+    plain ``df.unpersist()`` is a no-op: the blocks belong to the RDD
+    behind the plan's ``LogicalRDD``. Used on dropped memo entries and
+    on builder-internal staging checkpoints once every consumer has
+    materialized. Best-effort; ``df`` is unrecoverable afterwards."""
+    try:
+        for rdd in _checkpoint_rdds(df):
+            rdd.unpersist(False)
+    except Py4JError:  # e.g. the session is already stopped
+        pass
 
 
 class _MemoDict(dict):
-    """A memo family: ``(applicationId, sf_dir) -> DataFrame`` with the
-    live-executor set stamped per entry at insertion time (kept in a
-    side table so consumers keep the plain-dict interface). The stamp
-    lets :func:`invalidate_executor` drop exactly the entries whose
-    blocks the removed executor could hold, instead of nuking every
-    memo on every routine dynamic-allocation removal."""
+    """One memo family: ``(applicationId, sf_dir) -> value``. ``get``
+    is the hit check; every drop releases the entry's blocks."""
 
-    def __init__(self) -> None:
+    def __init__(self, name: str) -> None:
         super().__init__()
-        self.built_on: dict = {}
-        # (key, thread id) -> (epoch at build start, live executor ids
-        # at build start): the build-start snapshot backing the two
-        # race guards in __setitem__. Every builder follows get-miss ->
-        # build -> insert ON ONE THREAD, so the miss IS build start and
-        # the thread id scopes the snapshot to ITS build: a hit-path
-        # ``fail`` (the pending_guard finally) can never strip a
-        # DIFFERENT thread's in-flight snapshot, which would let that
-        # build's insert sail past the invalidation guard (r11 review:
-        # hit on T1 -> key deleted by an invalidation -> miss + build
-        # on T2 -> T1's finally used to pop T2's snapshot).
-        self._pending: dict = {}
-
-    def begin(self, key) -> None:
-        """Register the build-start snapshot WITHOUT the read: for
-        builders that deliberately bypass the memo read path (e.g. the
-        BPE learn loop's ``use_memo=False`` benchmark mode) but still
-        refresh the entry — without this, their insert would carry no
-        snapshot and dodge the invalidation-overlap guard entirely."""
-        with _LOCK:
-            self._pending[(key, threading.get_ident())] = (
-                _REMOVAL_EPOCH,
-                _active_live_ids(),
-            )
+        self.name = name
+        self._blocks: dict = {}  # key -> _block_ids(value)
 
     def get(self, key, default=None):
         with _LOCK:
-            if super().__contains__(key):
-                return super().__getitem__(key)
-            self._pending[(key, threading.get_ident())] = (
-                _REMOVAL_EPOCH,
-                _active_live_ids(),
-            )
-            return default
+            value = super().get(key, default)
+            blocks = self._blocks.get(key)
+            if blocks is None:  # a miss, or a value that holds no blocks
+                return value
+            master, ids, nil = blocks
+            locs = master.getLocations(ids)
+            if not locs.contains(nil):
+                return value
+            lost = sum(locs.apply(i).isEmpty() for i in range(locs.size()))
+            del self[key]
+        _LOG.warning(
+            "memo %s %s dropped: %d of %d checkpoint blocks lost; rebuilding",
+            self.name, key, lost, len(ids),
+        )
+        return default
 
     def __setitem__(self, key, value) -> None:
+        blocks = _block_ids(value)
         with _LOCK:
-            pend = self._pending.pop((key, threading.get_ident()), None)
-            if (
-                pend is not None
-                and pend[0] != _REMOVAL_EPOCH
-                and _overlap_can_affect(pend[0], key)
-            ):
-                # An invalidation that could touch THIS key (executor
-                # removal, this sf_dir's mutation, full clear)
-                # overlapped the build window. The new value may
-                # reference blocks that died mid-build — or be a pass
-                # over pre-mutation data — and the invalidation that
-                # would have dropped it already ran. Refuse to cache;
-                # the caller still gets its DataFrame (one-shot), the
-                # next consumer rebuilds. Invalidations provably scoped
-                # to OTHER sf_dirs fall through and cache normally
-                # (r11: keeps long builds cacheable in churny sessions
-                # cycling unrelated corpora).
-                import warnings
-
-                warnings.warn(
-                    f"memo insert for {key} skipped: an invalidation "
-                    "overlapped the build (entry would dodge it)",
-                    stacklevel=2,
-                )
-                return
             old = super().get(key)
             super().__setitem__(key, value)
-            self.built_on[key] = self._stamp(value, pend)
-            if old is not None and old is not value:
-                _release_blocks(old)
-
-    @staticmethod
-    def _stamp(value, pend) -> frozenset[str] | None:
-        """Union of pre-build (get-miss snapshot) and post-build live
-        executor sets: blocks can only live on executors alive during
-        materialization, but an executor removed right after
-        materialization is already absent from the post-build snapshot
-        while its removal event is still in flight on the async bus —
-        only the pre-build half keeps the later invalidate_executor
-        call matching. Driver-side values (no sparkSession — e.g. the
-        learned BPE merge list) hold no executor blocks at all and get
-        an empty stamp: they survive every removal, and sf_dir/clear
-        invalidation still covers them. None (introspection failed) =
-        conservatively invalidated on every removal."""
-        if not hasattr(value, "sparkSession"):
-            return frozenset()
-        post = _live_executor_ids(value)
-        pre = pend[1] if pend is not None else None
-        if post is None or pre is None:
-            return None
-        return pre | post
-
-    def fail(self, key) -> None:
-        """Drop THIS THREAD's build-start snapshot for ``key``: the
-        build was abandoned (builder raised, or a cache gate refused
-        the insert), so the snapshot must not outlive the window —
-        ``_pending`` holds exactly the in-flight builds, not a residue
-        of every failed one (r11, VERDICT item 4). Idempotent; a
-        successful insert already consumed it. Thread-scoped on
-        purpose: a hit-path caller's pop must never strip a concurrent
-        build's snapshot (see ``_pending``'s comment)."""
-        with _LOCK:
-            self._pending.pop((key, threading.get_ident()), None)
+            self._blocks[key] = blocks
+        if old is not None and old is not value:
+            release_checkpoint(old)
 
     def __delitem__(self, key) -> None:
         with _LOCK:
-            value = super().get(key)
-            super().__delitem__(key)
-            self.built_on.pop(key, None)
-            _release_blocks(value)
-
-    def clear(self) -> None:
-        with _LOCK:
-            values = list(super().values())
-            super().clear()
-            self.built_on.clear()
-            # _pending is NOT cleared: in-flight builds must still hit
-            # the epoch guard at insert time, not sneak in stampless.
-            for v in values:
-                _release_blocks(v)
+            value = super().pop(key)
+            self._blocks.pop(key, None)
+        release_checkpoint(value)
 
 
 _FAMILIES: dict[str, _MemoDict] = {}
 
 
 def register_memo(name: str) -> dict:
-    """Create and register one memo family (a ``(applicationId,
-    sf_dir) -> DataFrame`` dict). Called at module import time; the
-    returned dict is the module's memo store."""
+    """Create and register one memo family. Called at module import
+    time; the returned dict is the module's memo store."""
     if name in _FAMILIES:
         raise ValueError(f"duplicate memo family {name}")
-    _FAMILIES[name] = _MemoDict()
+    _FAMILIES[name] = _MemoDict(name)
     return _FAMILIES[name]
 
 
-def pending_guard(memo: _MemoDict):
-    """Decorator for builder functions with the ``(spark, sf_dir, ...)``
-    signature (every memo family's builder): whatever the call does —
-    hit, miss + insert, miss + raising builder, or a gate-refused
-    insert — no build-start snapshot for the call's key survives the
-    call, keeping ``_pending`` == in-flight builds (r11, VERDICT item
-    4; pre-r11 a builder that raised between the get-miss and the
-    insert left its snapshot in ``_pending`` forever). The ``finally``
-    pop is a no-op on hits and after normal inserts (``__setitem__``
-    already consumed the snapshot). Safe concurrently because both the
-    pop and the snapshot are THREAD-scoped ((key, thread id) entries):
-    a hit-path pop on one thread can never strip another thread's live
-    build snapshot, whatever interleaving of hits, misses, and
-    invalidation-driven deletes led there."""
-
-    def deco(fn):
-        import functools
-
-        @functools.wraps(fn)
-        def wrapper(spark, sf_dir, *args, **kwargs):
-            key = (spark.sparkContext.applicationId, sf_dir)
-            try:
-                return fn(spark, sf_dir, *args, **kwargs)
-            finally:
-                memo.fail(key)
-
-        return wrapper
-
-    return deco
-
-
 def memo_families() -> dict[str, int]:
-    """Registered family name -> number of live (session, sf_dir)
-    entries. Introspection for tests and capacity audits."""
+    """Registered family name -> number of live entries."""
     with _LOCK:
         return {name: len(d) for name, d in _FAMILIES.items()}
 
 
-def clear_session_memos() -> dict[str, int]:
-    """Drop EVERY memoized pass in the session. Returns the number of
-    entries cleared per family.
-
-    Use after mutating data under a memoized ``sf_dir``, after a
-    recovered executor loss (localCheckpoint blocks died with it), or
-    to release the pinned blocks in a long-lived session. The next
-    consumer of each family rebuilds from the source tables — correct,
-    just cold."""
-    global _REMOVAL_EPOCH
+def _drop(stale) -> dict[str, int]:
     with _LOCK:
-        _REMOVAL_EPOCH += 1
-        _record_event("clear", None)
-        cleared = {name: len(d) for name, d in _FAMILIES.items() if d}
-        for d in _FAMILIES.values():
-            d.clear()
-        return cleared
+        dropped = {}
+        for name, d in _FAMILIES.items():
+            keys = [k for k in d if stale(k)]
+            for k in keys:
+                del d[k]
+            if keys:
+                dropped[name] = len(keys)
+        return dropped
+
+
+def clear_session_memos() -> dict[str, int]:
+    """Drop every memo entry and release its blocks. Returns the number
+    of entries cleared per family."""
+    return _drop(lambda k: True)
 
 
 def invalidate_sf_dir(sf_dir: str) -> int:
-    """Drop memo entries for one ``sf_dir`` across all families (every
-    session key), keeping other corpora warm. Returns entries dropped."""
-    global _REMOVAL_EPOCH
-    with _LOCK:
-        _REMOVAL_EPOCH += 1
-        _record_event("sf_dir", sf_dir)
-        dropped = 0
-        for d in _FAMILIES.values():
-            stale = [k for k in d if k[1] == sf_dir]
-            for k in stale:
-                del d[k]
-            dropped += len(stale)
-        return dropped
-
-
-def invalidate_executor(executor_id: str) -> dict[str, int]:
-    """Drop the memo entries whose localCheckpoint blocks MAY have
-    lived on ``executor_id``: those whose build-time executor stamp
-    contains the id, plus any entry without a stamp (introspection
-    failed at build — conservatively assume affected). An entry built
-    while the executor was NOT alive cannot reference its blocks and
-    stays warm — which is what keeps memos useful under dynamic
-    allocation, where idle executors are removed routinely. Returns
-    entries dropped per family."""
-    global _REMOVAL_EPOCH
-    with _LOCK:
-        _REMOVAL_EPOCH += 1
-        _record_event("executor", str(executor_id))
-        dropped: dict[str, int] = {}
-        ex = str(executor_id)
-        for name, d in _FAMILIES.items():
-            stale = [
-                k
-                for k in d
-                if (s := d.built_on.get(k)) is None or ex in s
-            ]
-            for k in stale:
-                del d[k]
-            if stale:
-                dropped[name] = len(stale)
-        return dropped
-
-
-class ExecutorLossListener:
-    """Driver-side SparkListener proxy that invalidates session memos
-    when an executor is removed — the assumption-2 escape hatch above
-    made automatic. A ``localCheckpoint`` block dies with its executor,
-    so a memoized plan built while that executor was alive may now
-    reference dead blocks; the listener drops exactly those entries
-    (build-time executor stamp, see :class:`_MemoDict`) so routine
-    dynamic-allocation removals of later-joined executors leave
-    unaffected memos warm. The next consumer of a dropped entry
-    rebuilds from the source tables.
-
-    py4j proxies can only *implement* interfaces, not extend classes,
-    so this implements the full ``SparkListenerInterface`` with a
-    ``__getattr__`` no-op catch-all for every callback other than
-    ``onExecutorRemoved``. Each event on the (async) listener bus costs
-    one py4j round-trip — why :func:`install_executor_loss_listener`
-    is wired up only where executor loss is possible (non-local
-    masters; in ``local[*]`` the sole executor IS the session)."""
-
-    def __init__(self) -> None:
-        self.removals: list[str] = []
-        self.cleared_total = 0
-        # (exec_id, repr(exception)) for handler failures — a LOST
-        # invalidation is the exact silent failure this listener exists
-        # to prevent, so it must at least be observable (r11, ADVICE).
-        self.errors: list[tuple[str, str]] = []
-        # Set by uninstall_executor_loss_listener as the unconditional
-        # Python-side deactivation; the JVM-side removeSparkListener is
-        # exact too (the registered Java proxy is kept, see
-        # install_executor_loss_listener), but keeping the flag makes
-        # the semantics hold even if the reflective removal path fails.
-        self.detached = False
-
-    def onExecutorRemoved(self, event) -> None:
-        # Runs on the py4j callback thread; an escaping exception would
-        # silently lose the invalidation (and spam the Java-side
-        # logs), so the whole body is guarded — and the guard itself
-        # must not swallow a lost invalidation invisibly (r11): the
-        # except branch records the failure and degrades to the blunt
-        # full clear, correctness over warmth.
-        exec_id = "?"
-        try:
-            if self.detached:
-                return
-            try:
-                exec_id = event.executorId()
-            except Exception:
-                pass
-            self.removals.append(exec_id)
-            # Targeted: only entries whose build-time executor stamp
-            # contains the removed id (or that have no stamp) can
-            # reference its blocks; memos built after a
-            # dynamic-allocation executor idled out stay warm. An
-            # unknown id ("?") degrades to the stampless-entry rule
-            # plus everything stamped — i.e. full clear — via
-            # invalidate_executor's conservative matching.
-            if exec_id == "?":
-                cleared = clear_session_memos()
-            else:
-                cleared = invalidate_executor(exec_id)
-            self.cleared_total += sum(cleared.values())
-            if cleared:
-                # Own guard: the invalidation above already SUCCEEDED,
-                # so an escalated warning (warnings-as-errors, common
-                # in downstream CI) must not fall through to the outer
-                # except — that branch would misread it as a lost
-                # invalidation and wipe every family (r11 review).
-                try:
-                    import warnings
-
-                    warnings.warn(
-                        f"executor {exec_id} removed; cleared session "
-                        f"memos {cleared} (localCheckpoint blocks may "
-                        "have died with it — consumers rebuild cold)",
-                        stacklevel=1,
-                    )
-                except Exception:
-                    pass
-        except Exception as exc:  # noqa: BLE001
-            # The targeted invalidation may have been LOST mid-way.
-            # Record it, then fall back to dropping everything — stale
-            # entries referencing dead blocks are worse than a cold
-            # cache. Each step individually guarded: this runs on the
-            # callback thread and must never raise into py4j.
-            try:
-                self.errors.append((str(exec_id), repr(exc)))
-            except Exception:
-                pass
-            try:
-                self.cleared_total += sum(clear_session_memos().values())
-            except Exception:
-                pass
-            try:
-                import warnings
-
-                warnings.warn(
-                    f"executor-removal handler failed for {exec_id} "
-                    f"({exc!r}); fell back to clearing ALL session "
-                    "memos",
-                    stacklevel=1,
-                )
-            except Exception:
-                pass
-
-    def __getattr__(self, name: str):
-        if name.startswith("on"):
-            return lambda *a, **k: None
-        raise AttributeError(name)
-
-    class Java:
-        implements = ["org.apache.spark.scheduler.SparkListenerInterface"]
-
-
-# applicationId -> installed listener (idempotence + test introspection)
-_LISTENERS: dict[str, ExecutorLossListener] = {}
-# applicationId -> zero-arg JVM-side remover for the EXACT registered
-# Java proxy (see _register_keeping_proxy); absent when registration
-# fell back to the direct path (then uninstall is detached-flag only).
-_REMOVERS: dict = {}
-
-
-def _register_keeping_proxy(sc, listener):
-    """Register ``listener`` on the bus such that the EXACT Java proxy
-    can later be handed back to ``removeSparkListener``. Returns a
-    zero-arg remover.
-
-    Plain ``addSparkListener(listener)`` is a one-way door: py4j mints
-    a FRESH Java proxy per gateway crossing (``PythonProxyPool.put``
-    has no identity dedup), and the ListenerBus removes by reference
-    equality — so a later ``removeSparkListener(listener)`` compares a
-    brand-new proxy against the registered one and silently no-ops,
-    leaking one py4j round-trip per bus event for the session's
-    remainder. Fix: cross ONCE into a JVM-side holder (the ArrayList
-    keeps the proxy as a Java reference), then add/remove through
-    ``java.lang.reflect.Method.invoke`` with ``holder.toArray()`` as
-    the argument array — the proxy never crosses back to Python (py4j
-    would re-materialize the original Python object), so both calls see
-    the same Java object and reference equality holds. Verified live:
-    ``listenerBus().listeners()`` count returns to baseline after the
-    reflective remove, and re-posted events stop arriving."""
-    gw = sc._gateway
-    jvm = gw.jvm
-    jsc = sc._jsc.sc()
-    holder = jvm.java.util.ArrayList()
-    holder.add(listener)  # the single Python->Java crossing
-    iface = jvm.java.lang.Class.forName(
-        "org.apache.spark.scheduler.SparkListenerInterface"
-    )
-    sig = gw.new_array(jvm.java.lang.Class, 1)
-    sig[0] = iface
-    cls = jsc.getClass()
-    m_add = cls.getMethod("addSparkListener", sig)
-    m_rem = cls.getMethod("removeSparkListener", sig)
-    m_add.invoke(jsc, holder.toArray())
-
-    def remove() -> None:
-        m_rem.invoke(jsc, holder.toArray())
-
-    return remove
-
-
-def install_executor_loss_listener(spark) -> ExecutorLossListener | None:
-    """Register an :class:`ExecutorLossListener` on ``spark``'s
-    listener bus (idempotent per application). Returns the live
-    listener, or ``None`` if the py4j callback server could not be
-    started (the manual :func:`clear_session_memos` posture remains).
-
-    Registration goes through :func:`_register_keeping_proxy` so
-    :func:`uninstall_executor_loss_listener` can remove the exact Java
-    proxy from the bus; if that path fails (exotic py4j environment),
-    it degrades to the direct ``addSparkListener`` and uninstall
-    becomes detached-flag-only.
-
-    Called automatically by :func:`sierradb_spark.session.get_spark`
-    for non-local masters; local sessions can opt in explicitly (tests
-    do, via a simulated ``SparkListenerExecutorRemoved`` post)."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _LISTENERS:
-        return _LISTENERS[app_id]
-    try:
-        from pyspark.java_gateway import ensure_callback_server_started
-
-        sc = spark.sparkContext
-        ensure_callback_server_started(sc._gateway)
-        listener = ExecutorLossListener()
-        try:
-            remover = _register_keeping_proxy(sc, listener)
-        except Exception:
-            remover = None
-            sc._jsc.sc().addSparkListener(listener)
-    except Exception:
-        return None
-    _LISTENERS[app_id] = listener
-    if remover is not None:
-        _REMOVERS[app_id] = remover
-    return listener
-
-
-def uninstall_executor_loss_listener(spark) -> bool:
-    """Deactivate and deregister the application's listener. True if
-    one was installed.
-
-    The Python side is deactivated unconditionally via the listener's
-    ``detached`` flag. The JVM side is removed for real: registration
-    kept the exact Java proxy (see :func:`_register_keeping_proxy`), so
-    ``removeSparkListener`` reference-matches and the bus stops calling
-    back into Python entirely — no leaked per-event py4j round-trip.
-    Only if registration had fallen back to the direct path (no kept
-    proxy) does uninstall degrade to detached-flag-only, where each bus
-    event still crosses the gateway and returns immediately.
-    ``tests/test_dedup_wide.py`` asserts both the bus's listener count
-    returning to baseline and that memos survive a post-uninstall
-    removal event."""
-    app_id = spark.sparkContext.applicationId
-    listener = _LISTENERS.pop(app_id, None)
-    if listener is None:
-        return False
-    listener.detached = True
-    remover = _REMOVERS.pop(app_id, None)
-    try:
-        if remover is not None:
-            remover()
-        else:
-            spark.sparkContext._jsc.sc().removeSparkListener(listener)
-    except Exception:
-        pass
-    return True
+    """Drop every family's entries for one ``sf_dir``, keeping other
+    corpora warm. Returns the number of entries dropped."""
+    return sum(_drop(lambda k: k[1] == sf_dir).values())

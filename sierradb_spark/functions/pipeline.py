@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sierradb_spark.functions.memo import pending_guard, register_memo
+from sierradb_spark.functions.memo import register_memo
 from sierradb_spark.registry import Registry, load, spread
 
 REG = Registry()
@@ -256,7 +256,6 @@ _SCORED_PAIRS_MEMO = register_memo("pipeline.scored_pairs")
 _LABELS_MEMO = register_memo("pipeline.labels")
 
 
-@pending_guard(_LABELS_MEMO)
 def _near_dup_labels_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) components of the exact near-dup graph, memoized.
 
@@ -316,7 +315,6 @@ def _near_dup_labels_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-@pending_guard(_SCORED_PAIRS_MEMO)
 def _scored_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed (doc_a < doc_b) exact near-dup pairs with their RAW
     cosine — the single O(n^2) pass every exact-baseline consumer

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sierradb_spark.registry import Registry, _shuffle_width, load
-from sierradb_spark.functions.memo import pending_guard, register_memo
+from sierradb_spark.functions.memo import register_memo
 
 REG = Registry()
 
@@ -273,7 +273,6 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@pending_guard(_WINNOW_FPS_MEMO)
 def winnow_fps_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fps): the winnowed fingerprint set per document — the
     Spark twin of the ``w`` CTE in ``_SQL_WINNOW_CTES`` (change both

@@ -8,7 +8,6 @@ from the cluster manager there.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import SparkSession
 
@@ -57,17 +56,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if not re.match(r"local(\[|$)", master):
-        # Session memos pin localCheckpoint blocks, which die with their
-        # executor; on a cluster an executor loss must clear them or
-        # every memoized plan breaks on dead blocks. In local mode the
-        # sole executor IS the session, so the listener (one py4j
-        # round-trip per bus event) is pure overhead there. NOT a
-        # startswith check: "local-cluster[...]" runs real separate
-        # executor JVMs and must install the listener.
-        from sierradb_spark.functions.memo import (
-            install_executor_loss_listener,
-        )
-
-        install_executor_loss_listener(spark)
     return spark
