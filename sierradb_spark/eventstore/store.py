@@ -13,13 +13,20 @@ the commands serve (EGET / ESCAN / EPSCAN via
 :meth:`~EventStore.get_rows` / ``scan_rows`` / ``pscan_rows``, ESVER,
 EPSEQ) run on the driver with pyarrow and start no Spark job — the
 reference's reader-thread lookup (``reader_thread_pool.rs``, read path
-``database.rs:127-207``, ``read.rs:663-697,1044-1068``): they open only
+``database.rs:127-207``, ``read.rs:663-697,1044-1068``): they read only
 the target partition's manifest files (ESVER: a lookup in the heads
-fold), skip row groups by parquet stats, and keep a running top-COUNT.
-Driver memos make a read on an unchanged store re-read nothing but the
-``_commits`` listing and the row groups it needs: the resolved HEAD
-state (keyed by that listing), the heads fold (keyed by its heads files)
-and each events file's parsed footer. :meth:`get` /
+fold) and keep a running top-COUNT. Like the reference, which consults
+the open segment's live index before the closed segments' indexes
+(``LiveIndexSet``, writer_thread_pool.rs:43-54; database.rs:139-149),
+a read filters the partition's live rows in memory: the decoded rows
+of its events files below ``_TIER_BYTES`` (each EAPPEND's one-event
+delta files), each read once. Only the larger files go through a
+scanner that skips row groups by parquet stats. Driver memos make a
+read on an unchanged store re-read nothing but the ``_commits`` listing
+and the row groups it needs: the resolved HEAD state (keyed by that
+listing), the heads fold (keyed by its heads files), the live rows
+(keyed by each partition's small files) and the larger events files'
+parsed footers. :meth:`get` /
 :meth:`scan` / :meth:`pscan` stay lazy DataFrame queries with the same
 partition pruning, handed only the target partition's files
 (test_store_pruning pins this through ``inputFiles()``). Watermark
@@ -281,6 +288,48 @@ class _State:
         for rel in self.events_files:
             by_pid.setdefault(_partition_of(rel), []).append(rel)
         return {pid: tuple(rels) for pid, rels in by_pid.items()}
+
+
+@dataclass(frozen=True)
+class _LiveRows:
+    """The decoded rows (``_READ_ARROW``) of one partition's events
+    files below ``_TIER_BYTES``, in manifest order: an entry of the
+    live-rows memo (:meth:`EventStore._live_rows`)."""
+
+    files: tuple[str, ...]
+    ends: tuple[int, ...]  # ends[i]: the rows of files[: i + 1]
+    # One chunk per run; runs shrink geometrically (see ``extend``).
+    rows: pa.Table
+
+    @cached_property
+    def known(self) -> frozenset[str]:
+        return frozenset(self.files)
+
+    def prefix(self, n: int) -> pa.Table:
+        """The rows of ``files[:n]``."""
+        return self.rows.slice(0, self.ends[n - 1] if n else 0)
+
+    def extend(self, files: tuple[str, ...], tables: list[pa.Table]) -> "_LiveRows":
+        """This entry plus ``files``, whose rows are ``tables``. The
+        added rows become one run; while the run before the last is of
+        no higher binary order of size than the last, the two are
+        combined. So there are O(log rows) runs and each row is copied
+        O(log rows) times, not once per extension."""
+        ends = list(self.ends)
+        for table in tables:
+            ends.append((ends[-1] if ends else 0) + table.num_rows)
+        runs = self.rows.to_batches()
+        runs += pa.concat_tables(tables).combine_chunks().to_batches()
+        while len(runs) > 1 and (
+            runs[-2].num_rows.bit_length() <= runs[-1].num_rows.bit_length()
+        ):
+            runs[-2:] = pa.Table.from_batches(runs[-2:]).combine_chunks().to_batches()
+        return _LiveRows(
+            self.files + files, tuple(ends), pa.Table.from_batches(runs, _READ_ARROW)
+        )
+
+
+_NO_LIVE_ROWS = _LiveRows((), (), _READ_ARROW.empty_table())
 
 
 def _partition_of(rel: str) -> int:
@@ -577,11 +626,14 @@ class EventStore:
         # Driver memos, each keyed by immutable files (manifests, heads
         # files, events files) and replaced by one assignment, so a
         # racing thread can at worst recompute: the HEAD state by its
-        # ``_commits`` listing, the heads fold by its heads files, and
-        # parsed events-file footers by file.
-        self._state_memo: tuple[list[str], _State] | None = None
+        # ``_commits`` listing (raw, then sorted), the heads fold by its
+        # heads files, the parsed footers of events files of
+        # ``_TIER_BYTES`` or more by file, and the decoded rows of the
+        # smaller ones by partition (:meth:`_live_rows`).
+        self._state_memo: tuple[list[str], list[str], _State] | None = None
         self._heads_memo: tuple[tuple[str, ...], pa.Table] | None = None
         self._fragments: dict[str, ds.ParquetFileFragment] = {}
+        self._live: dict[int, _LiveRows] = {}
 
     # --- manifest log --------------------------------------------------------
 
@@ -593,12 +645,15 @@ class EventStore:
         plain-file analogue of a Delta checkpoint + JSON commits; the
         listing is O(#commits since compaction).
 
-        HEAD reads are memoized on the sorted ``_commits/*.json``
-        listing: manifests are immutable once published, so an
-        unchanged listing resolves to the memo's state, which is
-        returned without touching a manifest. A changed listing (a new
-        commit, a base manifest, a swept one) resolves the chain again
-        and drops the parsed footers of events files that left it.
+        HEAD reads are memoized on the ``_commits`` listing: manifests
+        are immutable once published, so an unchanged listing resolves
+        to the memo's state, which is returned without touching a
+        manifest. A raw listing equal to the memo's is the same set of
+        names, so it returns before any sort; another raw listing with
+        the same sorted ``*.json`` names returns the same state. A
+        changed listing (a new commit, a base manifest, a swept one)
+        resolves the chain again and drops the memoized footers and
+        rows of events files that left it.
 
         ``as_of``: resolve the snapshot at that commit number instead of
         the latest — time travel over the immutable log (files are only
@@ -607,11 +662,13 @@ class EventStore:
         VACUUM). Never memoized.
         """
         try:
-            names = sorted(
-                n for n in os.listdir(self.commits_path) if n.endswith(".json")
-            )
+            raw = os.listdir(self.commits_path)
         except FileNotFoundError:
-            names = []
+            raw = []
+        memo = self._state_memo
+        if as_of is None and memo is not None and memo[0] == raw:
+            return memo[2]
+        names = sorted(n for n in raw if n.endswith(".json"))
         if as_of is not None:
             listed = names
             head = int(listed[-1].split(".")[0]) if listed else 0
@@ -646,15 +703,20 @@ class EventStore:
                     "retain_seconds to keep older snapshots readable)"
                 )
             return self._resolve(names, as_of)
-        memo = self._state_memo
-        if memo is not None and memo[0] == names:
-            return memo[1]
+        if memo is not None and memo[1] == names:
+            self._state_memo = (raw, names, memo[2])
+            return memo[2]
         state = self._resolve(names, None)
         live = set(state.events_files)
         self._fragments = {
             rel: frag for rel, frag in self._fragments.items() if rel in live
         }
-        self._state_memo = (names, state)
+        self._live = {
+            pid: rows
+            for pid, rows in self._live.items()
+            if live.issuperset(rows.files)
+        }
+        self._state_memo = (raw, names, state)
         return state
 
     def _resolve(self, names: list[str], as_of: Optional[int]) -> _State:
@@ -1401,29 +1463,36 @@ class EventStore:
         ``filter``, ordered by ``order_key``, the first ``count`` only:
         the driver read behind EGET / ESCAN / EPSCAN, no Spark job.
 
-        One pyarrow dataset over only the partition's manifest files,
-        with an explicit schema (``_READ_ARROW``), built from memoized
-        fragments (:meth:`_fragment`) so no footer is parsed twice;
-        parquet stats skip row groups, or whole files, on ``filter``.
-        Record batches stream through a
-        running top-``count`` by the order key, so driver memory is
-        O(count + the scanner's few read-ahead batches), never
-        O(partition); an unbounded read holds only its result. A
-        partition with no watermark has no committed events: empty.
+        Only the partition's manifest files are read, in two parts. The
+        rows of its files below ``_TIER_BYTES`` (each EAPPEND's delta
+        files, small segments) come from the live-rows memo
+        (:meth:`_live_rows`) and are filtered in memory, so they cost
+        no file open per read. The larger files form one pyarrow
+        dataset with an explicit schema (``_READ_ARROW``), built from
+        memoized fragments (:meth:`_fragment`) so no footer is parsed
+        twice; parquet stats skip row groups, or whole files, on
+        ``filter``. The memo's matches and the scanned record batches
+        stream through one running top-``count`` by the order key, so
+        driver memory is O(count + the scanner's few read-ahead
+        batches) beyond the memo; an unbounded read holds only its
+        result. A partition with no watermark has no committed events:
+        empty.
         """
         if count is not None and count < 0:
             raise ValueError(f"count must be >= 0, got {count}")
         order = [(order_key, "descending" if descending else "ascending")]
         kept: list[pa.RecordBatch] = []
         if state.watermarks.get(int(pid)) is not None:
+            live, scanned = self._live_rows(state, pid)
+            kept = live.filter(filter).to_batches()
+            held = sum(batch.num_rows for batch in kept)
             dataset = ds.FileSystemDataset(
-                [self._fragment(rel) for rel in state.files_by_partition.get(pid, ())],
+                [self._fragment(rel) for rel in scanned],
                 schema=_READ_ARROW,
                 format=_PARQUET,
                 filesystem=_LOCAL_FS,
             )
-            held = 0
-            for batch in dataset.to_batches(filter=filter):
+            for batch in dataset.to_batches(filter=filter) if scanned else ():
                 kept.append(batch)
                 held += batch.num_rows
                 if count is not None and held > count:
@@ -1435,6 +1504,58 @@ class EventStore:
         return rows.add_column(
             2, "partition_id", pa.repeat(pa.scalar(pid, pa.int32()), rows.num_rows)
         )
+
+    def _live_rows(self, state: _State, pid: int) -> tuple[pa.Table, list[str]]:
+        """Partition ``pid``'s events files in ``state``, cut at
+        ``_TIER_BYTES``: the rows of the smaller ones and the paths of
+        the others, in manifest order. The analogue of the reference's
+        live index, read before the closed segments' indexes
+        (``LiveIndexSet``, writer_thread_pool.rs:43-54).
+
+        The rows come from the live-rows memo: one :class:`_LiveRows`
+        per partition. Each small file is read once: a file the memo
+        holds is small, one with a memoized footer is not, and any
+        other is sized by one stat. A state whose small files are the
+        memo's, or a prefix of them (an ``as_of`` read), is served a
+        slice of the memo; one whose small files extend the memo's
+        reads only the added files; any other rebuilds. Only a read of
+        the HEAD state stores the result, so an ``as_of`` read never
+        replaces the HEAD memo; :meth:`_read_state` drops an entry once
+        one of its files leaves the HEAD state. Events files are
+        token-named and never rewritten, so a memo entry never goes
+        stale."""
+        entry = self._live.get(pid, _NO_LIVE_ROWS)
+        small: list[str] = []
+        large: list[str] = []
+        for rel in state.files_by_partition.get(pid, ()):
+            if rel in entry.known or (
+                rel not in self._fragments
+                and os.path.getsize(os.path.join(self.events_path, rel)) < _TIER_BYTES
+            ):
+                small.append(rel)
+            else:
+                large.append(rel)
+        files = tuple(small)
+        if entry.files[: len(files)] == files:
+            return entry.prefix(len(files)), large
+        if files[: len(entry.files)] != entry.files:
+            entry = _NO_LIVE_ROWS
+        added = files[len(entry.files) :]
+        entry = entry.extend(added, self._read_rows(added))
+        head = self._state_memo
+        if head is not None and head[2] is state:
+            self._live[pid] = entry
+        return entry.rows, large
+
+    def _read_rows(self, rels: Sequence[str]) -> list[pa.Table]:
+        """The rows (``_READ_ARROW``) of each events file of ``rels``,
+        read whole with no footer memoized: the live-rows memo's reader."""
+        return [
+            _PARQUET.make_fragment(
+                os.path.abspath(os.path.join(self.events_path, rel)), _LOCAL_FS
+            ).to_table(schema=_READ_ARROW)
+            for rel in rels
+        ]
 
     def _fragment(self, rel: str) -> ds.ParquetFileFragment:
         """The parquet fragment of events file ``rel`` with its footer

@@ -67,10 +67,14 @@ def release_checkpoint(df) -> None:
     plain ``df.unpersist()`` is a no-op: the blocks belong to the RDD
     behind the plan's ``LogicalRDD``. Used on dropped memo entries and
     on builder-internal staging checkpoints once every consumer has
-    materialized. Best-effort; ``df`` is unrecoverable afterwards."""
+    materialized. Best-effort; ``df`` is unrecoverable afterwards.
+
+    Released through ``SparkContext.unpersistRDD``, the call
+    ``RDD.unpersist`` makes after it logs a "locally checkpointed ...
+    cannot be recomputed" WARN for each such RDD."""
     try:
         for rdd in _checkpoint_rdds(df):
-            rdd.unpersist(False)
+            rdd.sparkContext().unpersistRDD(rdd.id(), False)
     except Py4JError:  # e.g. the session is already stopped
         pass
 

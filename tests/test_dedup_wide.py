@@ -210,6 +210,25 @@ def test_memo_invalidation_releases_checkpoint_blocks(spark):
     assert rdd_id not in cached_ids()  # blocks freed NOW, not at GC
 
 
+def test_release_checkpoint_frees_blocks_and_persistence(spark):
+    """release_checkpoint unpersists through SparkContext.unpersistRDD
+    (RDD.unpersist logs a lineage WARN per locally checkpointed RDD):
+    every released block loses its location and the RDD leaves the
+    persistent-RDD map."""
+    from sierradb_spark.functions import memo
+
+    jsc = spark.sparkContext._jsc.sc()
+    df = spark.range(0, 10_000, 1, 4).localCheckpoint(eager=True)
+    [rdd] = memo._checkpoint_rdds(df)
+    master, ids, nil = memo._block_ids(df)
+    assert not master.getLocations(ids).contains(nil)
+    assert jsc.getPersistentRDDs().contains(rdd.id())
+    memo.release_checkpoint(df)
+    locs = master.getLocations(ids)
+    assert all(locs.apply(i).isEmpty() for i in range(locs.size()))
+    assert not jsc.getPersistentRDDs().contains(rdd.id())
+
+
 def test_memo_churn_does_not_leak_blocks(spark):
     """r10: the deterministic-release claim under REPETITION — a
     long-lived session cycling invalidate/rebuild on the same corpus

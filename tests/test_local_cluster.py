@@ -235,12 +235,16 @@ for step in range(10):
 # a final build works on whatever executors survived the churn
 assert dedup_wide._wide_bands(spark, sf).count() == 8000
 spark.stop()
+# a seed that never kills a block holder never drives a rebuild
+assert lost >= 1, (seed, kills, lost, builds)
 print("LC-FUZZ-OK seed=%d kills=%d lost=%d builds=%d" % (seed, kills, lost, builds))
 """
 
+# Both default seeds kill an executor that holds a block of the live
+# entry at least once (the scenario asserts it).
 _FUZZ_SEEDS = [
     int(s)
-    for s in os.environ.get("SPARK_GRAFT_LC_FUZZ_SEEDS", "11,17").split(",")
+    for s in os.environ.get("SPARK_GRAFT_LC_FUZZ_SEEDS", "11,1").split(",")
     if s.strip()
 ]
 
